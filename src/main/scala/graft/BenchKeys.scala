@@ -1,35 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Quiet-window per-key re-bench for MAD adjudication (BASELINE.md
   * protocol): `runMain graft.BenchKeys <sfDir> <key> [key ...]` runs each
   * named registry key 1 cold + 5 warm under the exact Bench session
-  * config and prints warm median + MAD per key. This is the second of
-  * the "two consecutive benches" the adjudication rule requires, run
-  * with nothing else on the machine — the full Bench cannot isolate a
-  * key from the 358 others' page-cache/GC wake.
+  * config ([[graft.tools.BenchSession]]) and prints warm median + MAD per
+  * key. This is the second of the "two consecutive benches" the
+  * adjudication rule requires, run with nothing else on the machine —
+  * the full Bench cannot isolate a key from the 358 others'
+  * page-cache/GC wake.
   */
 object BenchKeys {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val keys = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // ADVICE r15: registration OUTSIDE the warm-up's catch-all — a
-    // docs-only sfDir must skip only the lineitem warm-up, never silently
-    // skip table registration (which would push lazy registration work
-    // into the first timed run, or fail per-key runs confusingly)
-    try spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().count()
-    catch { case _: Throwable => }
-    Tables.registerAll(spark, sfDir)
+    val spark = tools.BenchSession.start(sfDir)
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     keys.foreach { k =>
       def once(): Double = {

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: renders every query's physical plan shape into PLANS.md —
   * shuffle count, join strategies, scan pushdown — so plan regressions are
   * diffable and the 100 TB scale review (SURVEY §7.4) has evidence.
+  * Plans are taken under the bench session config
+  * ([[graft.tools.BenchSession]]).
   *
   * Run: sbt "runMain graft.PlanAudit /root/testdata/sf0.001 PLANS.md"
   */
@@ -12,13 +12,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = tools.BenchSession.start(sfDir)
 
     val interesting = Seq(
       "CartesianProduct", "BroadcastNestedLoopJoin", "BroadcastHashJoin",

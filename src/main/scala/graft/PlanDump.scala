@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Formatted-plan snapshot tool (optimization rounds): writes
   * `<outDir>/<key>_<suffix>.txt` with `explain("formatted")` for each named
-  * registry key, under the EXACT bench session config (core count, AQE,
-  * shuffle partitions, split size) so the captured shape is the shape the
+  * registry key, under the EXACT bench session config
+  * ([[graft.tools.BenchSession]]) so the captured shape is the shape the
   * bench runs. Queries that execute imperative work when constructed
   * (index builds, fixpoint loops) run that work here too — the captured
   * plan is the returned relation's, which for those keys is the final
@@ -20,18 +18,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val keys = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.registerAll(spark, sfDir)
+    val spark = tools.BenchSession.start(sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     keys.foreach { k =>
       val df = SparkEntry.queries(k)(spark, sfDir)

@@ -1,14 +1,14 @@
 package graft.api
 
 import graft.{Queries, Tables}
-import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The library's typed entry point (VERDICT r4 #1): compose the engine's
-  * pipelines without knowing registry keys. Every method is a THIN
-  * delegate to the same function the string registry (`graft.Queries`)
-  * exposes, so facade results are bit-identical to the oracle-checked
-  * contract queries — no second implementation to drift.
+  * pipelines without knowing registry keys. Every typed member is an
+  * [[Op]] that only NAMES a registry key; calling it runs the function
+  * `graft.Queries.all` binds to that key, so facade results are the
+  * oracle-checked contract queries by construction — the registry is the
+  * one place a key is bound to a function.
   *
   * Quickstart (the README example):
   * {{{
@@ -29,9 +29,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final class Corpus(val spark: SparkSession, val dir: String) {
 
+  /** A typed facade member: registry `key` and the function `fn` that
+    * `graft.Queries.all` binds to it; `m()` runs it on this corpus. Built
+    * by `op`, which fails fast on a key missing from the registry and
+    * records the member for [[typedOps]].
+    */
+  final class Op private[Corpus] (val key: String) {
+    val fn: Queries.Q = Queries.all.getOrElse(key, throw new NoSuchElementException(key))
+    def apply(): DataFrame = fn(spark, dir)
+  }
+  private val declared = scala.collection.mutable.ListBuffer.empty[Op]
+  private[graft] def op(key: String): Op = declared.synchronized { declared += new Op(key); declared.last }
+
   /** Escape hatch: run any contract query by registry key ([[queryNames]]
-    * lists all of them — 319 as of round 11; the count tracks
-    * `graft.Queries.all`, never this doc).
+    * lists all of them; [[typedOps]] are the ones with a typed member).
     */
   def query(name: String): DataFrame = Queries.all(name)(spark, dir)
 
@@ -47,149 +58,131 @@ final class Corpus(val spark: SparkSession, val dir: String) {
     * max/avg per column) — the first query run against an unknown corpus.
     * [[profileApprox]] is the mergeable-sketch twin for the 100 TB path.
     */
-  def profile(): DataFrame = DataQuality.dqProfileTable(spark, dir)
+  val profile = op("dq_profile_table")
 
   /** HLL/quantile-sketch profile — same shape as [[profile]], one pass,
     * mergeable partials (the scale path).
     */
-  def profileApprox(): DataFrame = DataQuality.dqProfileApprox(spark, dir)
+  val profileApprox = op("dq_profile_approx")
 
   /** One-row dataset-card summary: doc/lang/source counts, char and token
     * totals, short-doc share.
     */
-  def datasetCard(): DataFrame = Workload.datasetCard(spark, dir)
+  val datasetCard = op("pipeline_dataset_card")
 
   /** The 7-stage training-corpus emit: normalize → quality gate → exact
     * dedup → train/eval split → decontaminate → per-source quota → stats.
     */
-  def trainingEmit(): DataFrame = TextAnalysis.trainingEmit(spark, dir)
+  val trainingEmit = op("pipeline_training_emit")
 
   /** Deterministic hash-based train/eval split with per-split stats. */
-  def splitTrainEval(): DataFrame = TextAnalysis.splitTrainEval(spark, dir)
+  val splitTrainEval = op("pipeline_split_train_eval")
 
   /** Fixed-SIZE eval holdout (exactly 100 docs by content-hash bottom-k)
     * with per-source attrition — the shape eval sets are actually carved.
     */
-  def evalHoldout(): DataFrame = TextAnalysis.evalHoldout(spark, dir)
+  val evalHoldout = op("pipeline_eval_holdout")
 
   /** Exact heavy hitters (items > 1/64 of the event stream) via the
     * mergeable Misra–Gries candidate pass + exact recount.
     */
-  def heavyHitters(): DataFrame = Aggregates.aggHeavyHitters(spark, dir)
+  val heavyHitters = op("agg_heavy_hitters")
 
   /** Per-group exact heavy hitters (same MG + recount, keyed). */
-  def heavyHittersGrouped(): DataFrame =
-    Aggregates.aggHeavyHittersGrouped(spark, dir)
+  val heavyHittersGrouped = op("agg_heavy_hitters_grouped")
 
   /** Sequence packing: documents onto a global token tape in 512-token
     * training windows (two-pass distributed prefix sum, no global sort).
     */
-  def packSequences(): DataFrame = TextAnalysis.packSequences(spark, dir)
+  val packSequences = op("pipeline_pack_sequences")
 
   /** Temperature-scaled (α=0.5) source mixing under a 30% epoch token
     * budget — the multilingual-sampling recipe, all-integer allocation.
     */
-  def tokenBudgetMix(): DataFrame = TextAnalysis.tokenBudgetMix(spark, dir)
+  val tokenBudgetMix = op("pipeline_token_budget_mix")
 
   /** Quality-ordered curriculum: 4 ntile phases, best first, per-phase
     * manifests (scalable two-pass global rank).
     */
-  def curriculumPhases(): DataFrame = TextAnalysis.curriculumPhases(spark, dir)
+  val curriculumPhases = op("pipeline_curriculum_phases")
 
   /** Text analysis over the documents table. */
   object text {
     /** Unicode/whitespace/case normalization (the curation first stage). */
-    def normalize(): DataFrame = TextAnalysis.normalize(spark, dir)
+    val normalize = op("text_normalize")
     /** Per-doc quality features: length, punctuation/stopword ratios,
       * repetition — the gate signals of a curation pipeline. */
-    def quality(): DataFrame = TextAnalysis.qualityScore(spark, dir)
+    val quality = op("text_quality_score")
     /** n-gram-heuristic language ID per document. */
-    def langId(): DataFrame = TextAnalysis.langId(spark, dir)
+    val langId = op("text_lang_id")
     /** Whitespace + BPE-ish regex token counts per document. */
-    def tokenCount(): DataFrame = TextAnalysis.tokenCount(spark, dir)
+    val tokenCount = op("text_token_count")
     /** Rolling-hash document fingerprints. */
-    def fingerprint(): DataFrame = TextAnalysis.fingerprint(spark, dir)
+    val fingerprint = op("text_fingerprint")
     /** Regex PII redaction (emails, phones, SSN-shaped) with audit counts. */
-    def piiRedact(): DataFrame = TextAnalysis.piiRedact(spark, dir)
+    val piiRedact = op("text_pii_redact")
     /** Fixed-size overlapping chunk split (the RAG/token-window shape). */
-    def chunkSplit(): DataFrame = TextAnalysis.chunkSplit(spark, dir)
+    val chunkSplit = op("text_chunk_split")
     /** Per-doc top TF-IDF keywords. */
-    def keywords(): DataFrame = TextAnalysis.keywordsPerDoc(spark, dir)
+    val keywords = op("text_keywords_per_doc")
     /** One distributed BPE training step: top-pair census, exact
       * leftmost-first merge, post-merge census (round 13). */
-    def bpeMergeRound(): DataFrame = TextAnalysis.bpeMergeRound(spark, dir)
+    val bpeMergeRound = op("text_bpe_merge_round")
     /** Per-language out-of-vocabulary rate vs the corpus top-1000
       * vocabulary — the tokenizer-health audit (round 14). */
-    def oovRate(): DataFrame = TextAnalysis.textOovRate(spark, dir)
+    val oovRate = op("text_oov_rate")
     /** Corpus token frequencies (the wordcount). */
-    def wordcount(): DataFrame = VectorText.textWordcount(spark, dir)
+    val wordcount = op("text_wordcount")
     /** Sparse TF-IDF cosine top-k doc pairs via inverted index. */
-    def sparseCosineTopk(): DataFrame = VectorText.sparseCosineTopk(spark, dir)
-    /** Typed facade of `text_bm25_topk` (delegates to [[graft.ops.TextAnalysis.bm25Topk]]). */
-    def bm25Topk(): DataFrame = TextAnalysis.bm25Topk(spark, dir)
-    /** Typed facade of `text_bpe_pair_stats` (delegates to [[graft.ops.TextAnalysis.bpePairStats]]). */
-    def bpePairStats(): DataFrame = TextAnalysis.bpePairStats(spark, dir)
-    /** Typed facade of `text_exact_dedup` (delegates to [[graft.ops.VectorText.textExactDedup]]). */
-    def exactDedup(): DataFrame = VectorText.textExactDedup(spark, dir)
-    /** Typed facade of `text_gopher_gates` (delegates to [[graft.ops.TextAnalysis.gopherGates]]). */
-    def gopherGates(): DataFrame = TextAnalysis.gopherGates(spark, dir)
-    /** Typed facade of `text_jaccard_pairs` (delegates to [[graft.ops.VectorText.textJaccardPairs]]). */
-    def jaccardPairs(): DataFrame = VectorText.textJaccardPairs(spark, dir)
-    /** Typed facade of `text_lang_stats` (delegates to [[graft.ops.VectorText.textLangStats]]). */
-    def langStats(): DataFrame = VectorText.textLangStats(spark, dir)
-    /** Typed facade of `text_levenshtein_pairs` (delegates to [[graft.ops.TextAnalysis.levenshteinPairs]]). */
-    def levenshteinPairs(): DataFrame = TextAnalysis.levenshteinPairs(spark, dir)
-    /** Typed facade of `text_ngram_topk` (delegates to [[graft.ops.TextAnalysis.ngramTopk]]). */
-    def ngramTopk(): DataFrame = TextAnalysis.ngramTopk(spark, dir)
-    /** Typed facade of `text_paragraph_dedup` (delegates to [[graft.ops.Dedup.paragraphDedup]]). */
-    def paragraphDedup(): DataFrame = Dedup.paragraphDedup(spark, dir)
-    /** Typed facade of `text_perplexity_proxy` (delegates to [[graft.ops.TextAnalysis.perplexityProxy]]). */
-    def perplexityProxy(): DataFrame = TextAnalysis.perplexityProxy(spark, dir)
-    /** Typed facade of `text_repetition_stats` (delegates to [[graft.ops.TextAnalysis.repetitionStats]]). */
-    def repetitionStats(): DataFrame = TextAnalysis.repetitionStats(spark, dir)
-    /** Typed facade of `text_shingle_generate` (delegates to [[graft.ops.TextAnalysis.shingleGenerate]]). */
-    def shingleGenerate(): DataFrame = TextAnalysis.shingleGenerate(spark, dir)
-    /** Typed facade of `text_source_entropy` (delegates to [[graft.ops.TextAnalysis.sourceEntropy]]). */
-    def sourceEntropy(): DataFrame = TextAnalysis.sourceEntropy(spark, dir)
-    /** Typed facade of `text_tfidf_top` (delegates to [[graft.ops.VectorText.textTfidfTop]]). */
-    def tfidfTop(): DataFrame = VectorText.textTfidfTop(spark, dir)
-    /** Typed facade of `text_token_explode` (delegates to [[graft.ops.VectorText.textTokenExplode]]). */
-    def tokenExplode(): DataFrame = VectorText.textTokenExplode(spark, dir)
-    /** Typed facade of `text_vocab_chao1` (delegates to [[graft.ops.TextAnalysis.vocabChao1]]). */
-    def vocabChao1(): DataFrame = TextAnalysis.vocabChao1(spark, dir)
-    /** Typed facade of `text_zipf_slope` (delegates to [[graft.ops.TextAnalysis.textZipfSlope]]). */
-    def zipfSlope(): DataFrame = TextAnalysis.textZipfSlope(spark, dir)
+    val sparseCosineTopk = op("text_sparse_cosine_topk")
+    val bm25Topk = op("text_bm25_topk")
+    val bpePairStats = op("text_bpe_pair_stats")
+    val exactDedup = op("text_exact_dedup")
+    val gopherGates = op("text_gopher_gates")
+    val jaccardPairs = op("text_jaccard_pairs")
+    val langStats = op("text_lang_stats")
+    val levenshteinPairs = op("text_levenshtein_pairs")
+    val ngramTopk = op("text_ngram_topk")
+    val paragraphDedup = op("text_paragraph_dedup")
+    val perplexityProxy = op("text_perplexity_proxy")
+    val repetitionStats = op("text_repetition_stats")
+    val shingleGenerate = op("text_shingle_generate")
+    val sourceEntropy = op("text_source_entropy")
+    val tfidfTop = op("text_tfidf_top")
+    val tokenExplode = op("text_token_explode")
+    val vocabChao1 = op("text_vocab_chao1")
+    val zipfSlope = op("text_zipf_slope")
     /** CCNet-style per-language head/middle/tail rarity terciles. */
-    def rarityBuckets(): DataFrame = TextAnalysis.rarityBuckets(spark, dir)
+    val rarityBuckets = op("text_rarity_buckets")
   }
 
   /** Per-doc novelty of 5-grams in ingest order (crawl-dup early warning). */
-  def noveltyFrac(): DataFrame = TextAnalysis.textNoveltyFrac(spark, dir)
+  val noveltyFrac = op("text_novelty_frac")
 
   /** Deterministic quality-weighted Bernoulli downsampling report. */
-  def qualityWeightedSample(): DataFrame = TextAnalysis.qualityWeightedSample(spark, dir)
+  val qualityWeightedSample = op("pipeline_quality_weighted_sample")
 
   /** Reproducible per-epoch shuffle manifests (pure function of epoch+id). */
-  def epochShuffle(): DataFrame = TextAnalysis.epochShuffle(spark, dir)
+  val epochShuffle = op("pipeline_epoch_shuffle")
 
   /** Per-domain KL terms vs a uniform target + capped resampling factors
     * — the corpus-mix rebalancing report (round 13). */
-  def domainMixKl(): DataFrame = TextAnalysis.domainMixKl(spark, dir)
+  val domainMixKl = op("pipeline_domain_mix_kl")
 
   /** Count-min sketch (d=4 × w=64) of the event stream with a probe-set
     * overestimate audit (round 13). */
-  def countminSketch(): DataFrame = Aggregates.aggCountminSketch(spark, dir)
+  val countminSketch = op("agg_countmin_sketch")
 
   /** Holt linear (double-exponential) smoothing of the daily revenue
     * series, dyadic α/β, cross-engine-pinned recurrence (round 13). */
-  def holtLinear(): DataFrame = Aggregates.tsHoltLinear(spark, dir)
+  val holtLinear = op("ts_holt_linear")
 
   /** Top-15 session 3-step event paths (round 13). */
-  def eventPaths(): DataFrame = Windows.winEventPaths(spark, dir)
+  val eventPaths = op("win_event_paths")
 
   /** As-of view→purchase conversion lag with exact interpolated
     * quantiles (round 13). */
-  def conversionLag(): DataFrame = Windows.winConversionLag(spark, dir)
+  val conversionLag = op("win_conversion_lag")
 
   /** RFM quintile customer segmentation (round 14). PREFER
     * [[rfmScoresScalable]]: this form ranks through three
@@ -197,307 +190,277 @@ final class Corpus(val spark: SparkSession, val dir: String) {
     * a scale-killer on a real corpus. The scalable twin is spec-pinned
     * row-identical (Round15Spec), so there is no fidelity trade-off.
     */
-  def rfmScores(): DataFrame = Windows.winRfmScores(spark, dir)
+  val rfmScores = op("win_rfm_scores")
 
   /** The F5v2 two-pass range-partitioned twin of [[rfmScores]] — same
     * segments, no single-partition global window (the 100 TB path).
     */
-  def rfmScoresScalable(): DataFrame = Windows.winRfmScoresScalable(spark, dir)
+  val rfmScoresScalable = op("win_rfm_scores_scalable")
 
   /** Cumulative lifetime value by acquisition cohort (round 14). */
-  def cohortLtv(): DataFrame = Windows.winCohortLtv(spark, dir)
+  val cohortLtv = op("win_cohort_ltv")
 
   /** KMV/theta distinct sketch with union + intersection (round 14). */
-  def thetaKmv(): DataFrame = Aggregates.aggThetaKmv(spark, dir)
+  val thetaKmv = op("agg_theta_kmv")
 
   /** Exact Mann–Whitney ROC-AUC of a score vs a binary label (round 14). */
-  def aucScore(): DataFrame = MlFeatures.mlAucScore(spark, dir)
+  val aucScore = op("ml_auc_score")
 
   /** Confusion matrix + precision/recall/F1 at five integer thresholds
     * over the score range (round 14). */
-  def prCurve(): DataFrame = MlFeatures.mlPrCurve(spark, dir)
+  val prCurve = op("ml_pr_curve")
 
   /** Decile calibration (reliability) table on the AUC fixture — two-pass
     * range-partitioned deciles, exact-integer cells.
     */
-  def calibrationBins(): DataFrame = MlFeatures.mlCalibrationBins(spark, dir)
+  val calibrationBins = op("ml_calibration_bins")
 
   /** Cumulative-gains / lift table (score-descending deciles). */
-  def liftDeciles(): DataFrame = MlFeatures.mlLiftDeciles(spark, dir)
+  val liftDeciles = op("ml_lift_deciles")
 
   /** DSIR hashed-n-gram importance weights vs the target slice (round 14). */
-  def dsirWeights(): DataFrame = TextAnalysis.dsirWeights(spark, dir)
+  val dsirWeights = op("pipeline_dsir_weights")
 
   /** Deduplication pipelines over the documents table. */
   object dedup {
     /** Exact dedup, keep first by content fingerprint. */
-    def exact(): DataFrame = Dedup.exactKeepFirst(spark, dir)
+    val exact = op("dedup_exact_keep_first")
     /** Per-doc MinHash signatures (k=4, 3-shingles, binary digests). */
-    def minhashSignatures(): DataFrame = Dedup.minhashSig(spark, dir)
+    val minhashSignatures = op("dedup_minhash_sig")
     /** LSH-banded candidate pairs verified to shingle-Jaccard ≥ 0.8. */
-    def minhashPairs(): DataFrame = Dedup.minhashPairs(spark, dir)
+    val minhashPairs = op("dedup_minhash_pairs")
     /** SimHash near-dup buckets. */
-    def simhash(): DataFrame = Dedup.simhash(spark, dir)
+    val simhash = op("dedup_simhash")
     /** Near-dup clusters: alternating-star connected components over the
       * verified pair graph — O(log² n) rounds at any diameter. */
-    def clusters(): DataFrame = Dedup.connectedComponentsStar(spark, dir)
+    val clusters = op("dedup_connected_components_v2")
     /** One canonical representative per near-dup cluster. */
-    def canonical(): DataFrame = Dedup.clusterCanonical(spark, dir)
+    val canonical = op("dedup_cluster_canonical")
     /** Embedding-cosine semantic dup clusters (mutual-kNN + star CC). */
-    def semanticClusters(): DataFrame = Dedup.semanticClusters(spark, dir)
+    val semanticClusters = op("dedup_semantic_clusters")
     /** Drop train docs sharing >50% 3-shingles with the eval set. */
-    def decontaminate(): DataFrame = Dedup.decontaminateOverlap(spark, dir)
+    val decontaminate = op("text_decontaminate_overlap")
     /** Fraction of each doc's n-grams occurring elsewhere in the corpus. */
-    def ngramCorpusFrac(): DataFrame = Dedup.ngramCorpusFrac(spark, dir)
+    val ngramCorpusFrac = op("dedup_ngram_corpus_frac")
     /** Asymmetric containment |A∩B|/|A|: top-3 corpus absorbers per
       * probe doc — catches subset near-dups Jaccard misses. */
-    def shingleContainment(): DataFrame = Dedup.shingleContainment(spark, dir)
+    val shingleContainment = op("dedup_shingle_containment")
     /** Two-tier incremental-ingest dedup behind a data-sized Bloom
       * prefilter (exact confirm — counts are filter-independent). */
-    def bloomPrefilter(): DataFrame = Dedup.bloomPrefilter(spark, dir)
+    val bloomPrefilter = op("dedup_bloom_prefilter")
     /** The 100 TB form: per-bucket Bloom filters via the mergeable
       * BloomSketch aggregate, no corpus-sized driver merge. */
-    def bloomPartitioned(): DataFrame = Dedup.bloomPartitioned(spark, dir)
+    val bloomPartitioned = op("dedup_bloom_partitioned")
     /** Banding decision table: candidates/precision/recall for every
       * (bands, rows) layout of the 4-hash MinHash. */
-    def bandTuningSweep(): DataFrame = Dedup.bandTuningSweep(spark, dir)
+    val bandTuningSweep = op("dedup_band_tuning_sweep")
     /** Benchmark decontamination at the published 13-gram standard. */
-    def decontaminate13gram(): DataFrame = Dedup.decontaminate13gram(spark, dir)
+    val decontaminate13gram = op("text_decontaminate_13gram")
     /** LSH candidates scored on BOTH modalities (shingle Jaccard +
       * embedding cosine) with agreement flags (round 13). */
-    def multiSignal(): DataFrame = Dedup.multiSignal(spark, dir)
+    val multiSignal = op("dedup_multi_signal")
     /** The dedup impact funnel: exact → paragraph-majority → verbatim-
       * window stages, removals attributed to the first catching stage,
       * per-stage token-mass retention (round 13). */
-    def funnel(): DataFrame = TextAnalysis.dedupFunnel(spark, dir)
+    val funnel = op("pipeline_dedup_funnel")
     /** 1/cluster-size soft-dedup training weights (round 13). */
-    def softWeights(): DataFrame = TextAnalysis.softdedupWeights(spark, dir)
-    /** Typed facade of `dedup_connected_components` — the v1 contract
-      * alias of [[clusters]] (identical transitive-closure semantics). */
-    def connectedComponents(): DataFrame = Dedup.connectedComponents(spark, dir)
-    /** Typed facade of `dedup_embedding_topk` (delegates to [[graft.ops.Dedup.embeddingTopk]]). */
-    def embeddingTopk(): DataFrame = Dedup.embeddingTopk(spark, dir)
-    /** Typed facade of `dedup_exact_substring` (delegates to [[graft.ops.Dedup.exactSubstring]]). */
-    def exactSubstring(): DataFrame = Dedup.exactSubstring(spark, dir)
-    /** Typed facade of `dedup_lsh_recall_eval` (delegates to [[graft.ops.Dedup.lshRecallEval]]). */
-    def lshRecallEval(): DataFrame = Dedup.lshRecallEval(spark, dir)
-    /** Typed facade of `dedup_minhash_sig_agg` — the mergeable
-      * TypedImperativeAggregate signature twin. */
-    def minhashSignaturesAgg(): DataFrame = Dedup.minhashSigAgg(spark, dir)
-    /** Typed facade of `dedup_pq_codes` (delegates to [[graft.ops.Dedup.pqCodes]]). */
-    def pqCodes(): DataFrame = Dedup.pqCodes(spark, dir)
-    /** Typed facade of `dedup_url_canonical` (delegates to [[graft.ops.Dedup.urlCanonical]]). */
-    def urlCanonical(): DataFrame = Dedup.urlCanonical(spark, dir)
+    val softWeights = op("pipeline_softdedup_weights")
+    /** The v1 contract alias of [[clusters]] (identical transitive-closure
+      * semantics). */
+    val connectedComponents = op("dedup_connected_components")
+    val embeddingTopk = op("dedup_embedding_topk")
+    val exactSubstring = op("dedup_exact_substring")
+    val lshRecallEval = op("dedup_lsh_recall_eval")
+    /** The mergeable TypedImperativeAggregate twin of [[minhashSignatures]]. */
+    val minhashSignaturesAgg = op("dedup_minhash_sig_agg")
+    val pqCodes = op("dedup_pq_codes")
+    val urlCanonical = op("dedup_url_canonical")
   }
 
   /** Similarity search over the embeddings table. */
   object vectors {
     /** Exact brute-force cosine top-k for a bounded query set — the
       * verification baseline; [[ivfTopk]] is the scale path. */
-    def knnTopk(): DataFrame = VectorText.vecKnnTopk(spark, dir)
+    val knnTopk = op("vec_knn_topk")
     /** IVF (inverted-file) ANN top-3, 10-cell coarse quantizer, nprobe=2. */
-    def ivfTopk(): DataFrame = Similarity.annIvfTopk(spark, dir)
+    val ivfTopk = op("ann_ivf_topk")
     /** Sign-LSH bucketed neighbors. */
-    def lshBuckets(): DataFrame = Similarity.annLshBucket(spark, dir)
+    val lshBuckets = op("ann_lsh_bucket")
     /** Recall@10 of the IVF index vs exact ground truth, per query. */
-    def recallAtK(): DataFrame = Similarity.annRecallAtK(spark, dir)
+    val recallAtK = op("ann_recall_at_k")
     /** Per-label centroids. */
-    def centroids(): DataFrame = VectorText.vecCentroidByLabel(spark, dir)
+    val centroids = op("vec_centroid_by_label")
     /** Int8 quantization with reconstruction error stats. */
-    def quantizeInt8(): DataFrame = VectorText.vecQuantizeInt8(spark, dir)
+    val quantizeInt8 = op("vec_quantize_int8")
     /** L2-norm sanity stats per label. */
-    def normStats(): DataFrame = VectorText.vecNormStats(spark, dir)
+    val normStats = op("vec_norm_stats")
     /** PageRank hubs of the 5-NN similarity graph (top-20). */
-    def pagerankHubs(): DataFrame = Similarity.pageRankKnn(spark, dir)
+    val pagerankHubs = op("graph_pagerank_knn")
     /** Top principal direction + Rayleigh eigenvalue (collapse check). */
-    def pcaTopDirection(): DataFrame = VectorText.vecPcaPowerIter(spark, dir)
+    val pcaTopDirection = op("vec_pca_power_iter")
     /** Spherical k-means (two Lloyd rounds, k=10): cell sizes + cohesion. */
-    def kmeansClusters(): DataFrame = Similarity.vecKmeansLloyd(spark, dir)
+    val kmeansClusters = op("vec_kmeans_lloyd")
     /** Neighbor-set Jaccard of the 5-NN graph (link-prediction score). */
-    def knnJaccard(): DataFrame = Similarity.graphKnnJaccard(spark, dir)
+    val knnJaccard = op("graph_knn_jaccard")
     /** Contrastive hard negatives: top-3 cross-label neighbors per
       * vector from the cell-pruned IVF candidate stage. */
-    def hardNegatives(): DataFrame = Similarity.vecHardNegatives(spark, dir)
+    val hardNegatives = op("vec_hard_negatives")
     /** IVF + product-quantization ANN: cell-pruned ADC scan over the
       * 4-byte packed codes, top-3 per query. */
-    def ivfPqTopk(): DataFrame = Similarity.annIvfPqTopk(spark, dir)
+    val ivfPqTopk = op("ann_ivf_pq_topk")
     /** Two-stage serving: PQ-ADC shortlist re-ranked by exact dots. */
-    def pqRerank(): DataFrame = Similarity.vecPqRerank(spark, dir)
+    val pqRerank = op("vec_pq_rerank")
     /** Graph-traversal ANN: bounded 2-hop expansion over the standing
       * kNN graph + exact re-rank (the HNSW layer-0 idiom). */
-    def graphExpandTopk(): DataFrame = Similarity.annGraphExpandTopk(spark, dir)
+    val graphExpandTopk = op("ann_graph_expand_topk")
     /** Hybrid retrieval: reciprocal-rank fusion of BM25 and dense ANN. */
-    def hybridRrf(): DataFrame = Similarity.searchHybridRrf(spark, dir)
+    val hybridRrf = op("search_hybrid_rrf")
     /** Recall-vs-dimension curve of prefix-truncated embeddings. */
-    def matryoshkaEval(): DataFrame = Similarity.vecMatryoshkaEval(spark, dir)
+    val matryoshkaEval = op("vec_matryoshka_eval")
     /** Fixpoint k-core of the full-corpus mutual-8NN graph, with a
       * convergence certificate (round 11). */
-    def kcoreFull(): DataFrame = Similarity.graphKcoreFull(spark, dir)
+    val kcoreFull = op("graph_kcore_full")
     /** kNN SELF-join: every corpus vector's top-3 neighbors with sims,
       * one scan of the standing full-corpus candidate artifact. */
-    def knnJoinFull(): DataFrame = Similarity.vecKnnJoinFull(spark, dir)
+    val knnJoinFull = op("vec_knn_join_full")
     /** Top-20 similarity clusters of the full-corpus mutual-8NN graph
       * (O(log²)-round star components). */
-    def ccFull(): DataFrame = Similarity.graphCcFull(spark, dir)
+    val ccFull = op("graph_cc_full")
     /** PageRank hubs over the full-corpus directed 8-NN graph. */
-    def pagerankFull(): DataFrame = Similarity.pageRankFull(spark, dir)
+    val pagerankFull = op("graph_pagerank_full")
     /** Recall@8 of the full-corpus candidate scheme vs exact ground
       * truth — the index ships with its measured quality. */
-    def recallFull(): DataFrame = Similarity.annRecallFull(spark, dir)
+    val recallFull = op("ann_recall_full")
     /** Semi-supervised label propagation over the full-corpus 5-NN
       * graph: two clamped majority rounds densify a 20%-held-out label
       * set (round 12). */
-    def labelPropFull(): DataFrame = Similarity.graphLabelPropFull(spark, dir)
+    val labelPropFull = op("graph_labelprop_full")
     /** Jaccard link prediction (top-15 neighbor-set overlaps) on the
       * full-corpus 5-NN graph (round 12). */
-    def jaccardFull(): DataFrame = Similarity.graphJaccardFull(spark, dir)
+    val jaccardFull = op("graph_jaccard_full")
     /** Recall@10 of the 4-byte ADC serving scan vs exact L2 ground
       * truth — the PQ index ships with its measured quality (round 12). */
-    def pqRecall(): DataFrame = Similarity.pqRecallAtK(spark, dir)
+    val pqRecall = op("pq_recall_at_k")
     /** Force-rebuild the standing vector-search index (IVF quantizer +
       * inverted lists, PQ codebooks/codes/packed words, bounded + full
       * kNN candidate relations) and emit its artifact manifest. Serving
       * methods read this store, building on first use if absent. */
-    def indexBuild(): DataFrame = IndexStore.indexBuildVecsearch(spark, dir)
+    val indexBuild = op("index_build_vecsearch")
     /** Recall@10 of the IVF index at nprobe 1/2/3 — the recall/cost
       * curve the nprobe setting is tuned from (round 12). */
-    def ivfRecallSweep(): DataFrame = Similarity.vecIvfRecallSweep(spark, dir)
+    val ivfRecallSweep = op("vec_ivf_recall_sweep")
     /** Per-cell L2 drift of the frozen base-snapshot quantizer vs a
       * fresh M-step on the current corpus — the rebuild-policy audit for
       * the incremental lifecycle (round 12). */
-    def centroidDrift(): DataFrame = Similarity.vecCentroidDrift(spark, dir)
+    val centroidDrift = op("vec_centroid_drift")
     /** INCREMENTALLY update the vector store from the base snapshot:
       * re-assign + re-encode only the delta slice against the frozen
       * quantizers, compute only the delta band of the kNN shortlist, and
       * emit the merged manifest — row-identical to a from-scratch build
       * under the frozen routing (round 12). */
-    def indexUpdate(): DataFrame = IndexStore.indexUpdateVecsearch(spark, dir)
+    val indexUpdate = op("index_update_vecsearch")
     /** The serve/update/reroute/retrain decision table over the drift
       * audit — the nightly index-maintenance policy (rounds 13–14). */
-    def indexPolicy(): DataFrame = Similarity.indexPolicyVecsearch(spark, dir)
+    val indexPolicy = op("index_policy_vecsearch")
     /** Second-routing-table ANN: candidates from BOTH the standing store
       * and a cross-axis rebucketing — the scheme that penetrates the
       * cell-capture ceiling (round 13; the indexPolicy reroute target). */
-    def multitableTopk(): DataFrame = Similarity.annMultitableTopk(spark, dir)
+    val multitableTopk = op("ann_multitable_topk")
     /** Per-query ADAPTIVE probe depth: cells probed until the candidate
       * floor is reached; recall + cost vs the fixed-nprobe grid. */
-    def probeAdaptive(): DataFrame = Similarity.vecProbeAdaptive(spark, dir)
+    val probeAdaptive = op("vec_probe_adaptive")
     /** Variance-ranked dimension pruning with the cumulative
       * variance-share curve (round 13). */
-    def dimVariancePrune(): DataFrame = VectorText.vecDimVariancePrune(spark, dir)
+    val dimVariancePrune = op("vec_dim_variance_prune")
     /** Integer-exact HITS hubs/authorities over the full-corpus mutual
       * 8-NN graph (round 13). */
-    def hitsFull(): DataFrame = Similarity.graphHitsFull(spark, dir)
+    val hitsFull = op("graph_hits_full")
     /** Seeded deterministic 3-step random walks over the mutual-8NN
       * graph — the DeepWalk/node2vec sampling primitive (round 13). */
-    def randomWalks(): DataFrame = Similarity.graphRandomWalks(spark, dir)
+    val randomWalks = op("graph_random_walks")
     /** Range (threshold) similarity search eval: exact ε-ball vs the
       * standing shortlist at the same τ (round 14). */
-    def rangeSearch(): DataFrame = Similarity.annRangeSearch(spark, dir)
+    val rangeSearch = op("ann_range_search")
     /** Resource-allocation link prediction on the mutual-8NN graph
       * (round 14). */
-    def resourceAlloc(): DataFrame = Similarity.graphResourceAlloc(spark, dir)
+    val resourceAlloc = op("graph_resource_alloc")
     /** Local clustering coefficient per node, top-20 (round 14). */
-    def clusteringCoeff(): DataFrame = Similarity.graphClusteringCoeff(spark, dir)
+    val clusteringCoeff = op("graph_clustering_coeff")
     /** Retrain churn: frozen-vs-fresh quantizer cell reassignment of the
       * current corpus (round 14). */
-    def retrainChurn(): DataFrame = Similarity.vecRetrainChurn(spark, dir)
-    /** Typed facade of `vec_cosine_pairs` (delegates to [[graft.ops.VectorText.vecCosinePairs]]). */
-    def cosinePairs(): DataFrame = VectorText.vecCosinePairs(spark, dir)
-    /** Typed facade of `vec_cosine_pairs_native` — the codegen'd DotProduct twin. */
-    def cosinePairsNative(): DataFrame = VectorText.vecCosinePairsNative(spark, dir)
-    /** Typed facade of `vec_error_metrics` (delegates to [[graft.ops.VectorText.vecErrorMetrics]]). */
-    def errorMetrics(): DataFrame = VectorText.vecErrorMetrics(spark, dir)
-    /** Typed facade of `vec_binary_hamming_topk` (delegates to [[graft.ops.VectorText.vecBinaryHammingTopk]]). */
-    def binaryHammingTopk(): DataFrame = VectorText.vecBinaryHammingTopk(spark, dir)
-    /** Typed facade of `vec_ivf_stats` (delegates to [[graft.ops.Similarity.vecIvfStats]]). */
-    def ivfStats(): DataFrame = Similarity.vecIvfStats(spark, dir)
-    /** Typed facade of `vec_pq_adc_topk` (delegates to [[graft.ops.Similarity.vecPqAdcTopk]]). */
-    def pqAdcTopk(): DataFrame = Similarity.vecPqAdcTopk(spark, dir)
-    /** Typed facade of `vec_pq_error` (delegates to [[graft.ops.Similarity.vecPqError]]). */
-    def pqError(): DataFrame = Similarity.vecPqError(spark, dir)
-    /** Typed facade of `vec_pq_residual` (delegates to [[graft.ops.Similarity.vecPqResidual]]). */
-    def pqResidual(): DataFrame = Similarity.vecPqResidual(spark, dir)
-    /** Typed facade of `graph_triangle_knn` (delegates to [[graft.ops.Similarity.graphTriangleKnn]]). */
-    def triangleKnn(): DataFrame = Similarity.graphTriangleKnn(spark, dir)
-    /** Typed facade of `graph_triangle_full` (delegates to [[graft.ops.Similarity.graphTriangleFull]]). */
-    def triangleFull(): DataFrame = Similarity.graphTriangleFull(spark, dir)
-    /** Typed facade of `graph_degree_assortativity` (delegates to [[graft.ops.Similarity.graphDegreeAssortativity]]). */
-    def degreeAssortativity(): DataFrame = Similarity.graphDegreeAssortativity(spark, dir)
-    /** Typed facade of `graph_assortativity_full` (delegates to [[graft.ops.Similarity.graphAssortativityFull]]). */
-    def assortativityFull(): DataFrame = Similarity.graphAssortativityFull(spark, dir)
-    /** Typed facade of `graph_kcore_peel` (delegates to [[graft.ops.Similarity.graphKcorePeel]]). */
-    def kcorePeel(): DataFrame = Similarity.graphKcorePeel(spark, dir)
-    /** Typed facade of `graph_label_propagation` (delegates to [[graft.ops.Similarity.graphLabelPropagation]]). */
-    def labelPropagation(): DataFrame = Similarity.graphLabelPropagation(spark, dir)
-    /** Typed facade of `graph_modularity_full` (delegates to [[graft.ops.Similarity.graphModularityFull]]). */
-    def modularityFull(): DataFrame = Similarity.graphModularityFull(spark, dir)
-    /** Typed facade of `graph_modularity_labels` (delegates to [[graft.ops.Similarity.graphModularityLabels]]). */
-    def modularityLabels(): DataFrame = Similarity.graphModularityLabels(spark, dir)
-    /** Typed facade of `graph_bfs_distance_full` (delegates to [[graft.ops.Similarity.graphBfsDistanceFull]]). */
-    def bfsDistanceFull(): DataFrame = Similarity.graphBfsDistanceFull(spark, dir)
+    val retrainChurn = op("vec_retrain_churn")
+    val cosinePairs = op("vec_cosine_pairs")
+    /** The codegen'd DotProduct twin of [[cosinePairs]]. */
+    val cosinePairsNative = op("vec_cosine_pairs_native")
+    val errorMetrics = op("vec_error_metrics")
+    val binaryHammingTopk = op("vec_binary_hamming_topk")
+    val ivfStats = op("vec_ivf_stats")
+    val pqAdcTopk = op("vec_pq_adc_topk")
+    val pqError = op("vec_pq_error")
+    val pqResidual = op("vec_pq_residual")
+    val triangleKnn = op("graph_triangle_knn")
+    val triangleFull = op("graph_triangle_full")
+    val degreeAssortativity = op("graph_degree_assortativity")
+    val assortativityFull = op("graph_assortativity_full")
+    val kcorePeel = op("graph_kcore_peel")
+    val labelPropagation = op("graph_label_propagation")
+    val modularityFull = op("graph_modularity_full")
+    val modularityLabels = op("graph_modularity_labels")
+    val bfsDistanceFull = op("graph_bfs_distance_full")
   }
 
   /** Data-quality checks. */
   object quality {
     /** Declarative rule violations (nulls, ranges, regex, uniqueness). */
-    def ruleViolations(): DataFrame = DataQuality.dqRuleViolations(spark, dir)
+    val ruleViolations = op("dq_rule_violations")
     /** MAD-based robust anomaly flags on event values. */
-    def anomalies(): DataFrame = DataQuality.dqAnomalyMad(spark, dir)
+    val anomalies = op("dq_anomaly_mad")
     /** PSI distribution drift between time slices. */
-    def distributionDrift(): DataFrame = DataQuality.dqDistributionDrift(spark, dir)
+    val distributionDrift = op("dq_distribution_drift")
     /** Orphaned-foreign-key audit across the relational tables. */
-    def referentialIntegrity(): DataFrame = DataQuality.dqReferentialIntegrity(spark, dir)
+    val referentialIntegrity = op("dq_referential_integrity")
     /** Benford first-digit screen on order totals. */
-    def benfordScreen(): DataFrame = DataQuality.dqBenfordFirstDigit(spark, dir)
+    val benfordScreen = op("dq_benford_first_digit")
     /** Trailing-7-day z-score of daily ingest volume per event type. */
-    def rollingZscore(): DataFrame = DataQuality.dqRollingZscore(spark, dir)
+    val rollingZscore = op("dq_rolling_zscore")
     /** Two-sample Kolmogorov-Smirnov drift statistic, exact-integer sup. */
-    def ksTest(): DataFrame = DataQuality.dqKsTest(spark, dir)
+    val ksTest = op("dq_ks_test")
     /** Registry-diff schema drift between the two time halves (round 13). */
-    def schemaDrift(): DataFrame = DataQuality.dqSchemaDrift(spark, dir)
-    /** Typed facade of `dq_ab_ttest` (delegates to [[graft.ops.DataQuality.dqAbTtest]]). */
-    def abTtest(): DataFrame = DataQuality.dqAbTtest(spark, dir)
-    /** Typed facade of `dq_freshness_lag` (delegates to [[graft.ops.DataQuality.dqFreshnessLag]]). */
-    def freshnessLag(): DataFrame = DataQuality.dqFreshnessLag(spark, dir)
-    /** Typed facade of `dq_incident_islands` (delegates to [[graft.ops.DataQuality.dqIncidentIslands]]). */
-    def incidentIslands(): DataFrame = DataQuality.dqIncidentIslands(spark, dir)
-    /** Typed facade of `dq_outlier_tukey` (delegates to [[graft.ops.DataQuality.dqOutlierTukey]]). */
-    def outlierTukey(): DataFrame = DataQuality.dqOutlierTukey(spark, dir)
-    /** Typed facade of `dq_pk_uniqueness` (delegates to [[graft.ops.DataQuality.dqPkUniqueness]]). */
-    def pkUniqueness(): DataFrame = DataQuality.dqPkUniqueness(spark, dir)
-    /** Typed facade of `dq_profile_drift` (delegates to [[graft.ops.DataQuality.dqProfileDrift]]). */
-    def profileDrift(): DataFrame = DataQuality.dqProfileDrift(spark, dir)
+    val schemaDrift = op("dq_schema_drift")
+    val abTtest = op("dq_ab_ttest")
+    val freshnessLag = op("dq_freshness_lag")
+    val incidentIslands = op("dq_incident_islands")
+    val outlierTukey = op("dq_outlier_tukey")
+    val pkUniqueness = op("dq_pk_uniqueness")
+    val profileDrift = op("dq_profile_drift")
   }
 
   /** Multimodal (opaque binary) columns. */
   object media {
     /** Byte-level stats over binary payloads. */
-    def binaryStats(): DataFrame = Multimodal.binaryStats(spark, dir)
+    val binaryStats = op("mm_binary_stats")
     /** mapPartitions decode pipeline (stub codec; real plumbing). */
-    def decodeFeatures(): DataFrame = Multimodal.decodeFeatures(spark, dir)
+    val decodeFeatures = op("mm_decode_features")
     /** Every-10th-frame sampling plumbing. */
-    def frameSample(): DataFrame = Multimodal.frameSample(spark, dir)
+    val frameSample = op("mm_frame_sample")
     /** Content-addressable block dedup ratio per document. */
-    def chunkDedup(): DataFrame = Multimodal.chunkDedup(spark, dir)
+    val chunkDedup = op("mm_chunk_dedup")
     /** Object-per-item blob ingestion via the binaryFile source. */
-    def ingestBinary(): DataFrame = Relational.sourceBinaryfileIngest(spark, dir)
+    val ingestBinary = op("source_binaryfile_ingest")
     /** Near-dup payload pairs from the standing media index (block-
       * SimHash signatures, banded Hamming ≤ 10). */
-    def phashPairs(): DataFrame = Multimodal.phashHamming(spark, dir)
+    val phashPairs = op("mm_phash_hamming")
     /** Near-dup payload clusters (star CC over the pair relation). */
-    def phashClusters(): DataFrame = Multimodal.phashClusters(spark, dir)
+    val phashClusters = op("mm_phash_clusters")
     /** Force-rebuild the standing media near-dup index and emit its
       * artifact manifest. */
-    def indexBuild(): DataFrame = IndexStore.indexBuildMediasig(spark, dir)
+    val indexBuild = op("index_build_mediasig")
     /** INCREMENTAL media-index maintenance: re-sign only the delta
       * slice, merge pair relations — row-identical to a full rebuild at
       * delta-sized cost (round 11). */
-    def indexUpdate(): DataFrame = IndexStore.indexUpdateMediasig(spark, dir)
-    /** Typed facade of `mm_magic_sniff` (delegates to [[graft.ops.Multimodal.magicSniff]]). */
-    def magicSniff(): DataFrame = Multimodal.magicSniff(spark, dir)
-    /** Typed facade of `mm_chunk_table` (delegates to [[graft.ops.Multimodal.chunkTable]]). */
-    def chunkTable(): DataFrame = Multimodal.chunkTable(spark, dir)
+    val indexUpdate = op("index_update_mediasig")
+    val magicSniff = op("mm_magic_sniff")
+    val chunkTable = op("mm_chunk_table")
   }
 
   /** Streaming / event-sequence analytics (the stream_* family: each a
@@ -505,82 +468,55 @@ final class Corpus(val spark: SparkSession, val dir: String) {
     * MemoryStream fixtures).
     */
   object streams {
-    /** Typed facade of `stream_tumbling_1h` (delegates to [[graft.ops.Streaming.streamTumbling1h]]). */
-    def tumbling1h(): DataFrame = Streaming.streamTumbling1h(spark, dir)
-    /** Typed facade of `stream_sliding_1h_15m` (delegates to [[graft.ops.Streaming.streamSliding1h15m]]). */
-    def sliding1h15m(): DataFrame = Streaming.streamSliding1h15m(spark, dir)
-    /** Typed facade of `stream_session_30m` (delegates to [[graft.ops.Streaming.streamSession30m]]). */
-    def session30m(): DataFrame = Streaming.streamSession30m(spark, dir)
-    /** Typed facade of `stream_session_custom` (delegates to [[graft.ops.Streaming.streamSessionCustom]]). */
-    def sessionCustom(): DataFrame = Streaming.streamSessionCustom(spark, dir)
-    /** Typed facade of `stream_dau_retention` (delegates to [[graft.ops.Streaming.streamDauRetention]]). */
-    def dauRetention(): DataFrame = Streaming.streamDauRetention(spark, dir)
-    /** Typed facade of `stream_funnel` (delegates to [[graft.ops.Streaming.streamFunnel]]). */
-    def funnel(): DataFrame = Streaming.streamFunnel(spark, dir)
-    /** Typed facade of `stream_watermark_late` (delegates to [[graft.ops.Streaming.streamWatermarkLate]]). */
-    def watermarkLate(): DataFrame = Streaming.streamWatermarkLate(spark, dir)
-    /** Typed facade of `stream_dedup_keep_first` (delegates to [[graft.ops.Streaming.streamDedupKeepFirst]]). */
-    def dedupKeepFirst(): DataFrame = Streaming.streamDedupKeepFirst(spark, dir)
-    /** Typed facade of `stream_stateful_count` (delegates to [[graft.ops.Streaming.streamStatefulCount]]). */
-    def statefulCount(): DataFrame = Streaming.streamStatefulCount(spark, dir)
-    /** Typed facade of `stream_stateful_count_v2` (delegates to [[graft.ops.Streaming.streamStatefulCountV2]]). */
-    def statefulCountV2(): DataFrame = Streaming.streamStatefulCountV2(spark, dir)
-    /** Typed facade of `stream_join_view_purchase` (delegates to [[graft.ops.Streaming.streamJoinViewPurchase]]). */
-    def joinViewPurchase(): DataFrame = Streaming.streamJoinViewPurchase(spark, dir)
-    /** Typed facade of `stream_cdc_apply` (delegates to [[graft.ops.Streaming.cdcApply]]). */
-    def cdcApply(): DataFrame = Streaming.cdcApply(spark, dir)
-    /** Typed facade of `scd2_change_intervals` (delegates to [[graft.ops.Streaming.scd2ChangeIntervals]]). */
-    def scd2ChangeIntervals(): DataFrame = Streaming.scd2ChangeIntervals(spark, dir)
+    val tumbling1h = op("stream_tumbling_1h")
+    val sliding1h15m = op("stream_sliding_1h_15m")
+    val session30m = op("stream_session_30m")
+    val sessionCustom = op("stream_session_custom")
+    val dauRetention = op("stream_dau_retention")
+    val funnel = op("stream_funnel")
+    val watermarkLate = op("stream_watermark_late")
+    val dedupKeepFirst = op("stream_dedup_keep_first")
+    val statefulCount = op("stream_stateful_count")
+    val statefulCountV2 = op("stream_stateful_count_v2")
+    val joinViewPurchase = op("stream_join_view_purchase")
+    val cdcApply = op("stream_cdc_apply")
+    val scd2ChangeIntervals = op("scd2_change_intervals")
   }
 
   /** Corpus-pipeline operations (the pipeline_* family beyond the
     * top-level composites).
     */
   object pipelines {
-    /** Typed facade of `pipeline_corpus_curation` (delegates to [[graft.ops.TextAnalysis.corpusCuration]]). */
-    def corpusCuration(): DataFrame = TextAnalysis.corpusCuration(spark, dir)
-    /** Typed facade of `pipeline_incremental_merge` (delegates to [[graft.ops.TextAnalysis.incrementalMerge]]). */
-    def incrementalMerge(): DataFrame = TextAnalysis.incrementalMerge(spark, dir)
-    /** Typed facade of `pipeline_quality_funnel` (delegates to [[graft.ops.TextAnalysis.qualityFunnel]]). */
-    def qualityFunnel(): DataFrame = TextAnalysis.qualityFunnel(spark, dir)
-    /** Typed facade of `pipeline_observe_metrics` (delegates to [[graft.ops.DataQuality.observeMetrics]]). */
-    def observeMetrics(): DataFrame = DataQuality.observeMetrics(spark, dir)
-    /** Typed facade of `pipeline_dataset_diff` (delegates to [[graft.ops.TextAnalysis.datasetDiff]]). */
-    def datasetDiff(): DataFrame = TextAnalysis.datasetDiff(spark, dir)
-    /** Typed facade of `pipeline_packing_efficiency` (delegates to [[graft.ops.TextAnalysis.packingEfficiency]]). */
-    def packingEfficiency(): DataFrame = TextAnalysis.packingEfficiency(spark, dir)
-    /** Typed facade of `pipeline_compaction_plan` (delegates to [[graft.ops.Relational.compactionPlan]]). */
-    def compactionPlan(): DataFrame = Relational.compactionPlan(spark, dir)
-    /** Typed facade of `pipeline_shard_manifest` (delegates to [[graft.ops.TextAnalysis.shardManifest]]). */
-    def shardManifest(): DataFrame = TextAnalysis.shardManifest(spark, dir)
-    /** Typed facade of `pipeline_shuffle_stripe` (delegates to [[graft.ops.TextAnalysis.shuffleStripe]]). */
-    def shuffleStripe(): DataFrame = TextAnalysis.shuffleStripe(spark, dir)
-    /** Typed facade of `pipeline_license_filter` (delegates to [[graft.ops.TextAnalysis.licenseFilter]]). */
-    def licenseFilter(): DataFrame = TextAnalysis.licenseFilter(spark, dir)
-    /** Typed facade of `pipeline_version_hash` (delegates to [[graft.ops.TextAnalysis.versionHash]]). */
-    def versionHash(): DataFrame = TextAnalysis.versionHash(spark, dir)
+    val corpusCuration = op("pipeline_corpus_curation")
+    val incrementalMerge = op("pipeline_incremental_merge")
+    val qualityFunnel = op("pipeline_quality_funnel")
+    val observeMetrics = op("pipeline_observe_metrics")
+    val datasetDiff = op("pipeline_dataset_diff")
+    val packingEfficiency = op("pipeline_packing_efficiency")
+    val compactionPlan = op("pipeline_compaction_plan")
+    val shardManifest = op("pipeline_shard_manifest")
+    val shuffleStripe = op("pipeline_shuffle_stripe")
+    val licenseFilter = op("pipeline_license_filter")
+    val versionHash = op("pipeline_version_hash")
   }
 
   /** ML feature engineering + model calibration (the ml_* transforms and
     * the param_sweep_* calibration family).
     */
   object features {
-    /** Typed facade of `ml_feature_hash` (delegates to [[graft.ops.MlFeatures.featureHash]]). */
-    def featureHash(): DataFrame = MlFeatures.featureHash(spark, dir)
-    /** Typed facade of `ml_feature_scaler_fit` (delegates to [[graft.ops.MlFeatures.featureScalerFit]]). */
-    def featureScalerFit(): DataFrame = MlFeatures.featureScalerFit(spark, dir)
-    /** Typed facade of `ml_target_encode_loo` (delegates to [[graft.ops.MlFeatures.targetEncodeLoo]]). */
-    def targetEncodeLoo(): DataFrame = MlFeatures.targetEncodeLoo(spark, dir)
+    val featureHash = op("ml_feature_hash")
+    val featureScalerFit = op("ml_feature_scaler_fit")
+    val targetEncodeLoo = op("ml_target_encode_loo")
     /** Grid-sweep calibration: broadcast param grid × corpus, argmin
       * (the D4 sweep). [[deStep]] is the evolutionary path. */
-    def sweepArgmin(): DataFrame = Relational.paramSweepArgmin(spark, dir)
+    val sweepArgmin = op("param_sweep_argmin")
     /** One differential-evolution generation (DE/rand/1/bin, seeded
       * replayable randomness) over the 2-D integer param box — the
       * calibration family beyond the grid (round 16). */
-    def deStep(): DataFrame = Relational.paramSweepDeStep(spark, dir)
+    val deStep = op("param_sweep_de_step")
     /** One (μ+λ) self-adaptive evolution-strategy generation — each
       * individual carries its own mutating step sizes (round 16). */
-    def saesStep(): DataFrame = Relational.paramSweepSaesStep(spark, dir)
+    val saesStep = op("param_sweep_saes_step")
   }
 
   /** 2D fixed-grid stencil / image-cleaning over the 8×8 grids read from
@@ -590,486 +526,123 @@ final class Corpus(val spark: SparkSession, val dir: String) {
   object grid {
     /** Two-threshold tailcut clean: per-image core/boundary/kept counts
       * + kept-intensity sum/max. */
-    def tailcutClean(): DataFrame = GridStencil.gridTailcutClean(spark, dir)
+    val tailcutClean = op("grid_tailcut_clean")
     /** Isolated-island removal: 4-neighbor components over kept pixels
       * (the global star-CC loop), per-image largest-island profile. */
-    def islandLargest(): DataFrame = GridStencil.gridIslandLargest(spark, dir)
+    val islandLargest = op("grid_island_largest")
     /** 3×3 edge-clipped integer box-mean stencil with per-image peak
       * readout. */
-    def stencilSmooth(): DataFrame = GridStencil.gridStencilSmooth(spark, dir)
+    val stencilSmooth = op("grid_stencil_smooth")
   }
 
   /** The relational/commerce workload battery (the wk_* contract family). */
   object workload {
-    /** Typed facade of `wk_q10_returns` (delegates to [[graft.ops.Workload.q10Returns]]). */
-    def q10Returns(): DataFrame = Workload.q10Returns(spark, dir)
-    /** Typed facade of `wk_q11_important_stock` (delegates to [[graft.ops.Workload.q11ImportantStock]]). */
-    def q11ImportantStock(): DataFrame = Workload.q11ImportantStock(spark, dir)
-    /** Typed facade of `wk_q12_lag_priority` (delegates to [[graft.ops.Workload.q12LagPriority]]). */
-    def q12LagPriority(): DataFrame = Workload.q12LagPriority(spark, dir)
-    /** Typed facade of `wk_q13_order_count_dist` (delegates to [[graft.ops.Workload.q13OrderCountDist]]). */
-    def q13OrderCountDist(): DataFrame = Workload.q13OrderCountDist(spark, dir)
-    /** Typed facade of `wk_q14_promo_share` (delegates to [[graft.ops.Workload.q14PromoShare]]). */
-    def q14PromoShare(): DataFrame = Workload.q14PromoShare(spark, dir)
-    /** Typed facade of `wk_q15_top_supplier` (delegates to [[graft.ops.Workload.q15TopSupplier]]). */
-    def q15TopSupplier(): DataFrame = Workload.q15TopSupplier(spark, dir)
-    /** Typed facade of `wk_q16_supplier_cnt` (delegates to [[graft.ops.Workload.q16SupplierCnt]]). */
-    def q16SupplierCnt(): DataFrame = Workload.q16SupplierCnt(spark, dir)
-    /** Typed facade of `wk_q17_small_qty_revenue` (delegates to [[graft.ops.Workload.q17SmallQtyRevenue]]). */
-    def q17SmallQtyRevenue(): DataFrame = Workload.q17SmallQtyRevenue(spark, dir)
-    /** Typed facade of `wk_q18_large_orders` (delegates to [[graft.ops.Workload.q18LargeOrders]]). */
-    def q18LargeOrders(): DataFrame = Workload.q18LargeOrders(spark, dir)
-    /** Typed facade of `wk_q19_brand_discounts` (delegates to [[graft.ops.Workload.q19BrandDiscounts]]). */
-    def q19BrandDiscounts(): DataFrame = Workload.q19BrandDiscounts(spark, dir)
-    /** Typed facade of `wk_q20_excess_stock` (delegates to [[graft.ops.Workload.q20ExcessStock]]). */
-    def q20ExcessStock(): DataFrame = Workload.q20ExcessStock(spark, dir)
-    /** Typed facade of `wk_q21_late_supplier` (delegates to [[graft.ops.Workload.q21LateSupplier]]). */
-    def q21LateSupplier(): DataFrame = Workload.q21LateSupplier(spark, dir)
-    /** Typed facade of `wk_q22_lapsed_customers` (delegates to [[graft.ops.Workload.q22LapsedCustomers]]). */
-    def q22LapsedCustomers(): DataFrame = Workload.q22LapsedCustomers(spark, dir)
-    /** Typed facade of `wk_q2_min_cost_supplier` (delegates to [[graft.ops.Workload.q2MinCostSupplier]]). */
-    def q2MinCostSupplier(): DataFrame = Workload.q2MinCostSupplier(spark, dir)
-    /** Typed facade of `wk_q3_shipping_priority` (delegates to [[graft.ops.Workload.q3ShippingPriority]]). */
-    def q3ShippingPriority(): DataFrame = Workload.q3ShippingPriority(spark, dir)
-    /** Typed facade of `wk_q4_order_priority` (delegates to [[graft.ops.Workload.q4OrderPriority]]). */
-    def q4OrderPriority(): DataFrame = Workload.q4OrderPriority(spark, dir)
-    /** Typed facade of `wk_q5_region_volume` (delegates to [[graft.ops.Workload.q5RegionVolume]]). */
-    def q5RegionVolume(): DataFrame = Workload.q5RegionVolume(spark, dir)
-    /** Typed facade of `wk_q6_discount_revenue` (delegates to [[graft.ops.Workload.q6DiscountRevenue]]). */
-    def q6DiscountRevenue(): DataFrame = Workload.q6DiscountRevenue(spark, dir)
-    /** Typed facade of `wk_q7_region_trade` (delegates to [[graft.ops.Workload.q7RegionTrade]]). */
-    def q7RegionTrade(): DataFrame = Workload.q7RegionTrade(spark, dir)
-    /** Typed facade of `wk_q8_market_share` (delegates to [[graft.ops.Workload.q8MarketShare]]). */
-    def q8MarketShare(): DataFrame = Workload.q8MarketShare(spark, dir)
-    /** Typed facade of `wk_q9_product_profit` (delegates to [[graft.ops.Workload.q9ProductProfit]]). */
-    def q9ProductProfit(): DataFrame = Workload.q9ProductProfit(spark, dir)
+    val q10Returns = op("wk_q10_returns")
+    val q11ImportantStock = op("wk_q11_important_stock")
+    val q12LagPriority = op("wk_q12_lag_priority")
+    val q13OrderCountDist = op("wk_q13_order_count_dist")
+    val q14PromoShare = op("wk_q14_promo_share")
+    val q15TopSupplier = op("wk_q15_top_supplier")
+    val q16SupplierCnt = op("wk_q16_supplier_cnt")
+    val q17SmallQtyRevenue = op("wk_q17_small_qty_revenue")
+    val q18LargeOrders = op("wk_q18_large_orders")
+    val q19BrandDiscounts = op("wk_q19_brand_discounts")
+    val q20ExcessStock = op("wk_q20_excess_stock")
+    val q21LateSupplier = op("wk_q21_late_supplier")
+    val q22LapsedCustomers = op("wk_q22_lapsed_customers")
+    val q2MinCostSupplier = op("wk_q2_min_cost_supplier")
+    val q3ShippingPriority = op("wk_q3_shipping_priority")
+    val q4OrderPriority = op("wk_q4_order_priority")
+    val q5RegionVolume = op("wk_q5_region_volume")
+    val q6DiscountRevenue = op("wk_q6_discount_revenue")
+    val q7RegionTrade = op("wk_q7_region_trade")
+    val q8MarketShare = op("wk_q8_market_share")
+    val q9ProductProfit = op("wk_q9_product_profit")
   }
 
   /** Time-series analytics over the events stream (the ts_* family). */
   object timeseries {
-    /** Typed facade of `ts_autocorr_hourly` (delegates to [[graft.ops.Aggregates.tsAutocorrHourly]]). */
-    def autocorrHourly(): DataFrame = Aggregates.tsAutocorrHourly(spark, dir)
-    /** Typed facade of `ts_changepoint_cusum` (delegates to [[graft.ops.Aggregates.tsChangepointCusum]]). */
-    def changepointCusum(): DataFrame = Aggregates.tsChangepointCusum(spark, dir)
-    /** Typed facade of `ts_downsample_ohlc` (delegates to [[graft.ops.Aggregates.tsDownsampleOhlc]]). */
-    def downsampleOhlc(): DataFrame = Aggregates.tsDownsampleOhlc(spark, dir)
-    /** Typed facade of `ts_forecast_baseline_mae` (delegates to [[graft.ops.Aggregates.tsForecastBaselineMae]]). */
-    def forecastBaselineMae(): DataFrame = Aggregates.tsForecastBaselineMae(spark, dir)
-    /** Typed facade of `ts_gapfill_hourly` (delegates to [[graft.ops.Aggregates.gapfillHourly]]). */
-    def gapfillHourly(): DataFrame = Aggregates.gapfillHourly(spark, dir)
-    /** Typed facade of `ts_hourofday_profile` (delegates to [[graft.ops.Aggregates.tsHourOfDayProfile]]). */
-    def hourofdayProfile(): DataFrame = Aggregates.tsHourOfDayProfile(spark, dir)
-    /** Typed facade of `ts_interval_union` (delegates to [[graft.ops.Windows.tsIntervalUnion]]). */
-    def intervalUnion(): DataFrame = Windows.tsIntervalUnion(spark, dir)
-    /** Typed facade of `ts_resample_interp_5m` (delegates to [[graft.ops.Aggregates.tsResampleInterp5m]]). */
-    def resampleInterp5m(): DataFrame = Aggregates.tsResampleInterp5m(spark, dir)
-    /** Typed facade of `ts_seasonal_anova` (delegates to [[graft.ops.Aggregates.tsSeasonalAnova]]). */
-    def seasonalAnova(): DataFrame = Aggregates.tsSeasonalAnova(spark, dir)
-    /** Typed facade of `ts_seasonal_decompose` (delegates to [[graft.ops.Aggregates.tsSeasonalDecompose]]). */
-    def seasonalDecompose(): DataFrame = Aggregates.tsSeasonalDecompose(spark, dir)
+    val autocorrHourly = op("ts_autocorr_hourly")
+    val changepointCusum = op("ts_changepoint_cusum")
+    val downsampleOhlc = op("ts_downsample_ohlc")
+    val forecastBaselineMae = op("ts_forecast_baseline_mae")
+    val gapfillHourly = op("ts_gapfill_hourly")
+    val hourofdayProfile = op("ts_hourofday_profile")
+    val intervalUnion = op("ts_interval_union")
+    val resampleInterp5m = op("ts_resample_interp_5m")
+    val seasonalAnova = op("ts_seasonal_anova")
+    val seasonalDecompose = op("ts_seasonal_decompose")
   }
 
   /** Window/sequence analytics (the win_* family). */
   object windows {
-    /** Typed facade of `win_cume_dist_pct` (delegates to [[graft.ops.Windows.winCumeDistPct]]). */
-    def cumeDistPct(): DataFrame = Windows.winCumeDistPct(spark, dir)
-    /** Typed facade of `win_cumulative_distinct` (delegates to [[graft.ops.Streaming.winCumulativeDistinct]]). */
-    def cumulativeDistinct(): DataFrame = Streaming.winCumulativeDistinct(spark, dir)
-    /** Typed facade of `win_drawdown` (delegates to [[graft.ops.Windows.winDrawdown]]). */
-    def drawdown(): DataFrame = Windows.winDrawdown(spark, dir)
-    /** Typed facade of `win_ewma` (delegates to [[graft.ops.Windows.winEwma]]). */
-    def ewma(): DataFrame = Windows.winEwma(spark, dir)
-    /** Typed facade of `win_first_last` (delegates to [[graft.ops.Windows.winFirstLast]]). */
-    def firstLast(): DataFrame = Windows.winFirstLast(spark, dir)
-    /** Typed facade of `win_lead_lag` (delegates to [[graft.ops.Windows.winLeadLag]]). */
-    def leadLag(): DataFrame = Windows.winLeadLag(spark, dir)
-    /** Typed facade of `win_nth_value` (delegates to [[graft.ops.Windows.winNthValue]]). */
-    def nthValue(): DataFrame = Windows.winNthValue(spark, dir)
-    /** Typed facade of `win_ntile_pct` (delegates to [[graft.ops.Windows.winNtilePct]]). */
-    def ntilePct(): DataFrame = Windows.winNtilePct(spark, dir)
-    /** Typed facade of `win_ntile_scalable` (delegates to [[graft.ops.Windows.winNtileScalable]]). */
-    def ntileScalable(): DataFrame = Windows.winNtileScalable(spark, dir)
-    /** Typed facade of `win_pattern_match` (delegates to [[graft.ops.Windows.winPatternMatch]]). */
-    def patternMatch(): DataFrame = Windows.winPatternMatch(spark, dir)
-    /** Typed facade of `win_period_over_period` (delegates to [[graft.ops.Aggregates.winPeriodOverPeriod]]). */
-    def periodOverPeriod(): DataFrame = Aggregates.winPeriodOverPeriod(spark, dir)
-    /** Typed facade of `win_range_frame` (delegates to [[graft.ops.Windows.winRangeFrame]]). */
-    def rangeFrame(): DataFrame = Windows.winRangeFrame(spark, dir)
-    /** Typed facade of `win_rank_topn` (delegates to [[graft.ops.Windows.winRankTopn]]). */
-    def rankTopn(): DataFrame = Windows.winRankTopn(spark, dir)
-    /** Typed facade of `win_ratio_to_report` (delegates to [[graft.ops.Windows.winRatioToReport]]). */
-    def ratioToReport(): DataFrame = Windows.winRatioToReport(spark, dir)
-    /** Typed facade of `win_retention_cohort` (delegates to [[graft.ops.Streaming.retentionCohort]]). */
-    def retentionCohort(): DataFrame = Streaming.retentionCohort(spark, dir)
-    /** Typed facade of `win_rolling_7d` (delegates to [[graft.ops.Windows.winRolling7d]]). */
-    def rolling7d(): DataFrame = Windows.winRolling7d(spark, dir)
-    /** Typed facade of `win_rolling_median` (delegates to [[graft.ops.Windows.winRollingMedian]]). */
-    def rollingMedian(): DataFrame = Windows.winRollingMedian(spark, dir)
-    /** Typed facade of `win_running_total` (delegates to [[graft.ops.Windows.winRunningTotal]]). */
-    def runningTotal(): DataFrame = Windows.winRunningTotal(spark, dir)
-    /** Typed facade of `win_streak_islands` (delegates to [[graft.ops.Windows.winStreakIslands]]). */
-    def streakIslands(): DataFrame = Windows.winStreakIslands(spark, dir)
+    val cumeDistPct = op("win_cume_dist_pct")
+    val cumulativeDistinct = op("win_cumulative_distinct")
+    val drawdown = op("win_drawdown")
+    val ewma = op("win_ewma")
+    val firstLast = op("win_first_last")
+    val leadLag = op("win_lead_lag")
+    val nthValue = op("win_nth_value")
+    val ntilePct = op("win_ntile_pct")
+    val ntileScalable = op("win_ntile_scalable")
+    val patternMatch = op("win_pattern_match")
+    val periodOverPeriod = op("win_period_over_period")
+    val rangeFrame = op("win_range_frame")
+    val rankTopn = op("win_rank_topn")
+    val ratioToReport = op("win_ratio_to_report")
+    val retentionCohort = op("win_retention_cohort")
+    val rolling7d = op("win_rolling_7d")
+    val rollingMedian = op("win_rolling_median")
+    val runningTotal = op("win_running_total")
+    val streakIslands = op("win_streak_islands")
   }
 
   /** Aggregation analytics — sketches, stats, OLAP rollups (agg_*). */
   object analytics {
-    /** Typed facade of `agg_approx_hll` (delegates to [[graft.ops.Aggregates.aggApproxHll]]). */
-    def approxHll(): DataFrame = Aggregates.aggApproxHll(spark, dir)
-    /** Typed facade of `agg_bitmap_distinct` (delegates to [[graft.ops.Aggregates.aggBitmapDistinct]]). */
-    def bitmapDistinct(): DataFrame = Aggregates.aggBitmapDistinct(spark, dir)
-    /** Typed facade of `agg_bool` (delegates to [[graft.ops.Relational.aggBool]]). */
-    def bool(): DataFrame = Relational.aggBool(spark, dir)
-    /** Typed facade of `agg_collect_sorted` (delegates to [[graft.ops.Aggregates.aggCollectSorted]]). */
-    def collectSorted(): DataFrame = Aggregates.aggCollectSorted(spark, dir)
-    /** Typed facade of `agg_corr_pairs` (delegates to [[graft.ops.Aggregates.aggCorrPairs]]). */
-    def corrPairs(): DataFrame = Aggregates.aggCorrPairs(spark, dir)
-    /** Typed facade of `agg_count_distinct` (delegates to [[graft.ops.Aggregates.aggCountDistinct]]). */
-    def countDistinct(): DataFrame = Aggregates.aggCountDistinct(spark, dir)
-    /** Typed facade of `agg_cube` (delegates to [[graft.ops.Aggregates.aggCube]]). */
-    def cube(): DataFrame = Aggregates.aggCube(spark, dir)
-    /** Typed facade of `agg_decay_halflife` (delegates to [[graft.ops.Aggregates.aggDecayHalflife]]). */
-    def decayHalflife(): DataFrame = Aggregates.aggDecayHalflife(spark, dir)
-    /** Typed facade of `agg_filter_clause` (delegates to [[graft.ops.Relational.aggFilterClause]]). */
-    def filterClause(): DataFrame = Relational.aggFilterClause(spark, dir)
-    /** Typed facade of `agg_gini_revenue` (delegates to [[graft.ops.Aggregates.aggGiniRevenue]]). */
-    def giniRevenue(): DataFrame = Aggregates.aggGiniRevenue(spark, dir)
-    /** Typed facade of `agg_group_by_all` (delegates to [[graft.ops.Relational.aggGroupByAll]]). */
-    def groupByAll(): DataFrame = Relational.aggGroupByAll(spark, dir)
-    /** Typed facade of `agg_grouping_id` (delegates to [[graft.ops.Aggregates.aggGroupingId]]). */
-    def groupingId(): DataFrame = Aggregates.aggGroupingId(spark, dir)
-    /** Typed facade of `agg_grouping_sets` (delegates to [[graft.ops.Aggregates.aggGroupingSets]]). */
-    def groupingSets(): DataFrame = Aggregates.aggGroupingSets(spark, dir)
-    /** Typed facade of `agg_histogram` (delegates to [[graft.ops.Aggregates.aggHistogram]]). */
-    def histogram(): DataFrame = Aggregates.aggHistogram(spark, dir)
-    /** Typed facade of `agg_histogram_equidepth` (delegates to [[graft.ops.Aggregates.aggHistogramEquidepth]]). */
-    def histogramEquidepth(): DataFrame = Aggregates.aggHistogramEquidepth(spark, dir)
-    /** Typed facade of `agg_hll_sketch_union` (delegates to [[graft.ops.Aggregates.aggHllSketchUnion]]). */
-    def hllSketchUnion(): DataFrame = Aggregates.aggHllSketchUnion(spark, dir)
-    /** Typed facade of `agg_incremental_merge` (delegates to [[graft.ops.Aggregates.aggIncrementalMerge]]). */
-    def incrementalMerge(): DataFrame = Aggregates.aggIncrementalMerge(spark, dir)
-    /** Typed facade of `agg_min_max_by` (delegates to [[graft.ops.Aggregates.aggMinMaxBy]]). */
-    def minMaxBy(): DataFrame = Aggregates.aggMinMaxBy(spark, dir)
-    /** Typed facade of `agg_mode_deterministic` (delegates to [[graft.ops.Aggregates.aggModeDeterministic]]). */
-    def modeDeterministic(): DataFrame = Aggregates.aggModeDeterministic(spark, dir)
-    /** Typed facade of `agg_multi_distinct` (delegates to [[graft.ops.Aggregates.aggMultiDistinct]]). */
-    def multiDistinct(): DataFrame = Aggregates.aggMultiDistinct(spark, dir)
-    /** Typed facade of `agg_percentile_approx` (delegates to [[graft.ops.Aggregates.aggPercentileApprox]]). */
-    def percentileApprox(): DataFrame = Aggregates.aggPercentileApprox(spark, dir)
-    /** Typed facade of `agg_percentiles` (delegates to [[graft.ops.Aggregates.aggPercentiles]]). */
-    def percentiles(): DataFrame = Aggregates.aggPercentiles(spark, dir)
-    /** Typed facade of `agg_pricing_summary` (delegates to [[graft.ops.Aggregates.aggPricingSummary]]). */
-    def pricingSummary(): DataFrame = Aggregates.aggPricingSummary(spark, dir)
-    /** Typed facade of `agg_regression` (delegates to [[graft.ops.Aggregates.aggRegression]]). */
-    def regression(): DataFrame = Aggregates.aggRegression(spark, dir)
-    /** Typed facade of `agg_robust_stats` (delegates to [[graft.ops.Aggregates.aggRobustStats]]). */
-    def robustStats(): DataFrame = Aggregates.aggRobustStats(spark, dir)
-    /** Typed facade of `agg_rollup` (delegates to [[graft.ops.Aggregates.aggRollup]]). */
-    def rollup(): DataFrame = Aggregates.aggRollup(spark, dir)
-    /** Typed facade of `agg_skew_kurtosis` (delegates to [[graft.ops.Aggregates.aggSkewKurtosis]]). */
-    def skewKurtosis(): DataFrame = Aggregates.aggSkewKurtosis(spark, dir)
-    /** Typed facade of `agg_stats` (delegates to [[graft.ops.Aggregates.aggStats]]). */
-    def stats(): DataFrame = Aggregates.aggStats(spark, dir)
-    /** Typed facade of `agg_string_concat` (delegates to [[graft.ops.Aggregates.aggStringConcat]]). */
-    def stringConcat(): DataFrame = Aggregates.aggStringConcat(spark, dir)
-    /** Typed facade of `agg_tdigest` (delegates to [[graft.ops.Aggregates.aggTdigest]]). */
-    def tdigest(): DataFrame = Aggregates.aggTdigest(spark, dir)
-    /** Typed facade of `agg_weighted_median` (delegates to [[graft.ops.Aggregates.aggWeightedMedian]]). */
-    def weightedMedian(): DataFrame = Aggregates.aggWeightedMedian(spark, dir)
+    val approxHll = op("agg_approx_hll")
+    val bitmapDistinct = op("agg_bitmap_distinct")
+    val bool = op("agg_bool")
+    val collectSorted = op("agg_collect_sorted")
+    val corrPairs = op("agg_corr_pairs")
+    val countDistinct = op("agg_count_distinct")
+    val cube = op("agg_cube")
+    val decayHalflife = op("agg_decay_halflife")
+    val filterClause = op("agg_filter_clause")
+    val giniRevenue = op("agg_gini_revenue")
+    val groupByAll = op("agg_group_by_all")
+    val groupingId = op("agg_grouping_id")
+    val groupingSets = op("agg_grouping_sets")
+    val histogram = op("agg_histogram")
+    val histogramEquidepth = op("agg_histogram_equidepth")
+    val hllSketchUnion = op("agg_hll_sketch_union")
+    val incrementalMerge = op("agg_incremental_merge")
+    val minMaxBy = op("agg_min_max_by")
+    val modeDeterministic = op("agg_mode_deterministic")
+    val multiDistinct = op("agg_multi_distinct")
+    val percentileApprox = op("agg_percentile_approx")
+    val percentiles = op("agg_percentiles")
+    val pricingSummary = op("agg_pricing_summary")
+    val regression = op("agg_regression")
+    val robustStats = op("agg_robust_stats")
+    val rollup = op("agg_rollup")
+    val skewKurtosis = op("agg_skew_kurtosis")
+    val stats = op("agg_stats")
+    val stringConcat = op("agg_string_concat")
+    val tdigest = op("agg_tdigest")
+    val weightedMedian = op("agg_weighted_median")
   }
 
-  /** The facade-coverage table (round 14, VERDICT r13 #6): registry key →
-    * the typed facade call that serves it. CorpusApiSpec gates this the
-    * way GoldenPlanSpec gates plans: every entry's analyzed plan must be
-    * identical to the registry query's (the facade can never silently
-    * drift onto a different implementation), every key here must exist in
-    * the registry, and every registry key must be EITHER here or in the
-    * checked-in escape-hatch list (`facade-escape-hatch.txt`) — so a new
-    * operator fails the suite until it is consciously triaged into a
-    * typed wrapper or the [[query]] escape hatch.
+  /** Every typed member, top-level and in each family object, in
+    * declaration order: forcing the family objects runs their `op`
+    * declarations, so no second list of keys exists to drift. A family
+    * left out of this list leaves its keys untriaged, which
+    * CorpusApiSpec's coverage gate reports.
     */
-  lazy val typed: Map[String, () => DataFrame] = Map(
-    "dq_profile_table" -> (() => profile()),
-    "dq_profile_approx" -> (() => profileApprox()),
-    "pipeline_dataset_card" -> (() => datasetCard()),
-    "pipeline_training_emit" -> (() => trainingEmit()),
-    "pipeline_split_train_eval" -> (() => splitTrainEval()),
-    "pipeline_eval_holdout" -> (() => evalHoldout()),
-    "agg_heavy_hitters" -> (() => heavyHitters()),
-    "agg_heavy_hitters_grouped" -> (() => heavyHittersGrouped()),
-    "pipeline_pack_sequences" -> (() => packSequences()),
-    "pipeline_token_budget_mix" -> (() => tokenBudgetMix()),
-    "pipeline_curriculum_phases" -> (() => curriculumPhases()),
-    "text_novelty_frac" -> (() => noveltyFrac()),
-    "pipeline_quality_weighted_sample" -> (() => qualityWeightedSample()),
-    "pipeline_epoch_shuffle" -> (() => epochShuffle()),
-    "pipeline_domain_mix_kl" -> (() => domainMixKl()),
-    "agg_countmin_sketch" -> (() => countminSketch()),
-    "ts_holt_linear" -> (() => holtLinear()),
-    "win_event_paths" -> (() => eventPaths()),
-    "win_conversion_lag" -> (() => conversionLag()),
-    "text_normalize" -> (() => text.normalize()),
-    "text_quality_score" -> (() => text.quality()),
-    "text_lang_id" -> (() => text.langId()),
-    "text_token_count" -> (() => text.tokenCount()),
-    "text_fingerprint" -> (() => text.fingerprint()),
-    "text_pii_redact" -> (() => text.piiRedact()),
-    "text_chunk_split" -> (() => text.chunkSplit()),
-    "text_keywords_per_doc" -> (() => text.keywords()),
-    "text_bpe_merge_round" -> (() => text.bpeMergeRound()),
-    "text_wordcount" -> (() => text.wordcount()),
-    "text_sparse_cosine_topk" -> (() => text.sparseCosineTopk()),
-    "dedup_exact_keep_first" -> (() => dedup.exact()),
-    "dedup_minhash_sig" -> (() => dedup.minhashSignatures()),
-    "dedup_minhash_pairs" -> (() => dedup.minhashPairs()),
-    "dedup_simhash" -> (() => dedup.simhash()),
-    "dedup_connected_components_v2" -> (() => dedup.clusters()),
-    "dedup_cluster_canonical" -> (() => dedup.canonical()),
-    "dedup_semantic_clusters" -> (() => dedup.semanticClusters()),
-    "text_decontaminate_overlap" -> (() => dedup.decontaminate()),
-    "dedup_ngram_corpus_frac" -> (() => dedup.ngramCorpusFrac()),
-    "dedup_shingle_containment" -> (() => dedup.shingleContainment()),
-    "dedup_bloom_prefilter" -> (() => dedup.bloomPrefilter()),
-    "dedup_bloom_partitioned" -> (() => dedup.bloomPartitioned()),
-    "dedup_band_tuning_sweep" -> (() => dedup.bandTuningSweep()),
-    "text_decontaminate_13gram" -> (() => dedup.decontaminate13gram()),
-    "dedup_multi_signal" -> (() => dedup.multiSignal()),
-    "pipeline_dedup_funnel" -> (() => dedup.funnel()),
-    "pipeline_softdedup_weights" -> (() => dedup.softWeights()),
-    "vec_knn_topk" -> (() => vectors.knnTopk()),
-    "ann_ivf_topk" -> (() => vectors.ivfTopk()),
-    "ann_lsh_bucket" -> (() => vectors.lshBuckets()),
-    "ann_recall_at_k" -> (() => vectors.recallAtK()),
-    "vec_centroid_by_label" -> (() => vectors.centroids()),
-    "vec_quantize_int8" -> (() => vectors.quantizeInt8()),
-    "vec_norm_stats" -> (() => vectors.normStats()),
-    "graph_pagerank_knn" -> (() => vectors.pagerankHubs()),
-    "vec_pca_power_iter" -> (() => vectors.pcaTopDirection()),
-    "vec_kmeans_lloyd" -> (() => vectors.kmeansClusters()),
-    "graph_knn_jaccard" -> (() => vectors.knnJaccard()),
-    "vec_hard_negatives" -> (() => vectors.hardNegatives()),
-    "ann_ivf_pq_topk" -> (() => vectors.ivfPqTopk()),
-    "vec_pq_rerank" -> (() => vectors.pqRerank()),
-    "ann_graph_expand_topk" -> (() => vectors.graphExpandTopk()),
-    "search_hybrid_rrf" -> (() => vectors.hybridRrf()),
-    "vec_matryoshka_eval" -> (() => vectors.matryoshkaEval()),
-    "graph_kcore_full" -> (() => vectors.kcoreFull()),
-    "vec_knn_join_full" -> (() => vectors.knnJoinFull()),
-    "graph_cc_full" -> (() => vectors.ccFull()),
-    "graph_pagerank_full" -> (() => vectors.pagerankFull()),
-    "ann_recall_full" -> (() => vectors.recallFull()),
-    "graph_labelprop_full" -> (() => vectors.labelPropFull()),
-    "graph_jaccard_full" -> (() => vectors.jaccardFull()),
-    "pq_recall_at_k" -> (() => vectors.pqRecall()),
-    "index_build_vecsearch" -> (() => vectors.indexBuild()),
-    "vec_ivf_recall_sweep" -> (() => vectors.ivfRecallSweep()),
-    "vec_centroid_drift" -> (() => vectors.centroidDrift()),
-    "index_update_vecsearch" -> (() => vectors.indexUpdate()),
-    "index_policy_vecsearch" -> (() => vectors.indexPolicy()),
-    "ann_multitable_topk" -> (() => vectors.multitableTopk()),
-    "vec_probe_adaptive" -> (() => vectors.probeAdaptive()),
-    "vec_dim_variance_prune" -> (() => vectors.dimVariancePrune()),
-    "graph_hits_full" -> (() => vectors.hitsFull()),
-    "graph_random_walks" -> (() => vectors.randomWalks()),
-    "dq_rule_violations" -> (() => quality.ruleViolations()),
-    "dq_anomaly_mad" -> (() => quality.anomalies()),
-    "dq_distribution_drift" -> (() => quality.distributionDrift()),
-    "dq_referential_integrity" -> (() => quality.referentialIntegrity()),
-    "dq_benford_first_digit" -> (() => quality.benfordScreen()),
-    "dq_rolling_zscore" -> (() => quality.rollingZscore()),
-    "dq_ks_test" -> (() => quality.ksTest()),
-    "dq_schema_drift" -> (() => quality.schemaDrift()),
-    "mm_binary_stats" -> (() => media.binaryStats()),
-    "mm_decode_features" -> (() => media.decodeFeatures()),
-    "mm_frame_sample" -> (() => media.frameSample()),
-    "mm_chunk_dedup" -> (() => media.chunkDedup()),
-    "source_binaryfile_ingest" -> (() => media.ingestBinary()),
-    "mm_phash_hamming" -> (() => media.phashPairs()),
-    "mm_phash_clusters" -> (() => media.phashClusters()),
-    "index_build_mediasig" -> (() => media.indexBuild()),
-    "index_update_mediasig" -> (() => media.indexUpdate()),
-    "win_rfm_scores" -> (() => rfmScores()),
-    "win_cohort_ltv" -> (() => cohortLtv()),
-    "agg_theta_kmv" -> (() => thetaKmv()),
-    "ml_auc_score" -> (() => aucScore()),
-    "pipeline_dsir_weights" -> (() => dsirWeights()),
-    "text_oov_rate" -> (() => text.oovRate()),
-    "ann_range_search" -> (() => vectors.rangeSearch()),
-    "graph_resource_alloc" -> (() => vectors.resourceAlloc()),
-    "graph_clustering_coeff" -> (() => vectors.clusteringCoeff()),
-    "vec_retrain_churn" -> (() => vectors.retrainChurn()),
-    "ml_pr_curve" -> (() => prCurve()),
-    "agg_approx_hll" -> (() => analytics.approxHll()),
-    "agg_bitmap_distinct" -> (() => analytics.bitmapDistinct()),
-    "agg_bool" -> (() => analytics.bool()),
-    "agg_collect_sorted" -> (() => analytics.collectSorted()),
-    "agg_corr_pairs" -> (() => analytics.corrPairs()),
-    "agg_count_distinct" -> (() => analytics.countDistinct()),
-    "agg_cube" -> (() => analytics.cube()),
-    "agg_decay_halflife" -> (() => analytics.decayHalflife()),
-    "agg_filter_clause" -> (() => analytics.filterClause()),
-    "agg_gini_revenue" -> (() => analytics.giniRevenue()),
-    "agg_group_by_all" -> (() => analytics.groupByAll()),
-    "agg_grouping_id" -> (() => analytics.groupingId()),
-    "agg_grouping_sets" -> (() => analytics.groupingSets()),
-    "agg_histogram" -> (() => analytics.histogram()),
-    "agg_histogram_equidepth" -> (() => analytics.histogramEquidepth()),
-    "agg_hll_sketch_union" -> (() => analytics.hllSketchUnion()),
-    "agg_incremental_merge" -> (() => analytics.incrementalMerge()),
-    "agg_min_max_by" -> (() => analytics.minMaxBy()),
-    "agg_mode_deterministic" -> (() => analytics.modeDeterministic()),
-    "agg_multi_distinct" -> (() => analytics.multiDistinct()),
-    "agg_percentile_approx" -> (() => analytics.percentileApprox()),
-    "agg_percentiles" -> (() => analytics.percentiles()),
-    "agg_pricing_summary" -> (() => analytics.pricingSummary()),
-    "agg_regression" -> (() => analytics.regression()),
-    "agg_robust_stats" -> (() => analytics.robustStats()),
-    "agg_rollup" -> (() => analytics.rollup()),
-    "agg_skew_kurtosis" -> (() => analytics.skewKurtosis()),
-    "agg_stats" -> (() => analytics.stats()),
-    "agg_string_concat" -> (() => analytics.stringConcat()),
-    "agg_tdigest" -> (() => analytics.tdigest()),
-    "agg_weighted_median" -> (() => analytics.weightedMedian()),
-    "dq_ab_ttest" -> (() => quality.abTtest()),
-    "dq_freshness_lag" -> (() => quality.freshnessLag()),
-    "dq_incident_islands" -> (() => quality.incidentIslands()),
-    "dq_outlier_tukey" -> (() => quality.outlierTukey()),
-    "dq_pk_uniqueness" -> (() => quality.pkUniqueness()),
-    "dq_profile_drift" -> (() => quality.profileDrift()),
-    "text_bm25_topk" -> (() => text.bm25Topk()),
-    "text_bpe_pair_stats" -> (() => text.bpePairStats()),
-    "text_exact_dedup" -> (() => text.exactDedup()),
-    "text_gopher_gates" -> (() => text.gopherGates()),
-    "text_jaccard_pairs" -> (() => text.jaccardPairs()),
-    "text_lang_stats" -> (() => text.langStats()),
-    "text_levenshtein_pairs" -> (() => text.levenshteinPairs()),
-    "text_ngram_topk" -> (() => text.ngramTopk()),
-    "text_paragraph_dedup" -> (() => text.paragraphDedup()),
-    "text_perplexity_proxy" -> (() => text.perplexityProxy()),
-    "text_repetition_stats" -> (() => text.repetitionStats()),
-    "text_shingle_generate" -> (() => text.shingleGenerate()),
-    "text_source_entropy" -> (() => text.sourceEntropy()),
-    "text_tfidf_top" -> (() => text.tfidfTop()),
-    "text_token_explode" -> (() => text.tokenExplode()),
-    "text_vocab_chao1" -> (() => text.vocabChao1()),
-    "text_zipf_slope" -> (() => text.zipfSlope()),
-    "ts_autocorr_hourly" -> (() => timeseries.autocorrHourly()),
-    "ts_changepoint_cusum" -> (() => timeseries.changepointCusum()),
-    "ts_downsample_ohlc" -> (() => timeseries.downsampleOhlc()),
-    "ts_forecast_baseline_mae" -> (() => timeseries.forecastBaselineMae()),
-    "ts_gapfill_hourly" -> (() => timeseries.gapfillHourly()),
-    "ts_hourofday_profile" -> (() => timeseries.hourofdayProfile()),
-    "ts_interval_union" -> (() => timeseries.intervalUnion()),
-    "ts_resample_interp_5m" -> (() => timeseries.resampleInterp5m()),
-    "ts_seasonal_anova" -> (() => timeseries.seasonalAnova()),
-    "ts_seasonal_decompose" -> (() => timeseries.seasonalDecompose()),
-    "win_cume_dist_pct" -> (() => windows.cumeDistPct()),
-    "win_cumulative_distinct" -> (() => windows.cumulativeDistinct()),
-    "win_drawdown" -> (() => windows.drawdown()),
-    "win_ewma" -> (() => windows.ewma()),
-    "win_first_last" -> (() => windows.firstLast()),
-    "win_lead_lag" -> (() => windows.leadLag()),
-    "win_nth_value" -> (() => windows.nthValue()),
-    "win_ntile_pct" -> (() => windows.ntilePct()),
-    "win_ntile_scalable" -> (() => windows.ntileScalable()),
-    "win_pattern_match" -> (() => windows.patternMatch()),
-    "win_period_over_period" -> (() => windows.periodOverPeriod()),
-    "win_range_frame" -> (() => windows.rangeFrame()),
-    "win_rank_topn" -> (() => windows.rankTopn()),
-    "win_ratio_to_report" -> (() => windows.ratioToReport()),
-    "win_retention_cohort" -> (() => windows.retentionCohort()),
-    "win_rolling_7d" -> (() => windows.rolling7d()),
-    "win_rolling_median" -> (() => windows.rollingMedian()),
-    "win_running_total" -> (() => windows.runningTotal()),
-    "win_streak_islands" -> (() => windows.streakIslands()),
-    "wk_q10_returns" -> (() => workload.q10Returns()),
-    "wk_q11_important_stock" -> (() => workload.q11ImportantStock()),
-    "wk_q12_lag_priority" -> (() => workload.q12LagPriority()),
-    "wk_q13_order_count_dist" -> (() => workload.q13OrderCountDist()),
-    "wk_q14_promo_share" -> (() => workload.q14PromoShare()),
-    "wk_q15_top_supplier" -> (() => workload.q15TopSupplier()),
-    "wk_q16_supplier_cnt" -> (() => workload.q16SupplierCnt()),
-    "wk_q17_small_qty_revenue" -> (() => workload.q17SmallQtyRevenue()),
-    "wk_q18_large_orders" -> (() => workload.q18LargeOrders()),
-    "wk_q19_brand_discounts" -> (() => workload.q19BrandDiscounts()),
-    "wk_q20_excess_stock" -> (() => workload.q20ExcessStock()),
-    "wk_q21_late_supplier" -> (() => workload.q21LateSupplier()),
-    "wk_q22_lapsed_customers" -> (() => workload.q22LapsedCustomers()),
-    "wk_q2_min_cost_supplier" -> (() => workload.q2MinCostSupplier()),
-    "wk_q3_shipping_priority" -> (() => workload.q3ShippingPriority()),
-    "wk_q4_order_priority" -> (() => workload.q4OrderPriority()),
-    "wk_q5_region_volume" -> (() => workload.q5RegionVolume()),
-    "wk_q6_discount_revenue" -> (() => workload.q6DiscountRevenue()),
-    "wk_q7_region_trade" -> (() => workload.q7RegionTrade()),
-    "wk_q8_market_share" -> (() => workload.q8MarketShare()),
-    "wk_q9_product_profit" -> (() => workload.q9ProductProfit()),
-    "win_rfm_scores_scalable" -> (() => rfmScoresScalable()),
-    "ml_calibration_bins" -> (() => calibrationBins()),
-    "ml_lift_deciles" -> (() => liftDeciles()),
-    "text_rarity_buckets" -> (() => text.rarityBuckets()),
-    // round 16: the vec/graph serving tails, the streams/pipelines/
-    // features family objects, media sniff/chunk, and the new grid +
-    // DE-calibration operators — escape hatch 145 → 91
-    "vec_cosine_pairs" -> (() => vectors.cosinePairs()),
-    "vec_cosine_pairs_native" -> (() => vectors.cosinePairsNative()),
-    "vec_error_metrics" -> (() => vectors.errorMetrics()),
-    "vec_binary_hamming_topk" -> (() => vectors.binaryHammingTopk()),
-    "vec_ivf_stats" -> (() => vectors.ivfStats()),
-    "vec_pq_adc_topk" -> (() => vectors.pqAdcTopk()),
-    "vec_pq_error" -> (() => vectors.pqError()),
-    "vec_pq_residual" -> (() => vectors.pqResidual()),
-    "graph_triangle_knn" -> (() => vectors.triangleKnn()),
-    "graph_triangle_full" -> (() => vectors.triangleFull()),
-    "graph_degree_assortativity" -> (() => vectors.degreeAssortativity()),
-    "graph_assortativity_full" -> (() => vectors.assortativityFull()),
-    "graph_kcore_peel" -> (() => vectors.kcorePeel()),
-    "graph_label_propagation" -> (() => vectors.labelPropagation()),
-    "graph_modularity_full" -> (() => vectors.modularityFull()),
-    "graph_modularity_labels" -> (() => vectors.modularityLabels()),
-    "graph_bfs_distance_full" -> (() => vectors.bfsDistanceFull()),
-    "dedup_connected_components" -> (() => dedup.connectedComponents()),
-    "dedup_embedding_topk" -> (() => dedup.embeddingTopk()),
-    "dedup_exact_substring" -> (() => dedup.exactSubstring()),
-    "dedup_lsh_recall_eval" -> (() => dedup.lshRecallEval()),
-    "dedup_minhash_sig_agg" -> (() => dedup.minhashSignaturesAgg()),
-    "dedup_pq_codes" -> (() => dedup.pqCodes()),
-    "dedup_url_canonical" -> (() => dedup.urlCanonical()),
-    "mm_magic_sniff" -> (() => media.magicSniff()),
-    "mm_chunk_table" -> (() => media.chunkTable()),
-    "stream_tumbling_1h" -> (() => streams.tumbling1h()),
-    "stream_sliding_1h_15m" -> (() => streams.sliding1h15m()),
-    "stream_session_30m" -> (() => streams.session30m()),
-    "stream_session_custom" -> (() => streams.sessionCustom()),
-    "stream_dau_retention" -> (() => streams.dauRetention()),
-    "stream_funnel" -> (() => streams.funnel()),
-    "stream_watermark_late" -> (() => streams.watermarkLate()),
-    "stream_dedup_keep_first" -> (() => streams.dedupKeepFirst()),
-    "stream_stateful_count" -> (() => streams.statefulCount()),
-    "stream_stateful_count_v2" -> (() => streams.statefulCountV2()),
-    "stream_join_view_purchase" -> (() => streams.joinViewPurchase()),
-    "stream_cdc_apply" -> (() => streams.cdcApply()),
-    "scd2_change_intervals" -> (() => streams.scd2ChangeIntervals()),
-    "pipeline_corpus_curation" -> (() => pipelines.corpusCuration()),
-    "pipeline_incremental_merge" -> (() => pipelines.incrementalMerge()),
-    "pipeline_quality_funnel" -> (() => pipelines.qualityFunnel()),
-    "pipeline_observe_metrics" -> (() => pipelines.observeMetrics()),
-    "pipeline_dataset_diff" -> (() => pipelines.datasetDiff()),
-    "pipeline_packing_efficiency" -> (() => pipelines.packingEfficiency()),
-    "pipeline_compaction_plan" -> (() => pipelines.compactionPlan()),
-    "pipeline_shard_manifest" -> (() => pipelines.shardManifest()),
-    "pipeline_shuffle_stripe" -> (() => pipelines.shuffleStripe()),
-    "pipeline_license_filter" -> (() => pipelines.licenseFilter()),
-    "pipeline_version_hash" -> (() => pipelines.versionHash()),
-    "ml_feature_hash" -> (() => features.featureHash()),
-    "ml_feature_scaler_fit" -> (() => features.featureScalerFit()),
-    "ml_target_encode_loo" -> (() => features.targetEncodeLoo()),
-    "param_sweep_argmin" -> (() => features.sweepArgmin()),
-    "param_sweep_de_step" -> (() => features.deStep()),
-    "param_sweep_saes_step" -> (() => features.saesStep()),
-    "grid_tailcut_clean" -> (() => grid.tailcutClean()),
-    "grid_island_largest" -> (() => grid.islandLargest()),
-    "grid_stencil_smooth" -> (() => grid.stencilSmooth()))
+  lazy val typedOps: Seq[Op] = {
+    Seq(text, dedup, vectors, quality, media, streams, pipelines, features,
+      grid, workload, timeseries, windows, analytics)
+    declared.synchronized(declared.toList)
+  }
 }
 
-object Corpus {
-  def apply(spark: SparkSession, dir: String): Corpus = new Corpus(spark, dir)
-}
+object Corpus { def apply(spark: SparkSession, dir: String): Corpus = new Corpus(spark, dir) }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-level profile of one registry key (optimization round 17): runs
   * the key once under the exact bench session config with a listener that
@@ -17,19 +16,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val keys = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().count()
-    catch { case _: Throwable => }
-    graft.Tables.registerAll(spark, sfDir)
+    val spark = BenchSession.start(sfDir)
 
     val stages =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Int, Long, Long, Long, Long)]

@@ -2,38 +2,45 @@ package graft
 
 import graft.api.Corpus
 
-/** The typed facade (VERDICT r4 #1) must be a zero-drift veneer: every
-  * method delegates to the registry body, so facade output ≡ registry
-  * output, and the quickstart composition runs end-to-end.
+/** The typed facade (VERDICT r4 #1) is the registry by construction:
+  * every typed member only names a registry key and runs the function
+  * `Queries.all` binds to it, so facade output ≡ registry output without
+  * executing either; the quickstart composition runs end-to-end.
   */
 class CorpusApiSpec extends SparkSpec {
   private lazy val c = Corpus(spark, sf)
 
-  test("facade delegates bit-identically to the registry (sampled entries)") {
-    val pairs = Seq(
-      c.text.quality()        -> "text_quality_score",
-      c.dedup.minhashPairs()  -> "dedup_minhash_pairs",
-      c.dedup.clusters()      -> "dedup_connected_components_v2",
-      c.vectors.ivfTopk()     -> "ann_ivf_topk",
-      c.datasetCard()         -> "pipeline_dataset_card",
-      c.quality.ruleViolations() -> "dq_rule_violations",
-      c.packSequences()       -> "pipeline_pack_sequences",
-      c.tokenBudgetMix()      -> "pipeline_token_budget_mix",
-      c.dedup.shingleContainment() -> "dedup_shingle_containment",
-      c.vectors.pagerankHubs() -> "graph_pagerank_knn",
-      c.media.ingestBinary()  -> "source_binaryfile_ingest",
-      // round-9..11 families surfaced in the facade refresh (VERDICT r10 #5)
-      c.heavyHitters()        -> "agg_heavy_hitters",
-      c.evalHoldout()         -> "pipeline_eval_holdout",
-      c.vectors.graphExpandTopk() -> "ann_graph_expand_topk",
-      c.vectors.kcoreFull()   -> "graph_kcore_full",
-      c.media.indexUpdate()   -> "index_update_mediasig")
-    pairs.foreach { case (facade, key) =>
-      val reg = run(key)
-      assert(facade.schema == reg.schema, s"$key schema drift")
-      assert(facade.exceptAll(reg).count() == 0 && reg.exceptAll(facade).count() == 0,
-        s"$key rows drift")
-    }
+  test("every typed facade member carries its registry key's own function") {
+    // identity, not sampled row equality: the member's function IS the
+    // registry's function object, so no input can tell the two apart
+    val ops = c.typedOps
+    val bad = ops.filterNot(o => Queries.all.get(o.key).exists(_ eq o.fn)).map(_.key)
+    assert(bad.isEmpty, s"typed members not bound to their registry function: $bad")
+    val dup = ops.groupBy(_.key).collect { case (k, os) if os.size > 1 => k }
+    assert(dup.isEmpty, s"registry keys named by more than one typed member: $dup")
+    // the member → key bindings the README and quickstart rely on
+    val named = Seq(
+      c.text.quality -> "text_quality_score",
+      c.dedup.minhashPairs -> "dedup_minhash_pairs",
+      c.dedup.clusters -> "dedup_connected_components_v2",
+      c.vectors.ivfTopk -> "ann_ivf_topk",
+      c.datasetCard -> "pipeline_dataset_card",
+      c.quality.ruleViolations -> "dq_rule_violations",
+      c.packSequences -> "pipeline_pack_sequences",
+      c.tokenBudgetMix -> "pipeline_token_budget_mix",
+      c.dedup.shingleContainment -> "dedup_shingle_containment",
+      c.vectors.pagerankHubs -> "graph_pagerank_knn",
+      c.media.ingestBinary -> "source_binaryfile_ingest",
+      c.heavyHitters -> "agg_heavy_hitters",
+      c.evalHoldout -> "pipeline_eval_holdout",
+      c.vectors.graphExpandTopk -> "ann_graph_expand_topk",
+      c.vectors.kcoreFull -> "graph_kcore_full",
+      c.media.indexUpdate -> "index_update_mediasig")
+    val misnamed = named.collect { case (m, key) if m.key != key => s"${m.key} != $key" }
+    assert(misnamed.isEmpty, s"facade members bound to the wrong key: $misnamed")
+    // a member naming a key the registry lacks fails at declaration
+    val e = intercept[NoSuchElementException](Corpus(spark, sf).op("no_such_key"))
+    assert(e.getMessage == "no_such_key")
   }
 
   test("quickstart composition runs end-to-end and respects the dedup contract") {
@@ -61,13 +68,14 @@ class CorpusApiSpec extends SparkSpec {
     java.nio.file.Paths.get("src/test/resources/facade-escape-hatch.txt")
 
   test("facade coverage gate: every registry key is typed or consciously escape-hatched (VERDICT r13 #6)") {
-    // the PLANS.md-gate pattern applied to the API: `Corpus.typed` and the
-    // checked-in escape-hatch list must partition the registry EXACTLY, so
-    // a new operator fails the suite until it is triaged. Regenerate the
-    // escape list (after adding any new typed wrappers) with:
+    // the PLANS.md-gate pattern applied to the API: the typed members'
+    // keys and the checked-in escape-hatch list must partition the
+    // registry EXACTLY, so a new operator fails the suite until it is
+    // triaged. Regenerate the escape list (after adding any new typed
+    // members) with:
     //   GRAFT_REGEN_FACADE=1 sbt "testOnly graft.CorpusApiSpec"
     val registry = Queries.all.keySet
-    val typedKeys = c.typed.keySet
+    val typedKeys = c.typedOps.map(_.key).toSet
     val phantom = typedKeys -- registry
     assert(phantom.isEmpty, s"typed facade entries with no registry key: $phantom")
     if (sys.env.contains("GRAFT_REGEN_FACADE")) {
@@ -86,33 +94,8 @@ class CorpusApiSpec extends SparkSpec {
       val stale = (typedKeys ++ escape) -- registry
       assert(untriaged.isEmpty && stale.isEmpty,
         s"facade coverage drifted — untriaged new keys: $untriaged; stale rows: $stale. " +
-          "Add a typed wrapper + Corpus.typed entry, or regenerate: " +
+          "Add a typed `op` member to Corpus, or regenerate: " +
           "GRAFT_REGEN_FACADE=1 sbt 'testOnly graft.CorpusApiSpec'")
     }
-  }
-
-  test("every typed facade entry is the SAME computation as its registry key") {
-    // zero-drift proof for the whole coverage table. Plan-level
-    // sameResult decides it for free where it can; operators whose plans
-    // embed materialized lineage cuts (localCheckpoint creates a fresh
-    // RDD per construction, so two builds of the SAME query are never
-    // plan-equal) fall back to exact row equality — slower, but a
-    // stronger-than-schema proof that the facade serves the registry
-    // computation.
-    val rowChecked = scala.collection.mutable.ListBuffer.empty[String]
-    val bad = c.typed.toSeq.sortBy(_._1).filter { case (key, mk) =>
-      val facade = mk()
-      val reg = run(key)
-      if (facade.queryExecution.analyzed.sameResult(reg.queryExecution.analyzed))
-        false
-      else {
-        rowChecked += key
-        facade.schema != reg.schema ||
-          facade.exceptAll(reg).count() != 0 || reg.exceptAll(facade).count() != 0
-      }
-    }.map(_._1)
-    info(s"plan-identical: ${c.typed.size - rowChecked.size}; " +
-      s"row-compared (lineage-cut plans): ${rowChecked.size}")
-    assert(bad.isEmpty, s"typed facade entries that drifted from the registry: $bad")
   }
 }

@@ -90,7 +90,7 @@ class DedupStarSpec extends SparkSpec {
     cases.zipWithIndex.foreach { case (edges, i) =>
       val df = edges.toDF("a_id", "b_id")
       val (fused, fr) = Dedup.starComponents(df)
-      val (ref, rr) = Dedup.starComponentsReference(df)
+      val (ref, rr) = StarComponentsReference(df)
       val f = fused.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val g = ref.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(f == g, s"case $i: fused labels $f differ from reference $g")
