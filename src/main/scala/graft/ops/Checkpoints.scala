@@ -24,7 +24,13 @@ import org.apache.spark.sql.DataFrame
   * changes WHERE materialized rows live, never their values.
   *
   * Laziness is preserved: a lazy local cut maps to a lazy reliable
-  * checkpoint (materialization still rides the first consumer's job).
+  * checkpoint. "Lazy" defers less than the name says: under AQE, taking
+  * either cut executes the adaptive plan to get its RDD, which runs every
+  * shuffle and broadcast stage below the cut right away; only the final
+  * stage is deferred to the first consumer's job (Round11Spec counts the
+  * jobs). A loop of lazy cuts therefore still runs its stages round by
+  * round, during query construction — what a lazy local cut saves over
+  * an eager one is the separate materialization job.
   * Reliable checkpoint files accumulate under the configured directory
   * for the lifetime of the SparkContext (cleaned by
   * `spark.cleaner.referenceTracking.cleanCheckpoints` if enabled, or by

@@ -224,8 +224,10 @@ object Dedup {
       // constant-size; superseded checkpoint blocks are released by the
       // ContextCleaner once the previous round's DataFrame goes
       // unreferenced. LAZY (eager=false, VERDICT r7 #6): the certificate
-      // aggregate right below is the round's first consumer, so
-      // materialization rides the certificate job — ONE job per round.
+      // aggregate right below is the round's first consumer, so the cut's
+      // final stage rides the certificate job instead of a separate count
+      // job. The round's exchange stages still run when the cut is taken
+      // (AQE executes the plan to get the cut's RDD; see [[Checkpoints]]).
       // localCheckpoint by default; spark.graft.checkpointDir switches to
       // reliable checkpoint() for executor-loss durability (VERDICT r8 #4
       // — see [[Checkpoints]]).

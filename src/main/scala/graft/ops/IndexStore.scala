@@ -252,19 +252,44 @@ object IndexStore {
       } finally pool.shutdown()
     }
 
-  /** The parallel manifest: one count job per artifact, submitted
-    * concurrently — each count is a tiny parquet scan whose wall time is
-    * almost pure job-scheduling overhead, so N sequential counts cost
-    * N × the floor while one concurrent wave costs ~1 × .
+  /** The artifact manifest: (name, row count) per artifact, each count
+    * summed from the parquet footers of the artifact's written data files
+    * on the driver. It is still a read-back of what the build wrote, but
+    * it runs no Spark job: a `count()` job per artifact would be almost
+    * pure scheduling overhead at these sizes.
     */
   private def manifest(spark: SparkSession, dir: String,
       names: Seq[String]): Seq[(String, Long)] = {
-    val out = new Array[(String, Long)](names.size)
-    inParallel(names.zipWithIndex.map { case (n, i) =>
-      () => out(i) = (n, timed(s"count:$n")(
-        spark.read.parquet(s"$dir/$n").count()))
-    })
-    out.toSeq
+    val conf = spark.sparkContext.hadoopConfiguration
+    names.map(n => (n, timed(s"footers:$n")(footerRows(s"$dir/$n", conf))))
+  }
+
+  /** Total row count of a written parquet artifact directory, from the
+    * row-group metadata in its data files' footers.
+    */
+  private[graft] def footerRows(dir: String,
+      conf: org.apache.hadoop.conf.Configuration): Long = {
+    import scala.jdk.CollectionConverters._
+    dataFiles(dir).map { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+      finally r.close()
+    }.sum
+  }
+
+  /** The data files of a written parquet artifact directory: every entry
+    * but the `_`/`.`-prefixed bookkeeping files (`_SUCCESS`, `.crc`).
+    */
+  private def dataFiles(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.filterNot { f =>
+      val name = f.getFileName.toString
+      name.startsWith("_") || name.startsWith(".")
+    }.toList
+    finally s.close()
   }
 
   /** Link every data file of a published parquet artifact into `dstDir`
@@ -283,24 +308,18 @@ object IndexStore {
     */
   private def linkParts(srcDir: String, dstDir: String, tag: String): Unit =
     timed(s"link:${dstDir.substring(dstDir.lastIndexOf('/') + 1)}<-$tag") {
-      import scala.jdk.CollectionConverters._
-      val src = java.nio.file.Paths.get(srcDir)
       val dst = java.nio.file.Paths.get(dstDir)
       java.nio.file.Files.createDirectories(dst)
-      val s = java.nio.file.Files.list(src)
-      try s.iterator().asScala.toList.foreach { f =>
-        val name = f.getFileName.toString
-        if (!name.startsWith("_") && !name.startsWith(".")) {
-          val to = dst.resolve(s"$tag-$name")
-          try java.nio.file.Files.createLink(to, f)
-          catch {
-            case _: UnsupportedOperationException |
-                 _: java.nio.file.FileSystemException =>
-              java.nio.file.Files.copy(f, to,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          }
+      dataFiles(srcDir).foreach { f =>
+        val to = dst.resolve(s"$tag-${f.getFileName}")
+        try java.nio.file.Files.createLink(to, f)
+        catch {
+          case _: UnsupportedOperationException |
+               _: java.nio.file.FileSystemException =>
+            java.nio.file.Files.copy(f, to,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         }
-      } finally s.close()
+      }
     }
 
   /** Pack per-subvector codes into the 4-code serving word per vector —
@@ -315,19 +334,9 @@ object IndexStore {
     * O(1) size probe the update's broadcast-vs-repartition gate reads
     * (the lake-table analogue is the snapshot manifest's size column).
     */
-  private def dirBytes(dir: String): Long = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(p)) 0L
-    else {
-      val s = java.nio.file.Files.list(p)
-      try s.iterator().asScala
-        .filterNot(f => f.getFileName.toString.startsWith("_") ||
-          f.getFileName.toString.startsWith("."))
-        .map(java.nio.file.Files.size).sum
-      finally s.close()
-    }
-  }
+  private def dirBytes(dir: String): Long =
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir))) 0L
+    else dataFiles(dir).map(java.nio.file.Files.size).sum
 
   private def rm(p: java.nio.file.Path): Unit = {
     if (java.nio.file.Files.isDirectory(p)) {

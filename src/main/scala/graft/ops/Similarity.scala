@@ -941,8 +941,9 @@ object Similarity {
   }
 
   def graphKcoreFull(spark: SparkSession, sfDir: String): DataFrame = {
-    // lazy cut: the initial count below is the materializing job (one job
-    // instead of checkpoint-then-count; optimization round 17)
+    // lazy cut: the count below runs the final stage into the checkpoint
+    // (no separate checkpoint job; optimization round 17). The stages
+    // below the cut run when it is taken (see pageRankFull).
     var edges = mutualKnnFullEdges(spark, sfDir)
       .lineageCut(false)
     var prevEdges = edges.count()
@@ -954,9 +955,10 @@ object Similarity {
       rounds += 1
       val adj = edges.select(col("u").as("x"))
         .unionAll(edges.select(col("v").as("x")))
-      // lazy cut (optimization round 16): the survivor set's
-      // materialization rides the round's single job; both semi-join
-      // references still read the one cached copy
+      // lazy cut (optimization round 16): the degree aggregate's shuffle
+      // runs when the cut is taken (AQE, see pageRankFull); its final
+      // stage rides the round's count action, and both semi-join
+      // references read the one checkpointed copy
       val alive = adj.groupBy(col("x")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= KcoreFullK)
         .select(col("x"))
@@ -965,12 +967,13 @@ object Similarity {
         .join(alive.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
         .join(alive.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
         .lineageCut(false)
-      // ONE job per round (optimization round 17; was three — an eager
+      // ONE count action per round (optimization round 17; was an eager
       // edge checkpoint plus two scalar counts): the loop control needs
       // exactly two numbers, so read them in one action whose execution
-      // also materializes the round's lazy cuts — the edge count runs the
-      // survivor filter into its checkpoint, the alive count reads the
-      // cached survivor set.
+      // also runs the final stages of the round's lazy cuts — the edge
+      // count runs the survivor filter into its checkpoint, the alive
+      // count reads the checkpointed survivor set. The cuts' shuffle and
+      // broadcast stages have already run when each cut was taken.
       val counts = edges.agg(count(lit(1)).as("ne"))
         .crossJoin(alive.agg(count(lit(1)).as("na"))).head()
       nEdges = counts.getLong(0)
@@ -1043,11 +1046,13 @@ object Similarity {
         .select(col("vec_id"),
           round(lit(0.15) / col("n") + lit(0.85) * coalesce(col("c"), lit(0.0)), 12).as("r"))
         // LAZY cut (optimization round 17; was eager): each iteration's
-        // rank relation has exactly one consumer — the next iteration —
-        // so the whole 3-round chain rides the final top-20 action as ONE
-        // job with the intermediate checkpoints materializing along the
-        // way, instead of one driver-blocking job per iteration. Plan
-        // growth is still truncated at every round.
+        // rank relation has exactly one consumer — the next iteration.
+        // The cut truncates plan growth at every round, but it does NOT
+        // fold the chain into one job: under AQE, taking a lazy cut
+        // executes the adaptive plan to get its RDD, so each round's
+        // shuffle and broadcast stages run here, while the query is
+        // being built. Only each round's final stage waits for its
+        // consumer, which saves the eager cut's separate materialization job.
         .lineageCut(false)
     }
     ranks
@@ -1338,7 +1343,8 @@ object Similarity {
         .join(contrib, col("vec_id") === col("b_id"), "left")
         .select(col("vec_id"),
           round(lit(0.15) / col("n") + lit(0.85) * coalesce(col("c"), lit(0.0)), 12).as("r"))
-        // lazy: one job for the whole chain (see pageRankFull)
+        // lazy: the round's stages still run when the cut is taken
+        // (see pageRankFull)
         .lineageCut(false)
     }
     ranks
@@ -2533,11 +2539,11 @@ object Similarity {
     var dist = nodes.where(col("node") % 100 === 0)
       .select(col("node"), lit(0).as("dist"))
       .lineageCut(false)
-    // LAZY cuts (optimization round 17; were eager): the four frontier
-    // expansions ride the final histogram action as ONE job — each
-    // round's distance relation materializes into its checkpoint at first
-    // use inside that job instead of paying a driver-blocking job per
-    // round. Plan growth is still truncated per cut.
+    // LAZY cuts (optimization round 17; were eager): plan growth is
+    // truncated per cut, but the four frontier expansions are not one
+    // job — under AQE each cut runs its round's shuffle stages when it is
+    // taken; only the round's final stage waits for the next consumer
+    // (see pageRankFull).
     for (d <- 1 to 4) {
       val frontier = dist.where(col("dist") === d - 1)
       val next = ed
@@ -2644,10 +2650,11 @@ object Similarity {
     var a: DataFrame = null
     // LAZY cuts (optimization round 17; were eager): each half-round's
     // score relation has one consumer — the next half-round (the final
-    // a/h additionally feed the output join) — so all eight half-rounds
-    // ride the final top-20 action as ONE job with the intermediate
-    // checkpoints materializing along the way, instead of eight
-    // driver-blocking jobs. Plan growth is still truncated per cut.
+    // a/h additionally feed the output join). Plan growth is truncated
+    // per cut, but the eight half-rounds are not one job: under AQE each
+    // cut runs its half-round's shuffle and broadcast stages when it is
+    // taken, and only the final stage waits for the consumer (see
+    // pageRankFull).
     for (_ <- 1 to 4) {
       a = nodes.join(
         me.join(h.withColumnRenamed("node", "u"), Seq("u"))

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+
 /** Physical-plan quality gates (SURVEY §4, the 100 TB design contract):
   * pushdown, pruning, broadcast, top-k, partial aggregation. These are the
   * properties that decide whether a plan survives a 1000× scale-up, so they
@@ -601,5 +606,47 @@ class PlanSpec extends SparkSpec {
     val pruned = back.where("o_orderstatus = 'F'")
     val scan = pruned.queryExecution.executedPlan.toString
     assert(pruned.count() > 0 && scan.contains("PartitionFilters"))
+  }
+
+  /** Physical children, looking through the AQE wrappers (the adaptive
+    * root's current plan, query stages, reused exchanges).
+    */
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case other => other.children
+  }
+
+  /** Every broadcast subtree of `plan` that reaches a scan of `table`
+    * with no aggregate between the broadcast and the scan: a relation
+    * shipped through the driver at the table's own row count.
+    */
+  private def rawBroadcasts(plan: SparkPlan, table: String): Seq[SparkPlan] = {
+    def rawScan(p: SparkPlan): Boolean = p match {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.getName == s"$table.parquet")
+      case _: BaseAggregateExec => false
+      case o => kids(o).exists(rawScan)
+    }
+    def all(p: SparkPlan): Seq[SparkPlan] =
+      (if (p.isInstanceOf[BroadcastExchangeExec]) Seq(p) else Nil) ++
+        kids(p).flatMap(all)
+    all(plan).filter(b => kids(b).exists(rawScan))
+  }
+
+  test("W11/C6: q13 and join_semi broadcast orders only after aggregating them per customer") {
+    def finalPlan(df: org.apache.spark.sql.DataFrame): SparkPlan = {
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    for (key <- Seq("wk_q13_order_count_dist", "join_semi")) {
+      val plan = finalPlan(run(key))
+      assert(plan.toString.contains("orders.parquet"), s"$key must scan orders:\n$plan")
+      assert(rawBroadcasts(plan, "orders").isEmpty,
+        s"$key: a broadcast ships un-aggregated orders rows:\n$plan")
+    }
+    // the gate is not vacuous: the textbook join-then-count form fails it
+    assert(rawBroadcasts(finalPlan(Q13Reference(spark, sf)), "orders").nonEmpty)
   }
 }
