@@ -58,8 +58,6 @@ case class BlockSimHash(left: Expression, right: Expression)
 }
 
 object BlockSimHash {
-  private val HexChars = "0123456789abcdef".toCharArray
-
   /** Per-document block-SimHash; called from generated code. */
   def compute(text: UTF8String, nChars: Long): Long = {
     val nBlocks = ((nChars + 63L) / 64L).toInt
@@ -91,14 +89,6 @@ object BlockSimHash {
       k += 1
     }
     sig
-  }
-
-  /** Hex digit at 1-based position `j` of md5's 32-char rendering —
-    * shared with [[compute]]'s nibble logic; exposed for tests.
-    */
-  private[graft] def hexAt(digest: Array[Byte], j: Int): Char = {
-    val b = digest((j - 1) / 2) & 0xff
-    HexChars(if ((j - 1) % 2 == 0) b >>> 4 else b & 0xf)
   }
 
   def build(exprs: Seq[Expression]): Expression =

@@ -430,39 +430,6 @@ object Similarity {
     * vertices at fixed k, the property that keeps this computable at
     * 100 TB.
     */
-  /** Directed k-NN edge list (a_id → b_id), CELL-PRUNED: the shared graph
-    * builder for the triangle census (M42), semantic-dedup clustering
-    * (M44), PageRank (M51), neighborhood Jaccard (M54) and assortativity
-    * (M56). Round 5 built this as an all-pairs non-equi self-join — O(n²)
-    * dot products, the one scale-killer the judge flagged across all five
-    * consumers. This build is the IVF shape instead (VERDICT r5 #5):
-    *
-    *   1. coarse quantizer: 10 per-label centroids (6-dp rounded — the
-    *      ann_ivf_topk quantizer, built from the same bounded set);
-    *   2. routing table: every vector's `nprobe` nearest cells, ranked by
-    *      centroid dot with an asc(cell) tiebreak — rank 1 is the cell the
-    *      vector is ASSIGNED to (inverted list), ranks ≤ nprobe are the
-    *      cells it PROBES as a query. One corpus pass, materialized once
-    *      (the index-build artifact — ids only, no embeddings);
-    *   3. candidates: probe rows join assigned rows ON THE CELL KEY — a
-    *      keyed equi-join, shuffle-partitioned by cell, never a cross
-    *      join. Work is Σ_cell |probe∩cell|·|assigned∩cell|; cells grow
-    *      with the corpus (√n rule) so the candidate count stays ~n·√n,
-    *      not n². The exact dot re-rank (graft_dot, codegen'd) then cuts
-    *      top-k per query with a (dot desc, b_id) total order.
-    *
-    * Neighbors are approximate-by-design (recall < 1, like ann_ivf_topk);
-    * the oracle replicates the algorithm, so results still hash-match.
-    * Input must carry (vec_id, embedding, label).
-    */
-  private[graft] def knnBucketed(e: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("dot"), asc("b_id"))
-    knnCandidates(e, nprobe)
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"))
-  }
-
   /** The STANDING kNN candidate relation (a_id, b_id, dot) over the
     * bounded graph slice, read from [[IndexStore]] (VERDICT r8 #2): six
     * graph/cluster queries each re-ran the [[knnCandidates]] build —
@@ -473,8 +440,8 @@ object Similarity {
     IndexStore.read(spark, sfDir, "knn_candidates")
 
   /** Directed k-NN edge list (a_id → b_id) cut from the standing candidate
-    * relation — [[knnBucketed]] served from the store: same rank cut
-    * ((dot desc, b_id) total order), same rows, no rebuild.
+    * relation: a top-k cut of [[knnCandidates]] ((dot desc, b_id) total
+    * order) served from the store, no rebuild.
     */
   private[graft] def knnEdgesStored(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
     val wTop = Window.partitionBy(col("a_id")).orderBy(desc("dot"), asc("b_id"))
@@ -541,19 +508,12 @@ object Similarity {
     * broadcast ranking, the same shape as the argmax pass. The artifact
     * this builds is the one the whole graph family consumes, so the n·√n
     * dot pass runs once per corpus version, not once per analytic.
-    */
-  private[graft] def knnCandidatesFull(e: DataFrame, assigned: DataFrame,
-      cent: DataFrame): DataFrame = {
-    val (probes, routed, m) = knnFullSides(e, assigned, cent)
-    knnKeyedDots(e, probes, routed, m)
-      .select(col("a_id"), col("b_id"), col("dot"))
-  }
-
-  /** The probe side, membership side, and sub-bucket count of the
-    * full-corpus candidate join — the routing is computed ONCE and
-    * lineage-cut because the probe relation, the membership relation, and
-    * the boundary relation all read it. Factored out (round 14) so the
-    * shortlist builder and the raw-relation form share one definition.
+    *
+    * This returns the join's probe side, membership side, and sub-bucket
+    * count; [[knnKeyedDots]] scores the join and [[knnShortlistFull]]
+    * persists its top-k cut. The routing is computed ONCE and lineage-cut
+    * because the probe relation, the membership relation, and the
+    * boundary relation all read it.
     */
   private[graft] def knnFullSides(e: DataFrame, assigned: DataFrame,
       cent: DataFrame): (DataFrame, DataFrame, Long) = {
@@ -568,8 +528,9 @@ object Similarity {
   /** The KEYED candidate relation (cell, bucket, a_id, b_id, dot): probe
     * centers widened ±W, clipped to the routing's [0, m) bucket domain,
     * both embeddings attached, equi-joined on the composite (cell, bucket)
-    * key, scored with the codegen'd exact dot. Factored out of
-    * [[knnCandidatesFull]] (round 14) with two scale fixes:
+    * key, scored with the codegen'd exact dot. Factored out of the raw
+    * full-corpus candidate relation (round 14; see [[knnFullSides]]) with
+    * two scale fixes:
     *
     *   - the CLIP: an exploded probe row whose bucket falls outside
     *     [0, m) can never join (the routing's buckets are exactly 0..m−1),
@@ -659,9 +620,9 @@ object Similarity {
 
   /** The persisted form of the full-corpus candidate relation: the
     * top-[[IndexStore.KnnFullTopK]]-per-vector shortlist, built with the
-    * pre-cut pipeline above — row-identical to cutting the raw
-    * [[knnCandidatesFull]] with one global window (Round14Spec pins the
-    * equivalence), at a fraction of the shuffle volume.
+    * pre-cut pipeline above — row-identical to cutting the raw candidate
+    * relation with one global window (Round14Spec pins the equivalence),
+    * at a fraction of the shuffle volume.
     */
   private[graft] def knnShortlistFull(e: DataFrame, assigned: DataFrame,
       cent: DataFrame, k: Int): DataFrame = {
@@ -672,7 +633,7 @@ object Similarity {
   /** The full-corpus routing table (vec_id, cell, d, bucket): each cell's
     * members ranked (d desc, vec_id asc) and cut into m = ⌈√n/10⌉
     * equal-depth sub-buckets via exact integer arithmetic — step 2 of
-    * [[knnCandidatesFull]], factored out (round 12) because incremental
+    * [[knnFullSides]], factored out (round 12) because incremental
     * maintenance needs the BASE version's routing as a standing artifact
     * (the delta update maps new vectors into it instead of re-ranking the
     * corpus). One keyed window over the inverted lists; the single
@@ -783,7 +744,7 @@ object Similarity {
   }
 
   /** The SKINNY candidate pair relation (a_id, b_id) from probe centers ×
-    * (cell, bucket) membership — the [[knnCandidatesFull]] join with the
+    * (cell, bucket) membership — the [[knnKeyedDots]] join with the
     * embedding attachment deferred (round 12, for the incremental update:
     * the delta band's pair relation is delta-sized, so attaching
     * embeddings to the PAIRS costs |delta band| joins instead of a
@@ -828,7 +789,7 @@ object Similarity {
   }
 
   /** Attach both embeddings to a skinny pair relation and score it with
-    * the codegen'd exact dot — IEEE-identical to the [[knnCandidatesFull]]
+    * the codegen'd exact dot — IEEE-identical to the [[knnKeyedDots]]
     * scoring (same graft_dot kernel on the same float arrays).
     */
   private[graft] def dotPairs(e: DataFrame, pairs: DataFrame): DataFrame =
@@ -853,7 +814,7 @@ object Similarity {
     * full-corpus MUTUAL kNN graph (VERDICT r9 #6 + r10 #1): the first
     * graph analytic whose vertex set is the WHOLE embedding corpus, not
     * the bounded 500-vector slice. Edges = the 8-NN cut of the standing
-    * [[knnCandidatesFull]] artifact kept only when RECIPROCATED (b is in
+    * `knn_candidates_full` artifact kept only when RECIPROCATED (b is in
     * a's top-8 AND a is in b's top-8) — the mutual-kNN graph of the
     * near-dup clustering literature. Mutuality matters for the peel: the
     * plain symmetrized 8-NN graph has min degree 8 by construction, so
@@ -1062,7 +1023,7 @@ object Similarity {
   }
 
   /** ann_recall_full (round 11) — the eval harness for the full-corpus
-    * candidate artifact: recall@8 of [[knnCandidatesFull]]'s sub-bucket
+    * candidate artifact: recall@8 of [[knnFullSides]]'s sub-bucket
     * scheme against exact brute-force ground truth, per query vector
     * (vec_id < 10 sample) plus the artifact's per-query candidate count.
     * The M37 (`ann_recall_at_k`) discipline applied to the new index: an
@@ -1214,10 +1175,35 @@ object Similarity {
       .limit(15)
   }
 
-  /** The candidate stage of [[knnBucketed]] — cell-pruned (a_id, b_id,
-    * dot) triples BEFORE the per-query rank cut, factored out so variant
-    * consumers (M67 hard-negative mining) can apply their own residual
-    * filter and cut without rebuilding the routing table.
+  /** The cell-pruned kNN candidate relation (a_id, b_id, dot), before
+    * any rank cut: the build behind the standing `knn_candidates`
+    * artifact, whose top-k cut ([[knnEdgesStored]]) is the directed k-NN
+    * edge list of the triangle census (M42), semantic-dedup clustering
+    * (M44), PageRank (M51), neighborhood Jaccard (M54) and assortativity
+    * (M56); variant consumers (M67 hard-negative mining) apply their own
+    * residual filter and cut without rebuilding the routing table.
+    * Round 5 built this as an all-pairs non-equi self-join — O(n²)
+    * dot products, the one scale-killer the judge flagged across all five
+    * consumers. This build is the IVF shape instead (VERDICT r5 #5):
+    *
+    *   1. coarse quantizer: 10 per-label centroids (6-dp rounded — the
+    *      ann_ivf_topk quantizer, built from the same bounded set);
+    *   2. routing table: every vector's `nprobe` nearest cells, ranked by
+    *      centroid dot with an asc(cell) tiebreak — rank 1 is the cell the
+    *      vector is ASSIGNED to (inverted list), ranks ≤ nprobe are the
+    *      cells it PROBES as a query. One corpus pass, materialized once
+    *      (the index-build artifact — ids only, no embeddings);
+    *   3. candidates: probe rows join assigned rows ON THE CELL KEY — a
+    *      keyed equi-join, shuffle-partitioned by cell, never a cross
+    *      join. Work is Σ_cell |probe∩cell|·|assigned∩cell|; cells grow
+    *      with the corpus (√n rule) so the candidate count stays ~n·√n,
+    *      not n². The exact dot (graft_dot, codegen'd) scores each
+    *      candidate; consumers cut top-k per query with a (dot desc,
+    *      b_id) total order.
+    *
+    * Neighbors are approximate-by-design (recall < 1, like ann_ivf_topk);
+    * the oracle replicates the algorithm, so results still hash-match.
+    * Input must carry (vec_id, embedding, label).
     */
   private[graft] def knnCandidates(e: DataFrame, nprobe: Int): DataFrame = {
     val cent = e.select(col("label"), posexplode(col("embedding")).as(Seq("dim", "comp")))

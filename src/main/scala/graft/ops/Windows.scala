@@ -75,27 +75,12 @@ object Windows {
     * computes through [[GlobalRank]]'s two-pass range-partitioned rank —
     * the plan a user should copy — because at 100 TB the naive
     * `Window.orderBy(...)` global window is a one-partition sort. The
-    * naive form survives only as [[ntileGlobalWindowBaseline]], the
-    * spec-side equality cross-check (PlanSpec proves the two forms
-    * row-identical at test SF).
+    * naive form survives only in the test sources
+    * (`NtileReference.ntileGlobalWindowBaseline`), the spec-side equality
+    * cross-check (PlanSpec proves the two forms row-identical at test SF).
     */
   def winNtilePct(spark: SparkSession, sfDir: String): DataFrame =
     winNtileScalable(spark, sfDir)
-
-  /** The textbook one-partition global-window form of F5 — SPEC-ONLY
-    * baseline (not a registry entry since round 7): semantically the
-    * definition of quartile/percent_rank/cume_dist, physically the shape
-    * that cannot scale. PlanSpec cross-checks [[winNtilePct]] against it.
-    */
-  private[graft] def ntileGlobalWindowBaseline(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.orderBy(col("c_acctbal"), col("c_custkey"))
-    Tables.customer(spark, sfDir)
-      .select(col("c_custkey"), col("c_acctbal"))
-      .withColumn("quartile", ntile(4).over(w))
-      .withColumn("pct_rank", round(percent_rank().over(w), 6))
-      .withColumn("cume", round(cume_dist().over(w), 6))
-      .orderBy(col("c_custkey"))
-  }
 
   /** F5 v2 — the SAME quartile/percent_rank/cume_dist semantics as
     * win_ntile_pct, but computed without a single-partition global window —

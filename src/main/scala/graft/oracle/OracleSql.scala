@@ -62,7 +62,7 @@ object OracleSql {
 
 
   /** Shared cell-pruned k-NN CTE chain for the graph family (M42/M44/M51/
-    * M54/M56), mirroring Similarity.knnBucketed exactly: 10 per-label 6-dp
+    * M54/M56), mirroring Similarity.knnCandidates exactly: 10 per-label 6-dp
     * centroids over the bounded set, nprobe=2 routing (crn 1 = assigned
     * cell, crn <= 2 = probed cells), candidates from the cell equi-join,
     * exact-dot re-rank. Yields `rk(a_id, b_id, rn)`; consumers cut rn <= k.
@@ -84,7 +84,7 @@ object OracleSql {
 
   /** FULL-corpus kNN candidate CTE chain (round 11; second-cell probing
     * round 12; third cell round 13 via the interpolated [[PC]]), mirroring
-    * Similarity.knnCandidatesFull exactly: per-label
+    * Similarity.knnFullSides exactly: per-label
     * centroids over the WHOLE corpus (same 2^20 fixed-point protocol),
     * argmax-cell inverted lists with the winning dot `d`, m = ⌈√n/10⌉
     * equal-depth sub-buckets per cell along the (d desc, vec_id) ranking

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Stage-level profile of one registry key (optimization round 17): runs
   * the key once under the exact bench session config with a listener that
@@ -8,7 +9,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * executor CPU time, and shuffle read/write bytes. Diagnostic main, not
   * registered in Queries — the numbers say WHICH stage of a multi-job
   * operator owns the wall clock before any rewrite is attempted (guide
-  * §1.2), which the per-key bench totals cannot.
+  * §1.2), which the per-key bench totals cannot. Jobs that carry a Spark
+  * job description are also summed per description: the index store
+  * names each artifact write that way, so this gives its write time.
   *
   * Run: sbt "runMain graft.tools.StageProfile <sfDir> <key> [key ...]"
   */
@@ -20,7 +23,16 @@ object StageProfile {
 
     val stages =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Int, Long, Long, Long, Long)]
+    val described = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]
+    val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(d => jobStarts.put(e.jobId, (d, e.time)))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobStarts.remove(e.jobId)).foreach { case (d, t0) =>
+          described.add((d, e.time - t0))
+        }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         val m = si.taskMetrics
@@ -36,6 +48,7 @@ object StageProfile {
 
     keys.foreach { k =>
       stages.clear()
+      described.clear()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(k)(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
@@ -51,6 +64,11 @@ object StageProfile {
           f"task-time=${rt / 1e3}%6.2f s cpu=${cpu / 1e3}%6.2f s " +
           f"shufR=${sr / 1048576.0}%7.2f MB shufW=${sw / 1048576.0}%7.2f MB  $name")
       }
+      described.asScala.toSeq.groupBy(_._1).toSeq.sortBy(-_._2.map(_._2).sum)
+        .foreach { case (d, js) =>
+          println(f"[stageprofile]   described jobs=${js.size}%-3d " +
+            f"job-wall=${js.map(_._2).sum / 1e3}%6.2f s  $d")
+        }
     }
     spark.stop()
   }

@@ -1,0 +1,107 @@
+package graft
+
+import graft.ops.IndexStore
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** The standing-store lifecycle, checked on all six stores the four
+  * `index_*` registry keys build: a store is a fingerprint-keyed
+  * directory under the store root, complete once its marker holds its
+  * key, and published by an atomic swap. A complete store is served as it
+  * is: ensuring it again runs no Spark job and does not rewrite it.
+  */
+class IndexLifecycleSpec extends SparkSpec {
+
+  private def marker(dir: String): Path = Paths.get(dir, "_GRAFT_INDEX_OK")
+
+  /** Spark jobs started while `body` runs. The listener bus delivers
+    * events in order, so once the sentinel job's start is seen every job
+    * `body` started has been counted.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-lifecycle-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`sentinel`) => sentinelSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "ensure probe")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener bus sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the sentinel job never reached the listener")
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def leftovers(dirs: Seq[String]): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(dirs.head).getParent
+    val names = dirs.map(d => Paths.get(d).getFileName.toString)
+    if (!Files.isDirectory(root)) Set.empty
+    else {
+      val s = Files.list(root)
+      try s.iterator().asScala.map(_.getFileName.toString).filter { n =>
+        names.exists(d => n.startsWith(s"$d.build-") || n.startsWith(s"$d.trash-"))
+      }.toSet
+      finally s.close()
+    }
+  }
+
+  test("index stores: six keyed markers, a second ensure is free, no temp or trash left") {
+    val stores = Seq(
+      "vecsearch" -> IndexStore.indexDir(sf),
+      "media" -> IndexStore.mediaDir(sf),
+      "mediabase" -> IndexStore.mediaBaseDir(sf),
+      "mediaupd" -> IndexStore.mediaUpdDir(sf),
+      "vecbase" -> IndexStore.vecBaseDir(sf),
+      "vecupd" -> IndexStore.vecUpdDir(sf))
+    val dirs = stores.map(_._2)
+    // a crash in an earlier JVM can leave siblings behind; only this
+    // spec's own builds are under test
+    val before = leftovers(dirs)
+    Seq("index_build_vecsearch", "index_build_mediasig",
+        "index_update_mediasig", "index_update_vecsearch")
+      .foreach(k => assert(run(k).collect().nonEmpty, k))
+
+    // each store's directory name ends in its key, and its marker holds it
+    assert(Paths.get(IndexStore.indexDir(sf)).getFileName.toString ===
+      IndexStore.corpusKey(sf))
+    assert(IndexStore.mediaDir(sf).endsWith(s"_${IndexStore.mediaKey(sf)}"))
+    stores.foreach { case (name, dir) =>
+      val leaf = Paths.get(dir).getFileName.toString
+      val key = leaf.substring(leaf.lastIndexOf('_') + 1)
+      assert(key.matches("[0-9a-f]{16}"), name)
+      assert(Files.isRegularFile(marker(dir)), name)
+      assert(Files.readString(marker(dir)) === key, name)
+    }
+    assert(dirs.distinct.size === dirs.size)
+
+    val ensured: Seq[(String, String, () => String)] = Seq(
+      ("vecsearch", IndexStore.indexDir(sf), () => IndexStore.ensure(spark, sf)),
+      ("media", IndexStore.mediaDir(sf), () => IndexStore.ensureMedia(spark, sf)),
+      ("mediabase", IndexStore.mediaBaseDir(sf),
+        () => IndexStore.ensureMediaBase(spark, sf)),
+      ("vecbase", IndexStore.vecBaseDir(sf),
+        () => IndexStore.ensureVecBase(spark, sf)))
+    ensured.foreach { case (name, dir, ensure) =>
+      val mtime = Files.getLastModifiedTime(marker(dir))
+      var got = ""
+      assert(jobsDuring { got = ensure() } === 0, name)
+      assert(got === dir, name)
+      assert(Files.getLastModifiedTime(marker(dir)) === mtime, name)
+    }
+
+    assert(leftovers(dirs) -- before === Set.empty[String])
+  }
+}

@@ -113,7 +113,7 @@ class PlanSpec extends SparkSpec {
     // exact agreement with the textbook single-partition global-window
     // baseline (spec-only since round 7)
     val results = run("win_ntile_pct").collect()
-    val global = ops.Windows.ntileGlobalWindowBaseline(spark, sf).collect()
+    val global = NtileReference.ntileGlobalWindowBaseline(spark, sf).collect()
     assert(results.length == global.length)
     results.zip(global).foreach { case (a, b) => assert(a == b, s"$a vs $b") }
   }
@@ -279,7 +279,8 @@ class PlanSpec extends SparkSpec {
 
 
   test("M42-family: bucketed kNN builder joins on the cell key, never all-pairs") {
-    // The graph family (M42/M44/M51/M54/M56) shares Similarity.knnBucketed.
+    // The graph family (M42/M44/M51/M54/M56) reads its edges from the
+    // store's `knn_candidates` artifact, built by Similarity.knnCandidates.
     // Round 5's base was an all-pairs non-equi self-join (O(n^2) dots at any
     // corpus size); this gate pins the rebased build: candidates must come
     // from the cell equi-join, with no nested-loop or cartesian anywhere in
@@ -290,7 +291,7 @@ class PlanSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).where(col("vec_id") < 500)
       .select(col("vec_id"), col("embedding"), col("label"))
     graft.functions.DotProduct.register(spark)
-    val knn = graft.ops.Similarity.knnBucketed(e, 5)
+    val knn = KnnReference.knnBucketed(e, 5)
     val plan = knn.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       s"candidate path must not nested-loop:\n$plan")

@@ -15,7 +15,7 @@ class Round11Spec extends SparkSpec {
   test("knnCandidatesFull: non-empty, self-pair-free, no duplicate directed pairs, and second-cell probing reaches across cells") {
     graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sf)
-    val c = ops.Similarity.knnCandidatesFull(
+    val c = KnnReference.knnCandidatesFull(
         e, store("ivf_assigned"), store("ivf_centroids"))
       .select("a_id", "b_id").cache()
     try {
@@ -41,7 +41,7 @@ class Round11Spec extends SparkSpec {
     val assigned = store("ivf_assigned")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("a_id")).orderBy(col("dot").desc, col("b_id").asc)
-    val recomputed = ops.Similarity.knnCandidatesFull(
+    val recomputed = KnnReference.knnCandidatesFull(
         e, assigned, store("ivf_centroids"))
       .withColumn("rn", org.apache.spark.sql.functions.row_number().over(w))
       .where(col("rn") <= ops.IndexStore.KnnFullTopK)

@@ -20,7 +20,7 @@ class Round14Spec extends SparkSpec {
     val k = ops.IndexStore.KnnFullTopK
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("a_id")).orderBy(col("dot").desc, col("b_id").asc)
-    val reference = ops.Similarity.knnCandidatesFull(e, assigned, cent)
+    val reference = KnnReference.knnCandidatesFull(e, assigned, cent)
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= k)
       .drop("rn")

@@ -116,7 +116,7 @@ class Round9Spec extends SparkSpec {
     graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sf).where(col("vec_id") < 500)
       .select(col("vec_id"), col("embedding"), col("label"))
-    val inline = ops.Similarity.knnBucketed(e, 5)
+    val inline = KnnReference.knnBucketed(e, 5)
       .orderBy("a_id", "b_id").collect().toSeq
     val stored = ops.Similarity.knnEdgesStored(spark, sf, 5)
       .orderBy("a_id", "b_id").collect().toSeq
