@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -90,12 +89,4 @@ object BlockSimHash {
     }
     sig
   }
-
-  def build(exprs: Seq[Expression]): Expression =
-    BlockSimHash(exprs(0), exprs(1))
-
-  /** SQL registration: `graft_block_simhash(text, n_chars)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_block_simhash", build, "built-in")
 }

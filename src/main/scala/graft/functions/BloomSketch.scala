@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -70,18 +69,4 @@ case class BloomSketch(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BloomSketch =
     copy(child = c.head)
-}
-
-object BloomSketch {
-  /** Registers `graft_bloom(col, expectedItems, fpp)` for SQL/expr use.
-    * expectedItems and fpp must be foldable literals.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom",
-      exprs => BloomSketch(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].longValue(),
-        exprs(2).eval(null).asInstanceOf[Number].doubleValue()),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -60,11 +59,4 @@ object CharPairs {
       new GenericArrayData(out)
     }
   }
-
-  def build(exprs: Seq[Expression]): Expression = CharPairs(exprs.head)
-
-  /** SQL registration: `graft_char_pairs(w)` over a string column. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_pairs", build, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -91,9 +90,4 @@ case class DotProduct(left: Expression, right: Expression)
 
 object DotProduct {
   def build(exprs: Seq[Expression]): Expression = DotProduct(exprs(0), exprs(1))
-
-  /** SQL registration: `graft_dot(a, b)` over two array<float> columns. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", build, "built-in")
 }

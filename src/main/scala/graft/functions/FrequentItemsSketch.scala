@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -66,8 +65,8 @@ case class FrequentItemsSketch(
   type Buf = java.util.HashMap[String, java.lang.Long]
 
   override def children: Seq[Expression] = Seq(child)
-  // update() casts with asInstanceOf, so misuse through the registered SQL
-  // function must fail at ANALYSIS with a clear type error (ADVICE r3
+  // update() casts with asInstanceOf, so misuse through the `freqItems`
+  // builder must fail at ANALYSIS with a clear type error (ADVICE r3
   // protocol; ExpectsInputTypes is private[sql] in Spark 4).
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -189,19 +188,4 @@ object FrequentItemsSketch {
   /** Sketch capacity: error ≤ n/257 — 4× finer than the n/64 report
     * threshold the E27/E28 queries certify against. */
   val DefaultK = 256
-
-  /** Registers `graft_freq_items(item)` (k=256). Arity is validated here
-    * — wrong argument counts must fail at analysis with a clear message
-    * (the ADVICE r3 protocol checkInputDataTypes applies to types), not
-    * crash with IndexOutOfBounds or silently drop extra arguments.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq_items",
-      exprs => {
-        if (exprs.length != 1) throw new IllegalArgumentException(
-          s"graft_freq_items requires exactly 1 argument (the STRING item), got ${exprs.length}")
-        FrequentItemsSketch(exprs.head, DefaultK)
-      },
-      "built-in")
 }

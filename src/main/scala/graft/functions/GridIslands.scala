@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -123,11 +122,4 @@ object GridIslands {
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](nIslands, nKept, bestSize, bestPx))
   }
-
-  def build(exprs: Seq[Expression]): Expression = GridIslands(exprs.head)
-
-  /** SQL registration: `graft_grid_islands(kept)` over array<boolean>. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_grid_islands", build, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -34,17 +33,13 @@ case class LogisticScore(child: Expression, mu: Double, sigma: Double)
 }
 
 object LogisticScore {
-  /** Builder used by both registration paths: input coerced to double
+  /** Builder shared by the `logistic` column and the `graft_logistic`
+    * SQL extension: input coerced to double
     * (AbstractDataType/ExpectsInputTypes are private[sql] in Spark 4, so
     * coercion is explicit here instead).
     */
   def build(exprs: Seq[Expression]): Expression =
     LogisticScore(Cast(exprs.head, DoubleType), 100000.0, 50000.0)
-
-  /** SQL registration: `graft_logistic(x)` with the contract μ/σ. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_logistic", build, "built-in")
 }
 
 /** Session extension wiring (SparkSessionExtensions) so a user can opt in

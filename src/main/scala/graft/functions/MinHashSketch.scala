@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -142,11 +141,4 @@ case class MinHashSketch(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): MinHashSketch =
     copy(child = c.head)
-}
-
-object MinHashSketch {
-  /** Registers `graft_minhash(col)` (k=4) for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashSketch(exprs.head, 4), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -77,11 +76,4 @@ object NormalizeText {
     }
     UTF8String.fromBytes(out, 0, o)
   }
-
-  def build(exprs: Seq[Expression]): Expression = NormalizeText(exprs.head)
-
-  /** SQL registration: `graft_norm_text(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_norm_text", build, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -39,11 +38,4 @@ case class ShingleGenerator(child: Expression, n: Int)
   override def prettyName: String = "graft_shingles"
   override protected def withNewChildInternal(c: Expression): ShingleGenerator =
     copy(child = c)
-}
-
-object ShingleGenerator {
-  /** Registers `graft_shingles(text)` (n=3) as a generator function. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => ShingleGenerator(exprs.head, 3), "built-in")
 }

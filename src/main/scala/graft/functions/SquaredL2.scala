@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -87,13 +86,4 @@ case class SquaredL2(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "graft_l2sq"
-}
-
-object SquaredL2 {
-  def build(exprs: Seq[Expression]): Expression = SquaredL2(exprs(0), exprs(1))
-
-  /** SQL registration: `graft_l2sq(a, b)` over two array<float|double> columns. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_l2sq", build, "built-in")
 }

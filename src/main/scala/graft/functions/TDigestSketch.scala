@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -165,10 +164,4 @@ object TDigestSketch {
       means(size - 1)
     }
   }
-
-  /** Registers `graft_tdigest(col)` → [q25, q50, q90] for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tdigest", exprs => TDigestSketch(exprs.head, Seq(0.25, 0.5, 0.9)),
-      "built-in")
 }

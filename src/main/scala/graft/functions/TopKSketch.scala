@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -38,7 +37,7 @@ case class TopKSketch(
 
   override def children: Seq[Expression] = Seq(score, key)
   // update() casts with asInstanceOf, so misuse (decimal/int args via the
-  // registered SQL function) must fail at ANALYSIS with a clear type error,
+  // `topk` builder) must fail at ANALYSIS with a clear type error,
   // not as a runtime ClassCastException (ADVICE r3). ExpectsInputTypes is
   // private[sql] in Spark 4 (see LogisticScore), so the check is direct.
   override def checkInputDataTypes(): TypeCheckResult =
@@ -127,11 +126,4 @@ case class TopKSketch(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TopKSketch =
     copy(score = c(0), key = c(1))
-}
-
-object TopKSketch {
-  /** Registers `graft_topk(score, key)` (k=2, matching the G3 contract). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", exprs => TopKSketch(exprs(0), exprs(1), 2), "built-in")
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native codegen'd bit-interleave for Z-ORDER (Morton) data layout:
@@ -43,12 +42,4 @@ object ZOrder16 {
     }
     r
   }
-
-  def build(exprs: Seq[Expression]): Expression =
-    ZOrder16(Cast(exprs(0), LongType), Cast(exprs(1), LongType))
-
-  /** SQL registration: `graft_zorder16(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zorder16", build, "built-in")
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{freqItems, tdigest}
 import graft.ops.Checkpoints.CutOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -173,10 +174,9 @@ object Aggregates {
     * unit-tested within 2% of the exact percentiles.
     */
   def aggTdigest(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.TDigestSketch.register(spark)
     Tables.lineitem(spark, sfDir)
       .groupBy(col("l_returnflag"))
-      .agg(expr("graft_tdigest(l_extendedprice)").as("qs"),
+      .agg(tdigest(col("l_extendedprice")).as("qs"),
         count(lit(1)).as("n"))
       .select(col("l_returnflag"),
         round(element_at(col("qs"), 1), 2).as("q25_price"),
@@ -1010,7 +1010,6 @@ object Aggregates {
     * cuts at a non-trivial rank at every SF.
     */
   def aggHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.FrequentItemsSketch.register(spark)
     val items = Tables.events(spark, sfDir)
       .where(col("value").isNotNull)
       .select(floor(col("value")).cast("string").as("item"))
@@ -1019,7 +1018,7 @@ object Aggregates {
     // row carries the total — pass 2 is then a single broadcast join
     // that provides the candidate cut AND the report denominator
     val candTot = items
-      .agg(expr("graft_freq_items(item)").as("cands"), count(lit(1)).as("total"))
+      .agg(freqItems(col("item")).as("cands"), count(lit(1)).as("total"))
       .select(col("total"), explode(col("cands")).as("item"))
     items.join(broadcast(candTot), Seq("item"))
       .groupBy(col("item"), col("total")).agg(count(lit(1)).as("n"))
@@ -1040,14 +1039,13 @@ object Aggregates {
     * partition-order-invariant output.
     */
   def aggHeavyHittersGrouped(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.FrequentItemsSketch.register(spark)
     val items = Tables.events(spark, sfDir)
       .where(col("value").isNotNull)
       .select(col("event_type"), floor(col("value")).cast("string").as("item"))
     // as in E27: sketch + per-group total in ONE grouped pass, exploded
     // so each (group, candidate) row carries its group's denominator
     val candTot = items.groupBy(col("event_type"))
-      .agg(expr("graft_freq_items(item)").as("cands"), count(lit(1)).as("total"))
+      .agg(freqItems(col("item")).as("cands"), count(lit(1)).as("total"))
       .select(col("event_type"), col("total"), explode(col("cands")).as("item"))
     items.join(broadcast(candTot), Seq("event_type", "item"))
       .groupBy(col("event_type"), col("item"), col("total"))

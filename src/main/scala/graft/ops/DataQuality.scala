@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.normText
 import graft.ops.Checkpoints.CutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -276,14 +277,13 @@ object DataQuality {
     * keep_frac's division is the only float op (round 6, E17 protocol).
     */
   def observeMetrics(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.NormalizeText.register(spark)
     import org.apache.spark.sql.Observation
     val ingest = Observation("ingest")
     val kept = Observation("kept")
     val pass = Tables.documents(spark, sfDir)
       .observe(ingest, count(lit(1)).as("n_seen"),
         sum(col("n_chars")).as("chars_seen"))
-      .withColumn("norm", expr("graft_norm_text(text)"))
+      .withColumn("norm", normText(col("text")))
       .withColumn("n_tok", size(split(col("norm"), " ")))
       .where(col("n_tok") >= 10)
       .observe(kept, count(lit(1)).as("n_kept"),

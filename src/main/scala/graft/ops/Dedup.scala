@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{bloom, dot, minhash}
 import graft.ops.Checkpoints.CutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -64,10 +65,9 @@ object Dedup {
     * same SQL as dedup_minhash_sig — results are bit-identical.
     */
   def minhashSigAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.MinHashSketch.register(spark)
     shingles(spark, sfDir, Int.MaxValue)
       .groupBy(col("doc_id"))
-      .agg(expr("graft_minhash(s)").as("sigs"))
+      .agg(minhash(col("s")).as("sigs"))
       .select(col("doc_id"),
         col("sigs").getItem(0).as("s0"), col("sigs").getItem(1).as("s1"),
         col("sigs").getItem(2).as("s2"), col("sigs").getItem(3).as("s3"))
@@ -431,13 +431,12 @@ object Dedup {
     * dot, unit-norm corpus): the verification stage of embedding near-dup.
     */
   def embeddingTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir).where(col("vec_id") < 300)
     val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
     val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
     a.join(b, col("a_id") < col("b_id"))
       // codegen'd kernel; IEEE-identical to the HOF form (see DotProduct)
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
       .orderBy(desc("sim_raw"), asc("a_id"), asc("b_id"))
       .limit(20)
       .select(col("a_id"), col("b_id"),
@@ -581,7 +580,6 @@ object Dedup {
     */
   private[graft] def bloomPartitionedProbe(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.BloomSketch.register(spark)
     val fpCol = md5(concat_ws(" ", slice(split(col("text"), " "), 1, 8)).cast("binary"))
     val docs = Tables.documents(spark, sfDir)
     val existing = docs.where(col("doc_id") % 10 =!= 0).select(fpCol.as("fp"))
@@ -592,7 +590,7 @@ object Dedup {
     val filters = existing
       .withColumn("bucket", pmod(xxhash64(col("fp")), lit(nBuckets)))
       .groupBy(col("bucket"))
-      .agg(expr(s"graft_bloom(fp, ${perBucket}L, 0.01D)").as("bf"))
+      .agg(bloom(col("fp"), perBucket, 0.01).as("bf"))
     val probeFn = udf(new BucketBloomProbe())
     val candidates = incoming
       .withColumn("bucket", pmod(xxhash64(col("fp")), lit(nBuckets)))
@@ -858,7 +856,6 @@ object Dedup {
     * the embedding-space twin of the MinHash band join.
     */
   def pqCodes(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     // the blocking key is the STANDING pq_packed artifact — the SemDeDup
     // trick is precisely that the code word persisted for search doubles
@@ -874,7 +871,7 @@ object Dedup {
       .join(e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb")), Seq("a_id"))
       .join(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb")), Seq("b_id"))
       .select(col("block"), col("a_id"), col("b_id"),
-        (round(expr("graft_dot(a_emb, b_emb)"), 4) + lit(0.0)).as("sim"))
+        (round(dot(col("a_emb"), col("b_emb")), 4) + lit(0.0)).as("sim"))
       .orderBy(col("block"), col("a_id"), col("b_id"))
   }
 
@@ -964,7 +961,6 @@ object Dedup {
     * interpolated into the oracle.
     */
   def multiSignal(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val sh = shingles(spark, sfDir, 200).cache()
     val sig = signatures(sh).lineageCut(true)
     val band = sig.select(col("doc_id"), unhex(md5(concat(col("s0"), col("s1")))).as("b"))
@@ -987,7 +983,7 @@ object Dedup {
       .join(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb")), "b_id")
       .withColumn("jaccard", round(coalesce(col("ni"), lit(0L)).cast("double") /
         (col("na") + col("nb") - coalesce(col("ni"), lit(0L))), 4) + lit(0.0))
-      .withColumn("cosine", round(expr("graft_dot(a_emb, b_emb)"), 4) + lit(0.0))
+      .withColumn("cosine", round(dot(col("a_emb"), col("b_emb")), 4) + lit(0.0))
       .select(col("a_id"), col("b_id"), col("jaccard"), col("cosine"),
         (col("jaccard") >= 0.5).as("text_dup"),
         (col("cosine") >= 0.2).as("embed_dup"),

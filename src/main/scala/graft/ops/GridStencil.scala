@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.gridIslands
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -123,7 +124,6 @@ object GridStencil {
     // and Round16Spec's clean/island consistency gate still pins the
     // decomposition. 100 TB: embarrassingly parallel — no shuffle, no
     // iteration count, no corpus-size dependence inside the row.
-    graft.functions.GridIslands.register(spark)
     cleaned(spark, sfDir)
       // explode(array(·)) is a Generate barrier: without it the
       // optimizer substitutes the expression into the pushed-down filter
@@ -132,7 +132,7 @@ object GridStencil {
       // (measured 2.9 s; the §4.4 duplicated-expensive-expression
       // failure mode). Behind the barrier it is evaluated exactly once.
       .select(col("vec_id"),
-        explode(array(expr("graft_grid_islands(kept)"))).as("isl"))
+        explode(array(gridIslands(col("kept")))).as("isl"))
       .where(col("isl.n_kept") > 0)
       .select(col("vec_id"),
         col("isl.n_islands").as("n_islands"),

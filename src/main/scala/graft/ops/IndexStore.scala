@@ -535,7 +535,6 @@ object IndexStore {
     * is computed from the STORED form of its input.
     */
   private def writeVecsearch(spark: SparkSession, sfDir: String)(dir: String): Unit = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     inParallel(Seq(
       // lane 1 — IVF, then the FULL-corpus candidate relation (VERDICT r9
@@ -742,7 +741,6 @@ object IndexStore {
     */
   def ensureVecBase(spark: SparkSession, sfDir: String): String =
     ensure(vecBase(sfDir)) { tmp =>
-      graft.functions.DotProduct.register(spark)
       val base = Tables.embeddings(spark, sfDir).where(s"NOT ($VecDeltaPred)")
       val (cent, storedAssigned) = writeIvf(base, tmp)
       // packed serving words over the base slice (v3): the incremental
@@ -823,7 +821,6 @@ object IndexStore {
     //      see [[VecBaseArtifactNames]] v3).
     // Update cost now tracks |delta| in WRITES too, not just in compute.
     val updDir = republish(vecUpd(sfDir)) { tmp =>
-      graft.functions.DotProduct.register(spark)
       val e = Tables.embeddings(spark, sfDir)
       val delta = e.where(VecDeltaPred)
       val cent = spark.read.parquet(s"$baseDir/ivf_centroids")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.blockSimhash
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -161,11 +162,10 @@ object Multimodal {
     // bit-pack — bit-identical by construction, and Round7Spec pins it
     // against driver-side MessageDigest recomputation). The signature
     // pass is now a map over the corpus scan: no explode, no exchange.
-    graft.functions.BlockSimHash.register(docs.sparkSession)
     docs
       .where(col("n_chars") > 0)
       .select(col("doc_id"),
-        expr("graft_block_simhash(text, CAST(n_chars AS BIGINT))").as("sig"))
+        blockSimhash(col("text"), col("n_chars").cast("bigint")).as("sig"))
   }
 
   /** The band-join pair stage on top of a (doc_id, sig) relation,

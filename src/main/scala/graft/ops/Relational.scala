@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{topk, zorder16}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -810,10 +811,9 @@ object Relational {
     * pure bit arithmetic — an independent check of the generated Java.
     */
   def layoutZorderStats(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.ZOrder16.register(spark)
     Tables.lineitem(spark, sfDir)
       .select(col("l_partkey"), col("l_suppkey"))
-      .withColumn("z", expr("graft_zorder16(l_partkey % 65536, l_suppkey % 65536)"))
+      .withColumn("z", zorder16(col("l_partkey") % 65536, col("l_suppkey") % 65536))
       .withColumn("bucket", shiftright(col("z"), 24))
       .groupBy(col("bucket"))
       .agg(
@@ -849,10 +849,9 @@ object Relational {
     * any window operator.
     */
   def topkPerGroupAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.TopKSketch.register(spark)
     Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"))
-      .agg(expr("graft_topk(o_totalprice, o_orderkey)").as("top"))
+      .agg(topk(col("o_totalprice"), col("o_orderkey")).as("top"))
       .select(col("o_custkey"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("o_custkey"), col("t.key").as("o_orderkey"),
         col("t.score").as("o_totalprice"),

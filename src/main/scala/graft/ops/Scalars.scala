@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.logistic
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -325,10 +326,9 @@ object Scalars {
     * boundary, inlined into whole-stage codegen.
     */
   def exprScoreNative(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.LogisticScore.register(spark)
     Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"),
-        round(expr("graft_logistic(o_totalprice)"), 6).as("score"))
+        round(logistic(col("o_totalprice")), 6).as("score"))
       .orderBy(col("o_orderkey"))
   }
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{dot, l2sq}
 import graft.ops.Checkpoints.CutOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -55,13 +56,6 @@ object Similarity {
       .agg(expr("transform(array_sort(collect_list(struct(dim, c))), s -> s.c)").as("cvec"))
       .select(col("label").as("cell"), col("cvec"))
 
-  /** The vector→centroid dot (one HOF expression tree shared by the build
-    * and probe paths, so stored and query-time dots are bit-identical).
-    */
-  private def centDotExpr = expr(
-    "aggregate(zip_with(embedding, cvec, (x, y) -> CAST(x AS DOUBLE) * y), " +
-      "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
-
   /** The ≤10-row quantizer pulled to the driver as (cell, cvec) pairs,
     * cell-ascending (optimization round 17). Every use site already
     * BROADCASTS this relation — a driver collect of a broadcast-sized
@@ -75,16 +69,17 @@ object Similarity {
       .sortBy(_._1)
 
   /** One candidate struct per centroid: (nd = −dot, cell), with the dot
-    * computed by the codegen'd [[graft.functions.DotProduct]] kernel —
-    * IEEE-identical to [[centDotExpr]]'s HOF chain (same left-to-right
-    * (double)x·y accumulation). Struct ordering on (nd asc, cell asc) ≡
+    * computed by the codegen'd [[graft.functions.DotProduct]] kernel — the
+    * same vector→centroid dot the probe ranking ([[ivfProbeRanked]]) and
+    * [[knnCandidates]]' routing table use, so stored and query-time dots
+    * are bit-identical. Struct ordering on (nd asc, cell asc) ≡
     * the assignment protocol's (d desc, cell asc); −(−d) restores d
     * bit-exactly (finite doubles; an accumulated sum is never −0.0).
     */
   private def centDotStructs(cents: Array[(Int, Seq[Double])]): Seq[Column] =
     cents.toSeq.map { case (cell, cvec) =>
       struct(
-        (-call_function("graft_dot", col("embedding"), typedLit(cvec))).as("nd"),
+        (-dot(col("embedding"), typedLit(cvec))).as("nd"),
         lit(cell).as("cell"))
     }
 
@@ -103,7 +98,6 @@ object Similarity {
     * lesson).
     */
   private[graft] def ivfAssignBuild(e: DataFrame, cent: DataFrame): DataFrame = {
-    graft.functions.DotProduct.register(e.sparkSession)
     val best = array_min(array(centDotStructs(centCollect(cent)): _*))
     e.select(col("vec_id"), explode(array(best)).as("g"))
       .select(col("vec_id"), col("g.cell").as("cell"), (-col("g.nd")).as("d"))
@@ -134,7 +128,7 @@ object Similarity {
       .join(e.select(col("vec_id"), col("embedding").as("b_emb")), Seq("vec_id"))
       .withColumnRenamed("vec_id", "b_id")
       // codegen'd kernel; IEEE-identical to the HOF form (see DotProduct)
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
   }
 
   /** The IVF routing tables shared by [[ivfCandidates]] (exact re-rank
@@ -167,14 +161,13 @@ object Similarity {
     val wAssign = Window.partitionBy(col("vec_id")).orderBy(desc("d"), asc("cell"))
     e.where(col("vec_id") < qBound)
       .crossJoin(broadcast(cent))
-      .withColumn("d", centDotExpr)
+      .withColumn("d", dot(col("embedding"), col("cvec")))
       .withColumn("crn", row_number().over(wAssign))
       .where(col("crn") <= maxProbe)
       .select(col("vec_id").as("a_id"), col("cell"), col("crn"))
   }
 
   def annIvfTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
     ivfCandidates(spark, sfDir, qBound = 20, nprobe = 2)
       .withColumn("rn", row_number().over(wTop))
@@ -212,7 +205,6 @@ object Similarity {
     * the shared J3 exact side, computed once.
     */
   def vecIvfRecallSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val k = 10
     val qBound = 10
@@ -232,7 +224,7 @@ object Similarity {
       .where(col("a_id") =!= col("vec_id"))
       .join(e.select(col("vec_id"), col("embedding").as("b_emb")), Seq("vec_id"))
       .withColumnRenamed("vec_id", "b_id")
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
       .select(col("a_id"), col("b_id"), col("crn"), col("sim_raw"))
       .lineageCut(true) // three arms + nothing else re-reads the corpus
     val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
@@ -242,13 +234,7 @@ object Similarity {
         .where(col("rn") <= k)
         .select(lit(p).as("nprobe"), col("a_id"), col("b_id"))
     }.reduce(_ unionByName _)
-    val exact = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      .join(broadcast(q))
-      .where(col("a_id") =!= col("b_id"))
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"))
+    val exact = exactTopK(e, q, k)
       .lineageCut(true) // hit counter AND the n_exact agg both read it —
       // without the cut the corpus×10 exact pass would run twice
     import spark.implicits._
@@ -267,20 +253,29 @@ object Similarity {
       .orderBy(col("nprobe"))
   }
 
+  /** Exact top-`k` ground truth (a_id, b_id) for the query vectors `q`
+    * (a_id, a_emb): broadcast queries × corpus, self-pairs dropped, ranked
+    * by (dot desc, b_id) — the one recall denominator of [[annRecallAtK]],
+    * [[annRecallFull]], [[vecIvfRecallSweep]] and [[vecProbeAdaptive]].
+    */
+  private def exactTopK(e: DataFrame, q: DataFrame, k: Int): DataFrame = {
+    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
+    e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
+      .join(broadcast(q))
+      .where(col("a_id") =!= col("b_id"))
+      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
+      .withColumn("rn", row_number().over(wTop))
+      .where(col("rn") <= k)
+      .select(col("a_id"), col("b_id"))
+  }
+
   def annRecallAtK(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val k = 10
     val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val exact = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      .join(broadcast(q))
-      .where(col("a_id") =!= col("b_id"))
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"))
+    val exact = exactTopK(e, q, k)
     val ivf = ivfCandidates(spark, sfDir, qBound = 10, nprobe = 2)
       .withColumn("rn", row_number().over(wTop))
       .where(col("rn") <= k)
@@ -333,7 +328,6 @@ object Similarity {
     * list entries.
     */
   def vecProbeAdaptive(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val k = 10
     val qBound = 10
@@ -365,7 +359,7 @@ object Similarity {
       .where(col("a_id") =!= col("vec_id"))
       .join(e.select(col("vec_id"), col("embedding").as("b_emb")), Seq("vec_id"))
       .withColumnRenamed("vec_id", "b_id")
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
       .select(col("a_id"), col("b_id"), col("sim_raw"))
       .lineageCut(false) // the cost report and the top-k both read it
     val cost = scored.groupBy(col("a_id"))
@@ -376,13 +370,7 @@ object Similarity {
       .withColumn("rn", row_number().over(wTop))
       .where(col("rn") <= k)
       .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
-    val exact = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      .join(broadcast(q))
-      .where(col("a_id") =!= col("b_id"))
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"))
+    val exact = exactTopK(e, q, k)
     exact.join(top, Seq("a_id", "b_id"), "left")
       .groupBy(col("a_id"))
       .agg(count(lit(1)).as("n_exact"),
@@ -396,7 +384,6 @@ object Similarity {
 
   /** ann_lsh_bucket — top-3 same-bucket neighbors for each query vector. */
   def annLshBucket(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val q = e.where(col("vec_id") < 50)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
@@ -407,7 +394,7 @@ object Similarity {
     c.join(broadcast(q), Seq("bucket"))
       .where(col("a_id") =!= col("b_id"))
       // codegen'd kernel; IEEE-identical to the HOF form (see DotProduct)
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 3)
       .select(col("a_id"), col("bucket"), col("b_id"),
@@ -415,21 +402,6 @@ object Similarity {
       .orderBy(col("a_id"), col("rn"))
   }
 
-  /** M42 graph_triangle_knn — triangle census of the k-NN similarity
-    * graph: build the directed 5-NN graph over the (bounded) embedding
-    * corpus with the codegen'd dot kernel, symmetrize to undirected
-    * (least, greatest)-canonical edges, and count triangles with the
-    * oriented wedge join (a<b<c: E⋈E on the middle vertex, closed by a
-    * left-semi probe into E) — each triangle counted exactly once, never
-    * an all-triples scan. Triangle density of the similarity graph is the
-    * standard cluster-structure diagnostic for an embedding space (near-dup
-    * clusters show up as dense triangle neighborhoods). The k-NN build is
-    * the explicitly bounded exact form (vec_id < 500, same contract as
-    * J3/M4); the IVF/LSH chains are the corpus-scale candidate generators.
-    * Degree ≤ 2k after symmetrization, so wedges ≤ 2k·|V| — linear in
-    * vertices at fixed k, the property that keeps this computable at
-    * 100 TB.
-    */
   /** The STANDING kNN candidate relation (a_id, b_id, dot) over the
     * bounded graph slice, read from [[IndexStore]] (VERDICT r8 #2): six
     * graph/cluster queries each re-ran the [[knnCandidates]] build —
@@ -579,7 +551,7 @@ object Similarity {
     a.join(b, Seq("cell", "bucket"))
       .where(col("a_id") =!= col("b_id"))
       // codegen'd kernel; IEEE-identical to the HOF form (see DotProduct)
-      .withColumn("dot", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("dot", dot(col("a_emb"), col("b_emb")))
       .select(col("cell"), col("bucket"), col("a_id"), col("b_id"), col("dot"))
   }
 
@@ -694,7 +666,6 @@ object Similarity {
     // corpus×cells window. sort_array asc on (nd = −d, cell) ≡ the
     // (d desc, cell asc) ranking protocol; the explode is the Generate
     // barrier AND the row producer.
-    graft.functions.DotProduct.register(e.sparkSession)
     val ranked = sort_array(array(centDotStructs(centCollect(cent)): _*))
     e.select(col("vec_id"),
         explode(slice(ranked, 2, IndexStore.KnnFullProbeCells - 1)).as("g"))
@@ -798,7 +769,7 @@ object Similarity {
         Seq("a_id"))
       .join(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb")),
         Seq("b_id"))
-      .withColumn("dot", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("dot", dot(col("a_emb"), col("b_emb")))
       .select(col("a_id"), col("b_id"), col("dot"))
 
   /** The standing FULL-CORPUS candidate shortlist (top-[[IndexStore.KnnFullTopK]]
@@ -1055,19 +1026,11 @@ object Similarity {
     * purchase.
     */
   def annRecallFull(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val k = IndexStore.KnnFullTopK // recall@K of the stored shortlist's own cut
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val exact = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      .join(broadcast(q))
-      .where(col("a_id") =!= col("b_id"))
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"))
+    val exact = exactTopK(e, q, k)
     val approx = knnFullEdges(spark, sfDir, k)
       .where(col("a_id") < 10)
       .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
@@ -1206,26 +1169,13 @@ object Similarity {
     * Input must carry (vec_id, embedding, label).
     */
   private[graft] def knnCandidates(e: DataFrame, nprobe: Int): DataFrame = {
-    val cent = e.select(col("label"), posexplode(col("embedding")).as(Seq("dim", "comp")))
-      .groupBy(col("label"), col("dim"))
-      // ADVICE r6 #5: centroid means integerized at 2^20 (the J17/J18
-      // fixed-point protocol) — the component sum is exact LONG math, so
-      // the quantizer is order-independent by construction instead of
-      // relying on round(.,6) to absorb partial-agg-vs-sequential drift
-      .agg(round(sum(expr("CAST(round(CAST(comp AS DOUBLE) * 1048576) AS BIGINT)"))
-        .cast("double") / (count(lit(1)) * lit(1048576.0)), 6).as("c"))
-      .groupBy(col("label"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, c))), s -> s.c)").as("cvec"))
-      .select(col("label").as("cell"), col("cvec"))
-      .lineageCut(true)
+    val cent = centroidsBuild(e).lineageCut(true)
     val wAssign = Window.partitionBy(col("vec_id")).orderBy(desc("d"), asc("cell"))
     // (vec_id, cell, crn ≤ nprobe): the routing table — pinned because the
     // assigned (crn=1) and probe (crn≤nprobe) slices both read it, and at
     // 100 TB it is exactly what an IVF index persists bucketed by cell.
     val cells = e.crossJoin(broadcast(cent))
-      .withColumn("d", expr(
-        "aggregate(zip_with(embedding, cvec, (x, y) -> CAST(x AS DOUBLE) * y), " +
-          "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"))
+      .withColumn("d", dot(col("embedding"), col("cvec")))
       .select(col("vec_id"), col("cell"), col("d"))
       .withColumn("crn", row_number().over(wAssign))
       .where(col("crn") <= nprobe)
@@ -1236,11 +1186,10 @@ object Similarity {
       .select(col("vec_id").as("b_id"), col("embedding").as("b_emb"), col("cell"))
     val probe = cells.select(col("vec_id").as("a_id"), col("cell"))
     val qv = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("dot"), asc("b_id"))
     probe.join(qv, Seq("a_id")).join(assigned, Seq("cell"))
       .where(col("a_id") =!= col("b_id"))
       // codegen'd kernel; IEEE-identical to the HOF form (see DotProduct)
-      .withColumn("dot", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("dot", dot(col("a_emb"), col("b_emb")))
       .select(col("a_id"), col("b_id"), col("dot"))
   }
 
@@ -1270,6 +1219,21 @@ object Similarity {
       .orderBy(col("a_id"), col("rn"))
   }
 
+  /** M42 graph_triangle_knn — triangle census of the k-NN similarity
+    * graph: build the directed 5-NN graph over the (bounded) embedding
+    * corpus with the codegen'd dot kernel, symmetrize to undirected
+    * (least, greatest)-canonical edges, and count triangles with the
+    * oriented wedge join (a<b<c: E⋈E on the middle vertex, closed by a
+    * left-semi probe into E) — each triangle counted exactly once, never
+    * an all-triples scan. Triangle density of the similarity graph is the
+    * standard cluster-structure diagnostic for an embedding space (near-dup
+    * clusters show up as dense triangle neighborhoods). The k-NN build is
+    * the explicitly bounded exact form (vec_id < 500, same contract as
+    * J3/M4); the IVF/LSH chains are the corpus-scale candidate generators.
+    * Degree ≤ 2k after symmetrization, so wedges ≤ 2k·|V| — linear in
+    * vertices at fixed k, the property that keeps this computable at
+    * 100 TB.
+    */
   def graphTriangleKnn(spark: SparkSession, sfDir: String): DataFrame = {
     val knn = knnEdgesStored(spark, sfDir, 5)
     // localCheckpoint: the edge list is tiny (≤ 5|V| rows) but feeds FIVE
@@ -1383,10 +1347,10 @@ object Similarity {
     // itself is the native graft_dot loop — one primitive 64-wide pass
     // per cell instead of zip_with's product array + per-element lambda.
     e.crossJoin(broadcast(centArr))
-      .select(col("vec_id"), col("embedding"), expr(
-        """inline(array(element_at(array_sort(transform(cells, c -> struct(
-          |  -graft_dot(embedding, c.cvec) AS nd,
-          |  c.cell AS cell))), 1)))""".stripMargin))
+      .select(col("vec_id"), col("embedding"),
+        inline(array(element_at(array_sort(transform(col("cells"), c => struct(
+          (-dot(col("embedding"), c("cvec"))).as("nd"),
+          c("cell").as("cell")))), 1))))
       .select(col("vec_id"), col("embedding"),
         col("cell"), (-col("nd")).as("d"))
   }
@@ -1411,7 +1375,6 @@ object Similarity {
     * rounded 6 dp (J17's protocol).
     */
   def vecKmeansLloyd(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"), col("label"))
     var cent = lloydCentroids(e.select(col("label").as("cell"), col("embedding")))
@@ -1521,7 +1484,6 @@ object Similarity {
     * eval stays sample-bounded while the corpus side is one scan per arm.
     */
   def vecMatryoshkaEval(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val k = 10
     val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
@@ -1531,12 +1493,12 @@ object Similarity {
       .join(broadcast(q))
       .where(col("a_id") =!= col("b_id"))
     val full = pairs
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
       .withColumn("rn", row_number().over(wTop))
       .where(col("rn") <= k)
       .select(col("a_id"), col("b_id"))
     val trunc = pairs
-      .withColumn("sim_raw", expr("graft_dot(slice(a_emb, 1, 16), slice(b_emb, 1, 16))"))
+      .withColumn("sim_raw", dot(slice(col("a_emb"), 1, 16), slice(col("b_emb"), 1, 16)))
       .withColumn("rn", row_number().over(wTop))
       .where(col("rn") <= k)
       .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
@@ -1675,7 +1637,6 @@ object Similarity {
     * explode is the Generate barrier and the single evaluation point.
     */
   private def pqEncode(sub: DataFrame, cb: DataFrame): DataFrame = {
-    graft.functions.SquaredL2.register(sub.sparkSession)
     val entries: Seq[(Int, Seq[(Int, Seq[Double])])] =
       cb.select(col("s").cast("int"), col("c").cast("int"), col("cb")).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
@@ -1686,7 +1647,7 @@ object Similarity {
     def argmin(cands: Seq[(Int, Seq[Double])]): Column =
       array_min(array(cands.map { case (c, cbv) =>
         struct(
-          call_function("graft_l2sq", col("sv"), typedLit(cbv)).as("d2"),
+          l2sq(col("sv"), typedLit(cbv)).as("d2"),
           lit(c).as("c"))
       }: _*))
     val mExpr = entries.tail.foldLeft(
@@ -2197,7 +2158,6 @@ object Similarity {
     * full vectors are read for 50 rows per query, never the corpus.
     */
   def vecPqRerank(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val (packed, lut) = pqAdcArtifacts(spark, sfDir, qBound = 8)
     val wAdc = Window.partitionBy(col("a_id")).orderBy(asc("adc"), asc("b_id"))
@@ -2213,7 +2173,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb")), Seq("b_id"))
       .join(broadcast(e.where(col("vec_id") < 8)
         .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))), Seq("a_id"))
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
       .withColumn("rn", row_number().over(wExact))
       .where(col("rn") <= 10)
       .select(col("a_id"), col("b_id"),
@@ -2239,7 +2199,6 @@ object Similarity {
     * |queries|×20 relations — broadcast-size regardless of corpus.
     */
   def searchHybridRrf(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val q = e.where(col("vec_id") < 8)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
@@ -2247,7 +2206,7 @@ object Similarity {
     val cos20 = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
       .join(broadcast(q))
       .where(col("b_id") =!= col("a_id"))
-      .withColumn("sim", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("sim", dot(col("a_emb"), col("b_emb")))
       .withColumn("rn_cos", row_number().over(wCos))
       .where(col("rn_cos") <= 20)
       .select(col("a_id"), col("b_id"), col("rn_cos"))
@@ -2379,7 +2338,6 @@ object Similarity {
     * query side, keyed candidate joins — never corpus².
     */
   def annGraphExpandTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val edges = knnEdgesStored(spark, sfDir, 5)
     val q = e.where(col("vec_id") < 10)
@@ -2396,7 +2354,7 @@ object Similarity {
     cands
       .join(e.select(col("vec_id").as("cand"), col("embedding").as("c_emb")), "cand")
       .join(broadcast(q), "q_id")
-      .withColumn("sim_raw", expr("graft_dot(q_emb, c_emb)"))
+      .withColumn("sim_raw", dot(col("q_emb"), col("c_emb")))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 5)
       .select(col("q_id"), col("cand").as("b_id"),
@@ -2568,7 +2526,6 @@ object Similarity {
     * |candidates|-sized with the exact codegen'd dot kernel.
     */
   def annMultitableTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val cent = IndexStore.read(spark, sfDir, "ivf_centroids")
     // map-only two-table routing (optimization round 17, the
@@ -2594,7 +2551,7 @@ object Similarity {
     val exact = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
       .join(broadcast(q))
       .where(col("a_id") =!= col("b_id"))
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))))
       .where(col("rn") <= 8)
@@ -2725,14 +2682,13 @@ object Similarity {
     * 8n-row artifact.
     */
   def annRangeSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
     val truth = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
       .join(broadcast(q))
       .where(col("a_id") =!= col("b_id"))
-      .withColumn("dot", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("dot", dot(col("a_emb"), col("b_emb")))
       .where(col("dot") >= RangeSearchTau)
       .groupBy(col("a_id")).agg(count(lit(1)).as("n_true"))
     val found = knnCandidatesFullStored(spark, sfDir)

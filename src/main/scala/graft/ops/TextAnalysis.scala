@@ -2,6 +2,7 @@ package graft.ops
 
 
 import graft.Tables
+import graft.functions.{charPairs, normText, shingles}
 import graft.ops.Checkpoints.CutOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -30,9 +31,8 @@ object TextAnalysis {
     * and whether normalization changed the text. Per-row, no shuffle.
     */
   def normalize(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.NormalizeText.register(spark)
     Tables.documents(spark, sfDir)
-      .withColumn("norm", expr("graft_norm_text(text)"))
+      .withColumn("norm", normText(col("text")))
       .select(
         col("doc_id"),
         substring(col("norm"), 1, 60).as("norm_head"),
@@ -50,13 +50,12 @@ object TextAnalysis {
     * everything else is per-row.
     */
   def corpusCuration(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.NormalizeText.register(spark)
     import org.apache.spark.sql.expressions.Window
     val wDedup = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
     val wQuota = Window.partitionBy(col("source"))
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
     Tables.documents(spark, sfDir)
-      .withColumn("norm", expr("graft_norm_text(text)"))
+      .withColumn("norm", normText(col("text")))
       .withColumn("n_tok", size(split(col("norm"), " ")))
       .where(col("n_tok") >= 10)
       .withColumn("fp", md5(col("norm").cast("binary")))
@@ -80,7 +79,6 @@ object TextAnalysis {
     * stage by stage (same convention as pipeline_corpus_curation).
     */
   def trainingEmit(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.NormalizeText.register(spark)
     import org.apache.spark.sql.expressions.Window
     // The normalized+deduped corpus is consumed THREE times below (eval
     // shingles, train rows, train shingles). localCheckpoint materializes
@@ -90,7 +88,7 @@ object TextAnalysis {
     // the contamination join) reuse one partitioning instead of
     // re-exchanging per stage (VERDICT r4 #3: was 9 exchanges).
     val base = Tables.documents(spark, sfDir)
-      .withColumn("norm", expr("graft_norm_text(text)"))
+      .withColumn("norm", normText(col("text")))
       .withColumn("n_tok", size(split(col("norm"), " ")))
       .where(col("n_tok") >= 10)
       .withColumn("fp", md5(col("norm").cast("binary")))
@@ -583,10 +581,9 @@ object TextAnalysis {
     * path of SURVEY §2.K3. Oracle recomputes the same shingles in SQL.
     */
   def shingleGenerate(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.ShingleGenerator.register(spark)
     Tables.documents(spark, sfDir)
       .where(col("doc_id") < 15)
-      .select(col("doc_id"), expr("graft_shingles(text)").as(Seq("pos", "shingle")))
+      .select(col("doc_id"), shingles(col("text")).as(Seq("pos", "shingle")))
       .orderBy(col("doc_id"), col("pos"))
   }
 
@@ -983,11 +980,10 @@ object TextAnalysis {
     // codegen'd pair walk (optimization round 16): same semantics as the
     // transform(sequence(...), substring) HOF chain it replaces, without
     // the per-character lambda dispatch — see [[graft.functions.CharPairs]]
-    graft.functions.CharPairs.register(spark)
     Tables.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("w"))
       .where(length(col("w")) >= 2)
-      .select(explode(expr("graft_char_pairs(w)")).as("pair"))
+      .select(explode(charPairs(col("w"))).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("pair"))
       .limit(20)
@@ -1382,9 +1378,8 @@ object TextAnalysis {
     // Row-identical: counts are additive over the word partition
     // {touched, untouched}, and zero-count differences are filtered (a
     // count of rows can never be 0 in the old form).
-    graft.functions.CharPairs.register(spark)
     val census = words
-      .select(explode(expr("graft_char_pairs(w)")).as("pair"))
+      .select(explode(charPairs(col("w"))).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("n"))
       .lineageCut(true)
     val top = census
@@ -1396,7 +1391,7 @@ object TextAnalysis {
     // subtraction below and the position machinery
     val hits = withTop.where(expr("instr(w, mpair) > 0")).lineageCut(true)
     val touched = hits
-      .select(explode(expr("graft_char_pairs(w)")).as("pair"))
+      .select(explode(charPairs(col("w"))).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("tn"))
     // untouched-arm census = global − touched, as (left, right, count)
     val missAgg = census.join(touched, Seq("pair"), "left")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.dot
 import graft.ops.Checkpoints.CutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -82,13 +83,12 @@ object VectorText {
     * DuckDB oracle) are bit-equal — asserted in VectorTextSpec.
     */
   def vecCosinePairsNative(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir).where(col("vec_id") < 30)
     val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
     val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
     a.join(b, col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
-        (round(expr("graft_dot(a_emb, b_emb)"), 4) + lit(0.0)).as("cosine"))
+        (round(dot(col("a_emb"), col("b_emb")), 4) + lit(0.0)).as("cosine"))
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -120,7 +120,6 @@ object VectorText {
     * for an LSH/IVF-pruned candidate set (see Similarity.annLshBucket).
     */
   def vecKnnTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark) // hot path: codegen'd kernel
     val e = Tables.embeddings(spark, sfDir)
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
@@ -128,7 +127,7 @@ object VectorText {
     val w = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
     c.join(broadcast(q), col("a_id") =!= col("b_id"))
       // IEEE-identical to the HOF dotExpr (see DotProduct) — oracle unchanged
-      .withColumn("sim_raw", expr("graft_dot(a_emb, b_emb)"))
+      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 5)
       .select(col("a_id"), col("b_id"),

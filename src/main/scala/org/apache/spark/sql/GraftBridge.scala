@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into the `private[sql]` Dataset factory — the standard pattern
@@ -10,6 +11,13 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A Catalyst expression as a `Column`, and back — how graft's kernels
+    * enter a plan without a session function-registry name.
+    */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** Ensure the driver-side StateStoreCoordinator RPC endpoint exists.
     * Streaming queries create it on start; a BATCH `transformWithState`

@@ -290,7 +290,6 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val e = Tables.embeddings(spark, sf).where(col("vec_id") < 500)
       .select(col("vec_id"), col("embedding"), col("label"))
-    graft.functions.DotProduct.register(spark)
     val knn = KnnReference.knnBucketed(e, 5)
     val plan = knn.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"),

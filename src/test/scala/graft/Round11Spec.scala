@@ -13,7 +13,6 @@ class Round11Spec extends SparkSpec {
     ops.IndexStore.read(spark, sf, name)
 
   test("knnCandidatesFull: non-empty, self-pair-free, no duplicate directed pairs, and second-cell probing reaches across cells") {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sf)
     val c = KnnReference.knnCandidatesFull(
         e, store("ivf_assigned"), store("ivf_centroids"))
@@ -36,7 +35,6 @@ class Round11Spec extends SparkSpec {
   }
 
   test("knn_candidates_full: the stored shortlist is exactly the top-8 cut of the recomputed candidates") {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sf)
     val assigned = store("ivf_assigned")
     val w = org.apache.spark.sql.expressions.Window

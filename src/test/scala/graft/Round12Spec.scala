@@ -17,7 +17,6 @@ class Round12Spec extends SparkSpec {
   }
 
   test("index_update_vecsearch: merged per-vector artifacts are row-identical to a from-scratch pass under the frozen quantizers") {
-    graft.functions.DotProduct.register(spark)
     val (updDir, baseDir) = forceUpdate()
     val e = Tables.embeddings(spark, sf)
     val cent = spark.read.parquet(s"$baseDir/ivf_centroids")
@@ -44,7 +43,6 @@ class Round12Spec extends SparkSpec {
   }
 
   test("index_update_vecsearch: the incrementally-merged shortlist is row-identical to a from-scratch build under the frozen base routing") {
-    graft.functions.DotProduct.register(spark)
     val (updDir, baseDir) = forceUpdate()
     val e = Tables.embeddings(spark, sf)
     val cent = spark.read.parquet(s"$baseDir/ivf_centroids")
@@ -94,7 +92,6 @@ class Round12Spec extends SparkSpec {
       // 19% of the full candidate relation (pairs touching the delta on
       // either side); assert the update recomputed at most half of the
       // from-scratch dot work
-      graft.functions.DotProduct.register(spark)
       val e = Tables.embeddings(spark, sf)
       val cent = spark.read.parquet(s"$baseDir/ivf_centroids")
       val routing = spark.read.parquet(s"$baseDir/knn_routing")

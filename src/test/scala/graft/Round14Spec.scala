@@ -13,7 +13,6 @@ class Round14Spec extends SparkSpec {
     ops.IndexStore.read(spark, sf, name)
 
   test("knnShortlistFull is row-identical to the single global top-K window over the raw candidates") {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sf)
     val assigned = store("ivf_assigned")
     val cent = store("ivf_centroids")
@@ -37,7 +36,6 @@ class Round14Spec extends SparkSpec {
   }
 
   test("the corpus-relative window clip drops no candidate: every probed bucket is inside the routing domain") {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sf)
     val assigned = store("ivf_assigned")
     val m = ops.Similarity.subBuckets(assigned)
@@ -92,7 +90,6 @@ class Round14Spec extends SparkSpec {
   }
 
   test("a forced fresh build produces the artifacts the serving queries read (marker + row counts)") {
-    graft.functions.DotProduct.register(spark)
     // rebuild through the NEW shortlist pipeline and check the manifest
     // matches what the previous build left in the store
     val before = store("knn_candidates_full").count()

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.bloom
 import graft.ops.Dedup
 import org.apache.spark.sql.functions._
 
@@ -218,13 +219,12 @@ class Round7Spec extends SparkSpec {
   }
 
   test("M72 BloomSketch: partial buffers OR-merge losslessly across partitions") {
-    graft.functions.BloomSketch.register(spark)
     // 8 input partitions force real partial-aggregate merges
     val members = s.range(20000).repartition(8)
       .select(concat(lit("m_"), col("id")).as("fp"))
     val buckets = members
       .withColumn("bucket", pmod(xxhash64(col("fp")), lit(4L)))
-      .groupBy(col("bucket")).agg(expr("graft_bloom(fp, 5000L, 0.01D)").as("bf"))
+      .groupBy(col("bucket")).agg(bloom(col("fp"), 5000L, 0.01).as("bf"))
       .collect()
       .map(r => r.getLong(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))).toMap

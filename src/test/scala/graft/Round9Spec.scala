@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.freqItems
 import org.apache.spark.sql.functions._
 
 /** Round-9 specs (VERDICT r8): the fused multi-counter prefix sum (#7),
@@ -106,14 +107,12 @@ class Round9Spec extends SparkSpec {
     assert(m("pq_codes") === 4 * n)
     assert(m("pq_codebook") === 64L)
     assert(m("ivf_centroids") === e.select("label").distinct().count())
-    graft.functions.DotProduct.register(spark)
     val eb = e.where(col("vec_id") < 500)
       .select(col("vec_id"), col("embedding"), col("label"))
     assert(m("knn_candidates") === ops.Similarity.knnCandidates(eb, 2).count())
   }
 
   test("index store: stored kNN edges are row-identical to the inline builder (store = build, serve = read)") {
-    graft.functions.DotProduct.register(spark)
     val e = Tables.embeddings(spark, sf).where(col("vec_id") < 500)
       .select(col("vec_id"), col("embedding"), col("label"))
     val inline = KnnReference.knnBucketed(e, 5)
@@ -245,9 +244,8 @@ class Round9Spec extends SparkSpec {
     val base = Tables.events(spark, sf)
       .where(col("value").isNotNull)
       .select(floor(col("value")).cast("string").as("item"))
-    graft.functions.FrequentItemsSketch.register(spark)
     def answer(items: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] = {
-      val cand = items.agg(expr("graft_freq_items(item)").as("cands"))
+      val cand = items.agg(freqItems(col("item")).as("cands"))
         .select(explode(col("cands")).as("item"))
       val tot = items.agg(count(lit(1)).as("total"))
       items.join(broadcast(cand), Seq("item"), "left_semi")
@@ -265,7 +263,6 @@ class Round9Spec extends SparkSpec {
   }
 
   test("graft_freq_items: candidate superset certificate on an adversarial sorted stream") {
-    graft.functions.FrequentItemsSketch.register(spark)
     // 3 heavy items (2000 each) drowned by 6000 distinct singletons, and
     // the stream SORTED so every singleton arrives after the heavy head —
     // maximal decrement pressure on the sketch. n = 12000, threshold
@@ -274,7 +271,7 @@ class Round9Spec extends SparkSpec {
       when(col("id") < 6000, concat(lit("hot"), (col("id") % 3).cast("string")))
         .otherwise(concat(lit("cold"), col("id").cast("string"))).as("item"))
       .sort(col("id")) // heavies first, then the cold flood
-    val cands = stream.agg(expr("graft_freq_items(item)").as("c"))
+    val cands = stream.agg(freqItems(col("item")).as("c"))
       .select(explode(col("c")).as("item"))
       .collect().map(_.getString(0)).toSet
     assert(Set("hot0", "hot1", "hot2").subsetOf(cands))

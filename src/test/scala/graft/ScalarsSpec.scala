@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, FloatType}
+
 class ScalarsSpec extends SparkSpec {
 
   test("I1 fn_string_suite: trimmed round-trips, brand_num is digits") {
@@ -43,21 +48,22 @@ class ScalarsSpec extends SparkSpec {
   }
 
   test("K1v2 GraftExtensions: injectFunction registers graft_logistic") {
-    val ext = new graft.functions.GraftExtensions
-    // smoke: applying the extension to a builder-created session would
-    // register the function; here we verify the registry path directly.
-    graft.functions.LogisticScore.register(spark)
-    val r = spark.sql("SELECT round(graft_logistic(100000.0), 6) AS s").head().getDouble(0)
-    assert(r == 0.5)
-    assert(ext != null)
+    // the function registry a session built with
+    // `.withExtensions(new GraftExtensions)` starts from
+    val registry = org.apache.spark.sql.GraftExtensionsRegistry.builtinWithGraft()
+    def lookup(name: String, args: Expression*) =
+      registry.lookupFunction(FunctionIdentifier(name), args)
+    assert(lookup("graft_logistic", Literal(100000.0)).eval() == 0.5)
+    val emb = Literal.create(Array(1.0f, 2.0f), ArrayType(FloatType))
+    assert(lookup("graft_dot", emb, emb).isInstanceOf[graft.functions.DotProduct])
   }
 
   test("A10 graft_zorder16: codegen matches reference interleave; buckets are local in BOTH dims") {
-    graft.functions.ZOrder16.register(spark)
     // 1. generated Java ≡ the Scala reference implementation, all rows
+    val a = col("l_partkey") % 65536
+    val b = col("l_suppkey") % 65536
     val mism = Tables.lineitem(spark, sf)
-      .selectExpr("l_partkey % 65536 AS a", "l_suppkey % 65536 AS b",
-        "graft_zorder16(l_partkey % 65536, l_suppkey % 65536) AS z")
+      .select(a.as("a"), b.as("b"), graft.functions.zorder16(a, b).as("z"))
       .collect()
       .count(r => r.getLong(2) !=
         graft.functions.ZOrder16.interleave(r.getLong(0), r.getLong(1)))
