@@ -6,9 +6,12 @@ import org.apache.spark.sql.DataFrame
 /** Checkpoint policy for iterative loops (VERDICT r8 #4).
   *
   * The iterative operators (the large-star/small-star component loop,
-  * PageRank's power iterations, the kNN/Lloyd index builds) cut lineage
-  * every round — without a cut, each round's plan nests the previous
-  * round's ~6× and analysis stalls after a handful of rounds. The default
+  * the k-core peel, the kNN/Lloyd index builds) cut lineage every round —
+  * without a cut, each round's plan nests the previous round's ~6× and
+  * analysis stalls after a handful of rounds. A loop with a fixed, small
+  * round count whose rounds each read the previous one once grows its
+  * plan only linearly and needs no cut: PageRank's three power iterations
+  * run as one query (`Similarity.pageRank`). The default
   * cut is `localCheckpoint`: blocks live in executor memory/disk, fast,
   * but NOT fault-tolerant — on a real cluster, losing an executor discards
   * its blocks and Spark CANNOT recompute them (the lineage was truncated),

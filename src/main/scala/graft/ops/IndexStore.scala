@@ -3,6 +3,7 @@ package graft.ops
 import graft.Tables
 import graft.ops.Checkpoints.CutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 
 /** Standing vector-search index artifacts (VERDICT r8 #1/#2).
@@ -236,10 +237,12 @@ object IndexStore {
     }
 
   /** Read one artifact of the vector store, building the store first if
-    * needed.
+    * needed. Every store read opens its artifact with [[GraftParquet.read]]:
+    * the schema comes from one footer read on the driver, so an open runs
+    * no Spark job.
     */
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/$name")
+    GraftParquet.read(spark, s"${ensure(spark, sfDir)}/$name")
 
   /** The vector store's directory for this corpus version, built if absent. */
   def ensure(spark: SparkSession, sfDir: String): String =
@@ -295,14 +298,15 @@ object IndexStore {
     * parquet footers of the artifact's written data files on the driver.
     * It is still a read-back of what the build wrote, but it runs no
     * Spark job: a `count()` job per artifact would be almost pure
-    * scheduling overhead at these sizes.
+    * scheduling overhead at these sizes. The rows are sorted by artifact
+    * name on the driver, so the two-to-nine-row frame needs no sort.
     */
   private def manifest(spark: SparkSession, dir: String,
       names: Seq[String]): DataFrame = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    names.map(n => (n, footerRows(s"$dir/$n", conf)))
-      .toDF("artifact", "n_rows").orderBy(col("artifact"))
+    names.sorted.map(n => (n, footerRows(s"$dir/$n", conf)))
+      .toDF("artifact", "n_rows")
   }
 
   /** Total row count of a written parquet artifact directory, from the
@@ -498,9 +502,9 @@ object IndexStore {
   private def writeIvf(e: DataFrame, dir: String): (DataFrame, DataFrame) = {
     val spark = e.sparkSession
     write(Similarity.centroidsBuild(e), s"$dir/ivf_centroids")
-    val cent = spark.read.parquet(s"$dir/ivf_centroids")
+    val cent = GraftParquet.read(spark, s"$dir/ivf_centroids")
     write(Similarity.ivfAssignBuild(e, cent), s"$dir/ivf_assigned")
-    (cent, spark.read.parquet(s"$dir/ivf_assigned"))
+    (cent, GraftParquet.read(spark, s"$dir/ivf_assigned"))
   }
 
   /** The PQ chain: trained codebooks, per-subvector codes, and the packed
@@ -511,7 +515,7 @@ object IndexStore {
     write(codebook, s"$dir/pq_codebook")
     write(codes.select(col("vec_id"), col("s"), col("code"), col("qerr")),
       s"$dir/pq_codes")
-    write(packCodes(e.sparkSession.read.parquet(s"$dir/pq_codes")),
+    write(packCodes(GraftParquet.read(e.sparkSession, s"$dir/pq_codes")),
       s"$dir/pq_packed")
   }
 
@@ -521,7 +525,7 @@ object IndexStore {
     */
   private def writeMedia(docs: DataFrame, dir: String): Unit = {
     write(Multimodal.phashSignatures(docs), s"$dir/media_sigs")
-    write(Multimodal.phashPairs(docs.sparkSession.read.parquet(s"$dir/media_sigs")),
+    write(Multimodal.phashPairs(GraftParquet.read(docs.sparkSession, s"$dir/media_sigs")),
       s"$dir/media_pairs")
   }
 
@@ -590,7 +594,7 @@ object IndexStore {
   val MediaArtifactNames: Seq[String] = Seq("media_pairs", "media_sigs")
 
   def readMedia(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"${ensureMedia(spark, sfDir)}/$name")
+    GraftParquet.read(spark, s"${ensureMedia(spark, sfDir)}/$name")
 
   def ensureMedia(spark: SparkSession, sfDir: String): String =
     ensure(media(sfDir))(writeMedia(Tables.documents(spark, sfDir), _))
@@ -672,10 +676,10 @@ object IndexStore {
     val updDir = republish(mediaUpd(sfDir)) { tmp =>
       val delta = Tables.documents(spark, sfDir).where(DeltaPred)
       write(Multimodal.phashSignatures(delta), s"$tmp/media_sigs_delta")
-      val deltaSigs = spark.read.parquet(s"$tmp/media_sigs_delta")
+      val deltaSigs = GraftParquet.read(spark, s"$tmp/media_sigs_delta")
       linkParts(s"$baseDir/media_sigs", s"$tmp/media_sigs", "base")
       linkParts(s"$tmp/media_sigs_delta", s"$tmp/media_sigs", "delta")
-      val mergedSigs = spark.read.parquet(s"$tmp/media_sigs")
+      val mergedSigs = GraftParquet.read(spark, s"$tmp/media_sigs")
       write(Multimodal.phashPairsDelta(deltaSigs, mergedSigs),
         s"$tmp/media_pairs_delta")
       linkParts(s"$baseDir/media_pairs", s"$tmp/media_pairs", "base")
@@ -750,7 +754,7 @@ object IndexStore {
       writePq(base, tmp)
       // the frozen routing relations (see VecBaseArtifactNames)
       write(Similarity.knnRouting(storedAssigned), s"$tmp/knn_routing")
-      val routing = spark.read.parquet(s"$tmp/knn_routing")
+      val routing = GraftParquet.read(spark, s"$tmp/knn_routing")
       write(Similarity.mapByBounds(Similarity.probeCells(base, cent),
         Similarity.knnBounds(routing)), s"$tmp/knn_probes_alt")
       // base shortlist — built FROM the persisted routing relations
@@ -761,7 +765,7 @@ object IndexStore {
       // standard full-corpus candidate join on the base slice
       // (Round12Spec's from-scratch comparison pins it).
       val baseMemB = routing.select(col("vec_id"), col("cell"), col("bucket"))
-      val probes2B = spark.read.parquet(s"$tmp/knn_probes_alt")
+      val probes2B = GraftParquet.read(spark, s"$tmp/knn_probes_alt")
       // the frozen routing's own sub-bucket count, read back from the
       // artifact (one O(1) max action) — sizes the probe-window clip
       val mBase = routing.agg(max(col("bucket"))).head.getLong(0) + 1L
@@ -771,6 +775,12 @@ object IndexStore {
           KnnFullTopK),
         s"$tmp/knn_candidates_full")
     }
+
+  /** Read one artifact of the BASE-snapshot vector store, building the
+    * store first if needed.
+    */
+  def readVecBase(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    GraftParquet.read(spark, s"${ensureVecBase(spark, sfDir)}/$name")
 
   /** The `index_update_vecsearch` query (round 12, VERDICT r11 #2):
     * DELTA-build the 7-artifact vector store instead of rebuilding from
@@ -823,9 +833,9 @@ object IndexStore {
     val updDir = republish(vecUpd(sfDir)) { tmp =>
       val e = Tables.embeddings(spark, sfDir)
       val delta = e.where(VecDeltaPred)
-      val cent = spark.read.parquet(s"$baseDir/ivf_centroids")
+      val cent = GraftParquet.read(spark, s"$baseDir/ivf_centroids")
       linkParts(s"$baseDir/ivf_centroids", s"$tmp/ivf_centroids", "base")
-      val cb = spark.read.parquet(s"$baseDir/pq_codebook")
+      val cb = GraftParquet.read(spark, s"$baseDir/pq_codebook")
       linkParts(s"$baseDir/pq_codebook", s"$tmp/pq_codebook", "base")
       inParallel(Seq(
         // lane 1 — delta assignment, merged inverted lists, the shortlist
@@ -833,12 +843,12 @@ object IndexStore {
         () => {
           write(Similarity.ivfAssignBuild(delta, cent),
             s"$tmp/ivf_assigned_delta")
-          val deltaAsg = spark.read.parquet(s"$tmp/ivf_assigned_delta")
+          val deltaAsg = GraftParquet.read(spark, s"$tmp/ivf_assigned_delta")
           linkParts(s"$baseDir/ivf_assigned", s"$tmp/ivf_assigned", "base")
           linkParts(s"$tmp/ivf_assigned_delta", s"$tmp/ivf_assigned", "delta")
-          val routing = spark.read.parquet(s"$baseDir/knn_routing")
+          val routing = GraftParquet.read(spark, s"$baseDir/knn_routing")
           val baseMem = routing.select(col("vec_id"), col("cell"), col("bucket"))
-          val baseProbes2 = spark.read.parquet(s"$baseDir/knn_probes_alt")
+          val baseProbes2 = GraftParquet.read(spark, s"$baseDir/knn_probes_alt")
           val bounds = Similarity.knnBounds(routing)
           val deltaOwn = Similarity.mapByBounds(deltaAsg, bounds)
             .lineageCut(false) // probe side, membership side, and the B band read it
@@ -863,8 +873,8 @@ object IndexStore {
             if (deltaSmall) "membership" else "none")
           write(Similarity.dotPairs(e, bandA.unionByName(bandB)),
             s"$tmp/knn_pairs_delta")
-          val deltaPairs = spark.read.parquet(s"$tmp/knn_pairs_delta")
-          val baseShort = spark.read.parquet(s"$baseDir/knn_candidates_full")
+          val deltaPairs = GraftParquet.read(spark, s"$tmp/knn_pairs_delta")
+          val baseShort = GraftParquet.read(spark, s"$baseDir/knn_candidates_full")
           val wTop = org.apache.spark.sql.expressions.Window
             .partitionBy(col("a_id")).orderBy(col("dot").desc, col("b_id").asc)
           write(baseShort.unionByName(deltaPairs)
@@ -876,7 +886,7 @@ object IndexStore {
         // lane 2 — delta encode, merged codes, delta-only packed words
         () => {
           write(Similarity.pqEncodeAgainst(delta, cb), s"$tmp/pq_codes_delta")
-          val deltaCodes = spark.read.parquet(s"$tmp/pq_codes_delta")
+          val deltaCodes = GraftParquet.read(spark, s"$tmp/pq_codes_delta")
           linkParts(s"$baseDir/pq_codes", s"$tmp/pq_codes", "base")
           linkParts(s"$tmp/pq_codes_delta", s"$tmp/pq_codes", "delta")
           write(packCodes(deltaCodes), s"$tmp/pq_packed")

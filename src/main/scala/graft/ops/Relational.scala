@@ -366,19 +366,33 @@ object Relational {
     * because a SQL UDF is inlined by the analyzer (not a black-box
     * lambda), pushdown/codegen/whole-stage all survive — unlike a Scala
     * UDF, this costs nothing at plan time. Oracle inlines the identical
-    * expression.
+    * expression. The function lives only while the query is analyzed
+    * ([[withTempFunction]]).
     */
   def sqlUdfScalar(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.registerAll(spark, sfDir)
-    spark.sql(
+    withTempFunction(spark, "graft_revenue",
       """CREATE OR REPLACE TEMPORARY FUNCTION graft_revenue(p DOUBLE, d DOUBLE)
         |RETURNS DECIMAL(18,4)
         |RETURN CAST(CAST(p AS DECIMAL(12,2)) * (1 - CAST(d AS DECIMAL(12,2))) AS DECIMAL(18,4))"""
-        .stripMargin)
-    spark.sql(
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |       CAST(SUM(graft_revenue(l_extendedprice, l_discount)) AS DOUBLE) AS disc_rev
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+        .stripMargin) {
+      spark.sql(
+        """SELECT l_returnflag, COUNT(*) AS n,
+          |       CAST(SUM(graft_revenue(l_extendedprice, l_discount)) AS DOUBLE) AS disc_rev
+          |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+    }
+  }
+
+  /** Create a temporary SQL function, run `query` (which `spark.sql`
+    * returns analyzed, with the function's body already inlined), then
+    * drop the function again, so the key leaves nothing in the caller's
+    * session.
+    */
+  private def withTempFunction(spark: SparkSession, name: String, create: String)(
+      query: => DataFrame): DataFrame = {
+    spark.sql(create)
+    try query
+    finally spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS $name")
   }
 
   /** D11 sql_udf_table — Spark 4 SQL table functions (CREATE FUNCTION ...
@@ -386,22 +400,24 @@ object Relational {
     * relation, the reusable-subquery surface that replaces copy-pasted
     * CTEs across jobs. The body is an ordinary query, so it plans as the
     * usual TakeOrderedAndProject — catalog sugar, zero plan cost. The
-    * oracle inlines the body per invocation.
+    * oracle inlines the body per invocation. Like D10, the function is
+    * dropped once the query is analyzed.
     */
   def sqlUdfTable(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.registerAll(spark, sfDir)
-    spark.sql(
+    withTempFunction(spark, "graft_top_orders",
       """CREATE OR REPLACE TEMPORARY FUNCTION graft_top_orders(st STRING)
         |RETURNS TABLE(o_orderkey BIGINT, o_totalprice DOUBLE)
         |RETURN SELECT o_orderkey, o_totalprice FROM orders
         |WHERE o_orderstatus = st
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 5""".stripMargin)
-    spark.sql(
-      """SELECT * FROM (
-        |  SELECT 'F' AS st, * FROM graft_top_orders('F')
-        |  UNION ALL SELECT 'O', * FROM graft_top_orders('O')
-        |  UNION ALL SELECT 'P', * FROM graft_top_orders('P'))
-        |ORDER BY st, o_totalprice DESC, o_orderkey""".stripMargin)
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 5""".stripMargin) {
+      spark.sql(
+        """SELECT * FROM (
+          |  SELECT 'F' AS st, * FROM graft_top_orders('F')
+          |  UNION ALL SELECT 'O', * FROM graft_top_orders('O')
+          |  UNION ALL SELECT 'P', * FROM graft_top_orders('P'))
+          |ORDER BY st, o_totalprice DESC, o_orderkey""".stripMargin)
+    }
   }
 
   /** D8 sql_pipe_syntax — Spark 4 SQL pipe syntax (`|>`): the linear

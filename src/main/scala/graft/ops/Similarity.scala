@@ -875,7 +875,7 @@ object Similarity {
   def graphKcoreFull(spark: SparkSession, sfDir: String): DataFrame = {
     // lazy cut: the count below runs the final stage into the checkpoint
     // (no separate checkpoint job; optimization round 17). The stages
-    // below the cut run when it is taken (see pageRankFull).
+    // below the cut run when it is taken (see Checkpoints).
     var edges = mutualKnnFullEdges(spark, sfDir)
       .lineageCut(false)
     var prevEdges = edges.count()
@@ -888,7 +888,7 @@ object Similarity {
       val adj = edges.select(col("u").as("x"))
         .unionAll(edges.select(col("v").as("x")))
       // lazy cut (optimization round 16): the degree aggregate's shuffle
-      // runs when the cut is taken (AQE, see pageRankFull); its final
+      // runs when the cut is taken (AQE, see Checkpoints); its final
       // stage rides the round's count action, and both semi-join
       // references read the one checkpointed copy
       val alive = adj.groupBy(col("x")).agg(count(lit(1)).as("deg"))
@@ -946,46 +946,56 @@ object Similarity {
     * centrality pass with the 500-vector bound removed. Unlike the
     * bounded twin, out-degree is not a constant (a sub-bucket smaller
     * than k yields fewer candidates), so each vertex ships rank/outdeg
-    * along its edges — the general PageRank transition, still one keyed
-    * join + one keyed sum per iteration, linear in |E|. Vertices without
-    * in-edges settle at 0.15/n. Dangling-vertex CONVENTION (ADVICE r11
-    * #2): a vector alone in its probe window can have zero out-edges, and
-    * this transition simply drops its rank mass (no redistribution) — a
-    * convention, not a structural impossibility; the oracle replicates
-    * the identical transition, so the convention cancels in the compare.
-    * Determinism: M51's 12-dp per-iteration rounding protocol — both
-    * engines iterate on bit-identical inputs.
+    * along its edges — the general PageRank transition, linear in |E|
+    * per iteration ([[pageRank]]). Vertices without in-edges settle at
+    * 0.15/n. Dangling-vertex CONVENTION (ADVICE r11 #2): a vector alone in
+    * its probe window can have zero out-edges, and this transition simply
+    * drops its rank mass (no redistribution) — a convention, not a
+    * structural impossibility; the oracle replicates the identical
+    * transition, so the convention cancels in the compare. Determinism:
+    * M51's 12-dp per-iteration rounding protocol — both engines iterate on
+    * bit-identical inputs.
     */
   def pageRankFull(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-    // no cut on the bare artifact projection (optimization round 17):
-    // the parquet files are the materialization; each iteration's join
-    // re-scans 8n skinny rows instead of paying a copy job up front
     val edges = knnFullEdges(spark, sfDir, 8)
-    val verts = e.select(col("vec_id")).lineageCut(true)
     val outdeg = edges.groupBy(col("a_id")).agg(count(lit(1)).as("od"))
-      .lineageCut(true)
+    pageRank(Tables.embeddings(spark, sfDir).select(col("vec_id")),
+      edges.join(outdeg, Seq("a_id")))
+  }
+
+  /** Damped PageRank (0.85, 3 power iterations, top-20 by rank) as ONE
+    * query with no lineage cut. `verts` holds `vec_id`; `edges` holds
+    * `(a_id, b_id, od)`, od being the out-degree rank/od is shipped with.
+    *
+    * Each iteration is one join of the previous ranks to the edges and
+    * one keyed aggregation by target vertex. The edges carry one extra
+    * self-row per vertex whose contribution is null, so every vertex
+    * keeps its group (a vertex without in-edges sums to null → 0.0) and
+    * the aggregation yields the whole next rank relation — no per-round
+    * left join back onto the vertex set. The vertex count `n` is counted
+    * once and carried as a column, so no round re-joins it either. Each
+    * iteration reads the previous ranks once, so the plan grows linearly
+    * over the fixed three rounds and needs no lineage cut.
+    *
+    * Determinism: in-neighbor rank sums are float additions whose order
+    * differs across engines, so each iteration's rank is rounded to 12 dp
+    * BEFORE feeding the next — both engines then iterate on bit-identical
+    * inputs (the E17/N3 protocol applied to a fixpoint). The final output
+    * rounds to 6 dp with the (rank desc, vec_id) tiebreak.
+    */
+  private def pageRank(verts: DataFrame, edges: DataFrame): DataFrame = {
     val n1 = verts.agg(count(lit(1)).as("n"))
+    val links = edges.select(col("a_id"), col("b_id"), col("od"))
+      .unionByName(verts.select(col("vec_id").as("a_id"),
+        col("vec_id").as("b_id"), lit(null).cast("long").as("od")))
     var ranks = verts.crossJoin(broadcast(n1))
-      .select(col("vec_id"), (lit(1.0) / col("n")).as("r"))
+      .select(col("vec_id"), (lit(1.0) / col("n")).as("r"), col("n"))
     for (_ <- 1 to 3) {
-      val contrib = edges
-        .join(ranks, col("a_id") === col("vec_id"))
-        .join(outdeg, Seq("a_id"))
-        .groupBy(col("b_id")).agg(sum(col("r") / col("od")).as("c"))
-      ranks = verts.crossJoin(broadcast(n1))
-        .join(contrib, col("vec_id") === col("b_id"), "left")
-        .select(col("vec_id"),
-          round(lit(0.15) / col("n") + lit(0.85) * coalesce(col("c"), lit(0.0)), 12).as("r"))
-        // LAZY cut (optimization round 17; was eager): each iteration's
-        // rank relation has exactly one consumer — the next iteration.
-        // The cut truncates plan growth at every round, but it does NOT
-        // fold the chain into one job: under AQE, taking a lazy cut
-        // executes the adaptive plan to get its RDD, so each round's
-        // shuffle and broadcast stages run here, while the query is
-        // being built. Only each round's final stage waits for its
-        // consumer, which saves the eager cut's separate materialization job.
-        .lineageCut(false)
+      ranks = ranks.join(links, col("vec_id") === col("a_id"))
+        .groupBy(col("b_id")).agg(sum(col("r") / col("od")).as("c"), max(col("n")).as("n"))
+        .select(col("b_id").as("vec_id"),
+          round(lit(0.15) / col("n") + lit(0.85) * coalesce(col("c"), lit(0.0)), 12).as("r"),
+          col("n"))
     }
     ranks
       .select(col("vec_id"), (round(col("r"), 6) + lit(0.0)).as("pagerank"))
@@ -1266,42 +1276,13 @@ object Similarity {
     * space — dense near-dup clusters surface as high-rank vertices. The
     * k-NN build gives every vertex out-degree EXACTLY k, so there are no
     * dangling nodes and each vertex ships rank/5 along its edges — the
-    * transition is one keyed join + one keyed sum per iteration, the
-    * standard Spark PageRank shape, linear in |E| per round.
-    *
-    * Determinism: in-neighbor rank sums are float additions whose order
-    * differs across engines, so each iteration's rank is rounded to 12 dp
-    * BEFORE feeding the next — both engines then iterate on bit-identical
-    * inputs (the E17/N3 protocol applied to a fixpoint). Final output
-    * rounds to 6 dp with the b_id-free (rank desc, vec_id) tiebreak. The
-    * edge list is eagerly checkpointed once and reused by all rounds —
-    * the index-once pattern, not three k-NN rebuilds.
+    * standard Spark PageRank shape, linear in |E| per round, run as one
+    * query over the stored edge list ([[pageRank]]: 12-dp rounding per
+    * iteration, 6-dp output, (rank desc, vec_id) tiebreak).
     */
-  def pageRankKnn(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir).where(col("vec_id") < 500)
-    val edges = knnEdgesStored(spark, sfDir, 5)
-      .select(col("a_id"), col("b_id")).lineageCut(true)
-    val verts = e.select(col("vec_id")).lineageCut(true)
-    val n1 = verts.agg(count(lit(1)).as("n"))
-    var ranks = verts.crossJoin(broadcast(n1))
-      .select(col("vec_id"), (lit(1.0) / col("n")).as("r"))
-    for (_ <- 1 to 3) {
-      val contrib = edges
-        .join(ranks, col("a_id") === col("vec_id"))
-        .groupBy(col("b_id")).agg(sum(col("r") / lit(5.0)).as("c"))
-      ranks = verts.crossJoin(broadcast(n1))
-        .join(contrib, col("vec_id") === col("b_id"), "left")
-        .select(col("vec_id"),
-          round(lit(0.15) / col("n") + lit(0.85) * coalesce(col("c"), lit(0.0)), 12).as("r"))
-        // lazy: the round's stages still run when the cut is taken
-        // (see pageRankFull)
-        .lineageCut(false)
-    }
-    ranks
-      .select(col("vec_id"), (round(col("r"), 6) + lit(0.0)).as("pagerank"))
-      .orderBy(desc("pagerank"), asc("vec_id"))
-      .limit(20)
-  }
+  def pageRankKnn(spark: SparkSession, sfDir: String): DataFrame =
+    pageRank(Tables.embeddings(spark, sfDir).where(col("vec_id") < 500).select(col("vec_id")),
+      knnEdgesStored(spark, sfDir, 5).withColumn("od", lit(5L)))
 
   /** Per-cell centroid build shared by the Lloyd rounds: component means
     * rounded 6 dp (the IVF quantizer idiom — the rounding is also what
@@ -1869,9 +1850,8 @@ object Similarity {
     */
   private def driftInputs(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val baseDir = IndexStore.ensureVecBase(spark, sfDir)
     val e = Tables.embeddings(spark, sfDir)
-    val baseCent = spark.read.parquet(s"$baseDir/ivf_centroids")
+    val baseCent = IndexStore.readVecBase(spark, sfDir, "ivf_centroids")
       .select(col("cell"), col("cvec").as("base_cvec"))
     val nowCent = centroidsBuild(e).select(col("cell"), col("cvec").as("now_cvec"))
     val nBase = e.where(s"NOT (${IndexStore.VecDeltaPred})")
@@ -2487,7 +2467,7 @@ object Similarity {
     // truncated per cut, but the four frontier expansions are not one
     // job — under AQE each cut runs its round's shuffle stages when it is
     // taken; only the round's final stage waits for the next consumer
-    // (see pageRankFull).
+    // (see Checkpoints).
     for (d <- 1 to 4) {
       val frontier = dist.where(col("dist") === d - 1)
       val next = ed
@@ -2597,7 +2577,7 @@ object Similarity {
     // per cut, but the eight half-rounds are not one job: under AQE each
     // cut runs its half-round's shuffle and broadcast stages when it is
     // taken, and only the final stage waits for the consumer (see
-    // pageRankFull).
+    // Checkpoints).
     for (_ <- 1 to 4) {
       a = nodes.join(
         me.join(h.withColumnRenamed("node", "u"), Seq("u"))
@@ -2761,9 +2741,8 @@ object Similarity {
     * ppm-integer-divided before the 6-dp round.
     */
   def vecRetrainChurn(spark: SparkSession, sfDir: String): DataFrame = {
-    val baseDir = IndexStore.ensureVecBase(spark, sfDir)
     val e = Tables.embeddings(spark, sfDir)
-    val baseCent = spark.read.parquet(s"$baseDir/ivf_centroids")
+    val baseCent = IndexStore.readVecBase(spark, sfDir, "ivf_centroids")
     val baseAsg = ivfAssignBuild(e, baseCent)
       .select(col("vec_id"), col("cell").as("base_cell"))
     val nowAsg = ivfAssignBuild(e, centroidsBuild(e))

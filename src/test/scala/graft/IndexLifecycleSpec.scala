@@ -2,7 +2,6 @@ package graft
 
 import graft.ops.IndexStore
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The standing-store lifecycle, checked on all six stores the four
   * `index_*` registry keys build: a store is a fingerprint-keyed
@@ -13,36 +12,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 class IndexLifecycleSpec extends SparkSpec {
 
   private def marker(dir: String): Path = Paths.get(dir, "_GRAFT_INDEX_OK")
-
-  /** Spark jobs started while `body` runs. The listener bus delivers
-    * events in order, so once the sentinel job's start is seen every job
-    * `body` started has been counted.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-lifecycle-${System.nanoTime()}"
-    val sentinel = s"$group-sentinel"
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(`sentinel`) => sentinelSeen.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "ensure probe")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "listener bus sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "the sentinel job never reached the listener")
-      started.get()
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def leftovers(dirs: Seq[String]): Set[String] = {
     import scala.jdk.CollectionConverters._
@@ -97,7 +66,7 @@ class IndexLifecycleSpec extends SparkSpec {
     ensured.foreach { case (name, dir, ensure) =>
       val mtime = Files.getLastModifiedTime(marker(dir))
       var got = ""
-      assert(jobsDuring { got = ensure() } === 0, name)
+      assert(JobCount.jobsDuring(spark) { got = ensure() } === 0, name)
       assert(got === dir, name)
       assert(Files.getLastModifiedTime(marker(dir)) === mtime, name)
     }

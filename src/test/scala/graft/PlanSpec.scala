@@ -213,7 +213,8 @@ class PlanSpec extends SparkSpec {
       "text_keywords_per_doc",  // broadcast 1-row corpus count (J9 pattern)
       "dq_distribution_drift",  // broadcast 1-row grand-total aggregate
       "wk_q22_lapsed_customers", // broadcast 1-row balance threshold
-      "graph_pagerank_knn",     // 1-row vertex-count joins per PageRank round
+      "graph_pagerank_knn",     // 1-row vertex count joined once, into the initial ranks
+      "graph_pagerank_full",    // same one-time 1-row vertex-count join (M51 shape)
       "pipeline_token_budget_mix", // broadcast 1-row grand-total token/weight sums
       "vec_pca_power_iter",     // broadcast 1-row iterate/eigenvalue/count relations
       "ts_changepoint_cusum",   // broadcast 1-row total/n_days aggregate

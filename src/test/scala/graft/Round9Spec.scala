@@ -84,6 +84,17 @@ class Round9Spec extends SparkSpec {
     assert(nFiles > 0, "reliable checkpoint dir stayed empty — knob did not engage")
   }
 
+  test("checkpoint knob: full-corpus components are identical through reliable checkpoint(), and files land in the dir") {
+    val local = run("graph_cc_full").collect().toSeq
+    val (reliable, nFiles) = withReliableCheckpoints { dir =>
+      (run("graph_cc_full").collect().toSeq, checkpointFiles(dir))
+    }
+    assert(reliable === local)
+    assert(nFiles > 0, "reliable checkpoint dir stayed empty — knob did not engage")
+  }
+
+  // PageRank runs as one query with no lineage cut, so this no longer
+  // reaches checkpoint(); the components test above covers the knob
   test("checkpoint knob: PageRank over the kNN graph is identical through reliable checkpoint()") {
     val local = run("graph_pagerank_knn").collect().toSeq
     val reliable = withReliableCheckpoints { _ =>

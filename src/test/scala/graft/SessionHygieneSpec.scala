@@ -34,4 +34,17 @@ class SessionHygieneSpec extends SparkSpec {
       .map(_.name).filter(_.startsWith("graft_"))
     assert(graftFns.isEmpty, s"kernels registered session functions: ${graftFns.mkString(", ")}")
   }
+
+  test("the SQL function keys drop their temp function and still return the parent session's rows") {
+    val fresh = spark.newSession()
+    Seq("sql_udf_scalar", "sql_udf_table").foreach { k =>
+      val got = SparkEntry.queries(k)(fresh, sf)
+      assert(got.collect().toSeq === run(k).collect().toSeq, k)
+    }
+    Seq(fresh, spark).foreach { s =>
+      val graftFns = s.catalog.listFunctions().collect()
+        .map(_.name).filter(_.startsWith("graft_"))
+      assert(graftFns.isEmpty, s"left behind: ${graftFns.mkString(", ")}")
+    }
+  }
 }

@@ -23,6 +23,8 @@ object SparkSpec {
     s
   }
   val SF: String = "/root/testdata/sf0.001"
+  /** The next fixture up, for checks that must hold at two scales. */
+  val SF01: String = SF.replace("sf0.001", "sf0.01")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
