@@ -195,10 +195,6 @@ object IndexStore {
   private def vecUpd(sfDir: String) = Store(sfDir, "vecupd_", "embeddings",
     s"vecupd|${vecBase(sfDir).key}|$VecDeltaPred", vecsearchParams)
 
-  /** Corpus-version fingerprint of the embeddings fixture. */
-  private[graft] def corpusKey(sfDir: String): String = vecsearch(sfDir).key
-  private[graft] def mediaKey(sfDir: String): String = media(sfDir).key
-
   def indexDir(sfDir: String): String = vecsearch(sfDir).dir
   def mediaDir(sfDir: String): String = media(sfDir).dir
   def mediaBaseDir(sfDir: String): String = mediaBase(sfDir).dir

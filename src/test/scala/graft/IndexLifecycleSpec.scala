@@ -43,13 +43,12 @@ class IndexLifecycleSpec extends SparkSpec {
         "index_update_mediasig", "index_update_vecsearch")
       .foreach(k => assert(run(k).collect().nonEmpty, k))
 
-    // each store's directory name ends in its key, and its marker holds it
-    assert(Paths.get(IndexStore.indexDir(sf)).getFileName.toString ===
-      IndexStore.corpusKey(sf))
-    assert(IndexStore.mediaDir(sf).endsWith(s"_${IndexStore.mediaKey(sf)}"))
+    // each store's directory name is its prefix and then its key (the
+    // vecsearch store has no prefix), and its marker holds the key
     stores.foreach { case (name, dir) =>
       val leaf = Paths.get(dir).getFileName.toString
       val key = leaf.substring(leaf.lastIndexOf('_') + 1)
+      assert(leaf === (if (name == "vecsearch") key else s"${name}_$key"), name)
       assert(key.matches("[0-9a-f]{16}"), name)
       assert(Files.isRegularFile(marker(dir)), name)
       assert(Files.readString(marker(dir)) === key, name)

@@ -133,10 +133,17 @@ class Round9Spec extends SparkSpec {
     assert(stored === inline)
   }
 
+  /** A store's key: the leaf of its directory, after the store's prefix. */
+  private def storeKey(dir: String): String = {
+    val leaf = java.nio.file.Paths.get(dir).getFileName.toString
+    leaf.substring(leaf.lastIndexOf('_') + 1)
+  }
+  private def corpusKey(sfDir: String) = storeKey(ops.IndexStore.indexDir(sfDir))
+  private def mediaKey(sfDir: String) = storeKey(ops.IndexStore.mediaDir(sfDir))
+
   test("index store: corpus fingerprint is call-stable and fixture-distinct") {
-    assert(ops.IndexStore.corpusKey(sf) === ops.IndexStore.corpusKey(sf))
-    assert(ops.IndexStore.corpusKey(sf) !==
-      ops.IndexStore.corpusKey("/root/testdata/sf0.01"))
+    assert(corpusKey(sf) === corpusKey(sf))
+    assert(corpusKey(sf) !== corpusKey(SparkSpec.SF01))
   }
 
   test("media index store: stored pair relation is row-identical to the inline signature+band build") {
@@ -156,12 +163,11 @@ class Round9Spec extends SparkSpec {
   }
 
   test("media index store: fingerprint is documents-keyed and family-distinct from vecsearch") {
-    assert(ops.IndexStore.mediaKey(sf) === ops.IndexStore.mediaKey(sf))
-    assert(ops.IndexStore.mediaKey(sf) !==
-      ops.IndexStore.mediaKey("/root/testdata/sf0.01"))
+    assert(mediaKey(sf) === mediaKey(sf))
+    assert(mediaKey(sf) !== mediaKey(SparkSpec.SF01))
     // same fixture, different family → different key (a vecsearch build
     // can never be misread as a media build)
-    assert(ops.IndexStore.mediaKey(sf) !== ops.IndexStore.corpusKey(sf))
+    assert(mediaKey(sf) !== corpusKey(sf))
   }
 
   test("pipeline_eval_holdout: exactly 100 held out, counts reconcile, bottom-k plans as TakeOrdered") {
