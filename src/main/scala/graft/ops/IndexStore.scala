@@ -623,8 +623,8 @@ object IndexStore {
     * 10%. A static fixture can't mutate, so the split plays the role of
     * two snapshot ids; at 100 TB the delta set is the lake table's
     * changed-file manifest between snapshots.
-    */
-  /** Package-visible (ADVICE r11 #1): the oracle interpolates this into
+    *
+    * Package-visible (ADVICE r11 #1): the oracle interpolates this into
     * the `index_update_mediasig` SQL (via [[deltaPredOn]]) so changing the
     * delta definition can never silently diverge engine and oracle.
     */

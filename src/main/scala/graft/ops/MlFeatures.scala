@@ -41,21 +41,6 @@ object MlFeatures {
       .orderBy(col("event_id"))
   }
 
-  /** M90 ml_feature_hash — the hashing trick: words map to a fixed 64-slot
-    * feature space from the first hex nibble and the LOW two bits of the
-    * second nibble of md5 (`nib1 * 4 + nib2 % 4` — 6 uniform md5 bits,
-    * though not the leading six; nibbles decoded with plain ASCII
-    * arithmetic — `ascii(c) − (c ≥ 'a' ? 87 : 48)` — identical on any
-    * engine), giving
-    * every document a sparse bag-of-words vector with NO vocabulary
-    * build — the constant-memory featurizer for streaming/incremental
-    * training where a fitted vocabulary would go stale. Output: the
-    * nonzero (doc, slot, count) triples for the doc_id < 100 contract
-    * slice.
-    *
-    * 100 TB: one explode + one (doc, slot) keyed aggregate — linear in
-    * tokens; the feature space never materializes a dictionary.
-    */
   /** J26 ml_feature_scaler_fit — the "fit" half of a standard feature
     * scaler over the embedding matrix (leading 8 dimensions): per
     * dimension min/max (raw values, no arithmetic) and mean/std through
@@ -90,6 +75,21 @@ object MlFeatures {
           + lit(0.0)).as("std_x"))
       .orderBy(col("dim"))
 
+  /** M90 ml_feature_hash — the hashing trick: words map to a fixed 64-slot
+    * feature space from the first hex nibble and the LOW two bits of the
+    * second nibble of md5 (`nib1 * 4 + nib2 % 4` — 6 uniform md5 bits,
+    * though not the leading six; nibbles decoded with plain ASCII
+    * arithmetic — `ascii(c) − (c ≥ 'a' ? 87 : 48)` — identical on any
+    * engine), giving
+    * every document a sparse bag-of-words vector with NO vocabulary
+    * build — the constant-memory featurizer for streaming/incremental
+    * training where a fitted vocabulary would go stale. Output: the
+    * nonzero (doc, slot, count) triples for the doc_id < 100 contract
+    * slice.
+    *
+    * 100 TB: one explode + one (doc, slot) keyed aggregate — linear in
+    * tokens; the feature space never materializes a dictionary.
+    */
   def featureHash(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .where(col("doc_id") < 100)

@@ -122,28 +122,6 @@ object Multimodal {
       .orderBy(col("doc_id"))
   }
 
-  /** M59 mm_phash_hamming — banded-Hamming near-dup detection for binary
-    * media: a 60-bit block-level SimHash stands in for a perceptual hash
-    * (the codec-free convention of this file — the SIGNATURE pipeline is
-    * real, only the decode is faked), computed from the md5 of each
-    * 64-byte payload block: hex positions 1..30 each contribute TWO
-    * sign-sum bits (nibble high bit / nibble low bit — the M22 machinery
-    * at block granularity, widened round 8). The width is the load-bearing
-    * scale decision: the previous 16-bit signature had a ~1% RANDOM
-    * collision rate at the near-dup threshold, so the pair graph grew
-    * quadratically with the corpus (the sf1 slope study measured
-    * mm_phash_clusters at 131 s — pure collision noise); at 60 bits a
-    * random pair lands within Hamming 10 with p ≈ 7e-8 and the pair list
-    * tracks the true near-dup count. Candidate pairs come from the
-    * 4×15-bit band join; banding is lossless for Hamming ≤ 3 (pigeonhole)
-    * and probabilistic recall above (standard LSH trade — at larger
-    * corpora you add bands, not bits per band); the exact bit_count(xor)
-    * re-rank keeps distance ≤ 10 (set where the fixture's TRUE near-dups
-    * sit: 5–9 bits apart across all SFs, while random text stays ≥ ~20).
-    * Empty payloads carry no blocks and drop out before signing (the M48
-    * guard). At 100 TB: per-band keyed shuffles, never all-pairs — the
-    * media twin of the MinHash band join.
-    */
   /** The 60-bit block-SimHash signature stage of [[phashHamming]],
     * factored out (ADVICE r6 #4) so specs can validate it INDEPENDENTLY
     * of the band join: Round7Spec recomputes signatures for a synthetic
@@ -216,6 +194,28 @@ object Multimodal {
       .distinct()
   }
 
+  /** M59 mm_phash_hamming — banded-Hamming near-dup detection for binary
+    * media: a 60-bit block-level SimHash stands in for a perceptual hash
+    * (the codec-free convention of this file — the SIGNATURE pipeline is
+    * real, only the decode is faked), computed from the md5 of each
+    * 64-byte payload block: hex positions 1..30 each contribute TWO
+    * sign-sum bits (nibble high bit / nibble low bit — the M22 machinery
+    * at block granularity, widened round 8). The width is the load-bearing
+    * scale decision: the previous 16-bit signature had a ~1% RANDOM
+    * collision rate at the near-dup threshold, so the pair graph grew
+    * quadratically with the corpus (the sf1 slope study measured
+    * mm_phash_clusters at 131 s — pure collision noise); at 60 bits a
+    * random pair lands within Hamming 10 with p ≈ 7e-8 and the pair list
+    * tracks the true near-dup count. Candidate pairs come from the
+    * 4×15-bit band join; banding is lossless for Hamming ≤ 3 (pigeonhole)
+    * and probabilistic recall above (standard LSH trade — at larger
+    * corpora you add bands, not bits per band); the exact bit_count(xor)
+    * re-rank keeps distance ≤ 10 (set where the fixture's TRUE near-dups
+    * sit: 5–9 bits apart across all SFs, while random text stays ≥ ~20).
+    * Empty payloads carry no blocks and drop out before signing (the M48
+    * guard). At 100 TB: per-band keyed shuffles, never all-pairs — the
+    * media twin of the MinHash band join.
+    */
   def phashHamming(spark: SparkSession, sfDir: String): DataFrame =
     // serve-side: the signature pass and band join live in the standing
     // media index (round 9, IndexStore media family, build-on-first-use);

@@ -283,16 +283,6 @@ object Relational {
       .orderBy(col("doc_id"))
   }
 
-  /** A15 source_xml_roundtrip — the XML data source (bundled since Spark
-    * 4.0, when the external spark-xml package merged into core — the last
-    * bundled batch format the A-family didn't cover; feeds/exports and
-    * legacy enterprise interchange still speak XML). Orders serialize one
-    * `<order>` element per row, read back with an explicit schema (schema
-    * inference over 100 TB of XML is a full extra scan — never at scale),
-    * and the per-status aggregate must match the original parquet table
-    * byte-for-byte, proving the text round-trip loses nothing (doubles
-    * survive via shortest-repr formatting).
-    */
   /** A17 source_csv_permissive — malformed-row capture, the ingestion
     * feature a real lake lives on: land a CSV with DETERMINISTICALLY
     * corrupted rows (every doc_id ≡ 0 mod 7 gets a non-numeric payload),
@@ -322,6 +312,16 @@ object Relational {
         sum(col("payload")).as("sum_payload_good"))
   }
 
+  /** A15 source_xml_roundtrip — the XML data source (bundled since Spark
+    * 4.0, when the external spark-xml package merged into core — the last
+    * bundled batch format the A-family didn't cover; feeds/exports and
+    * legacy enterprise interchange still speak XML). Orders serialize one
+    * `<order>` element per row, read back with an explicit schema (schema
+    * inference over 100 TB of XML is a full extra scan — never at scale),
+    * and the per-status aggregate must match the original parquet table
+    * byte-for-byte, proving the text round-trip loses nothing (doubles
+    * survive via shortest-repr formatting).
+    */
   def sourceXmlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val out = Cols.tmpPath("graft_xml_orders")
     Tables.orders(spark, sfDir)

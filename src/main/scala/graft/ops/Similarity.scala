@@ -238,7 +238,8 @@ object Similarity {
   /** Exact top-`k` ground truth (a_id, b_id) for the query vectors `q`
     * (a_id, a_emb): broadcast queries × corpus, self-pairs dropped, ranked
     * by (dot desc, b_id) — the one recall denominator of [[annRecallAtK]],
-    * [[annRecallFull]], [[vecIvfRecallSweep]] and [[vecProbeAdaptive]].
+    * [[annRecallFull]], [[vecIvfRecallSweep]], [[vecProbeAdaptive]] and
+    * [[annMultitableTopk]].
     */
   private def exactTopK(e: DataFrame, q: DataFrame, k: Int): DataFrame = {
     val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
@@ -250,6 +251,41 @@ object Similarity {
       .where(col("rn") <= k)
       .select(col("a_id"), col("b_id"))
   }
+
+  /** The squared-L2 twin of [[exactTopK]]: exact top-`k` (a_id, b_id) by
+    * (d2 asc, b_id), the ground truth of the PQ recall harnesses
+    * [[pqRecallAtK]] and [[vecPqResidual]] — L2 is the metric PQ
+    * quantizes, so their recall isolates quantization loss from metric
+    * mismatch.
+    */
+  private def exactL2TopK(e: DataFrame, q: DataFrame, k: Int): DataFrame = {
+    val wEx = Window.partitionBy(col("a_id")).orderBy(asc("d2"), asc("b_id"))
+    e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
+      .join(broadcast(q))
+      .where(col("a_id") =!= col("b_id"))
+      // the pqEncode fold shape: diff vector, then dv·dv — IEEE-identical
+      // to DuckDB's list_dot_product over the same diff list
+      .withColumn("dv", expr(
+        "zip_with(a_emb, b_emb, (x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"))
+      .withColumn("d2", expr(
+        "aggregate(zip_with(dv, dv, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, v) -> a + v)"))
+      .withColumn("rn", row_number().over(wEx))
+      .where(col("rn") <= k)
+      .select(col("a_id"), col("b_id"))
+  }
+
+  /** Per-query recall counts of an approximate (a_id, b_id) top-k against
+    * its exact ground truth: (a_id, n_exact, n_hit), one row per query in
+    * `exact`. The shared tail of every per-query recall harness —
+    * [[annRecallAtK]], [[vecProbeAdaptive]], [[annRecallFull]],
+    * [[pqRecallAtK]], [[vecPqResidual]] and [[annMultitableTopk]].
+    */
+  private[graft] def recallCounts(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.join(approx.select(col("a_id"), col("b_id"), lit(1L).as("hit")),
+        Seq("a_id", "b_id"), "left")
+      .groupBy(col("a_id"))
+      .agg(count(lit(1)).as("n_exact"),
+        coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
 
   /** M37 ann_recall_at_k — the eval harness every ANN deployment needs:
     * recall@10 of the IVF index (nprobe=2) against exact brute-force
@@ -270,15 +306,10 @@ object Similarity {
     val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val exact = exactTopK(e, q, k)
     val ivf = ivfCandidates(spark, sfDir, qBound = 10, nprobe = 2)
       .withColumn("rn", row_number().over(wTop))
       .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
-    exact.join(ivf, Seq("a_id", "b_id"), "left")
-      .groupBy(col("a_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
+    recallCounts(exactTopK(e, q, k), ivf)
       .select(col("a_id"), col("n_exact"), col("n_hit"),
         (col("n_hit").cast("double") / col("n_exact")).as("recall"))
       .orderBy(col("a_id"))
@@ -364,12 +395,7 @@ object Similarity {
     val top = scored
       .withColumn("rn", row_number().over(wTop))
       .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
-    val exact = exactTopK(e, q, k)
-    exact.join(top, Seq("a_id", "b_id"), "left")
-      .groupBy(col("a_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
+    recallCounts(exactTopK(e, q, k), top)
       .join(cost, Seq("a_id"))
       .select(col("a_id"), col("n_probed"), col("n_cand"), col("n_exact"),
         col("n_hit"),
@@ -1035,14 +1061,7 @@ object Similarity {
     val k = IndexStore.KnnFullTopK // recall@K of the stored shortlist's own cut
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val exact = exactTopK(e, q, k)
-    val approx = knnFullEdges(spark, sfDir, k)
-      .where(col("a_id") < 10)
-      .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("a_id", "b_id"), "left")
-      .groupBy(col("a_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
+    recallCounts(exactTopK(e, q, k), knnFullEdges(spark, sfDir, k).where(col("a_id") < 10))
       .select(col("a_id"), col("n_exact"), col("n_hit"),
         (col("n_hit").cast("double") / col("n_exact")).as("recall"))
       .orderBy(col("a_id"))
@@ -1611,12 +1630,7 @@ object Similarity {
     // per-query LUT: d2(query subvector, every code), keyed s*16+c, packed
     // into one 64-slot array so the scan is pure element_at arithmetic
     val (packed, lut) = pqAdcArtifacts(spark, sfDir, qBound = 8)
-    val wTop = Window.partitionBy(col("a_id")).orderBy(asc("adc"), asc("b_id"))
-    packed.withColumnRenamed("vec_id", "b_id").crossJoin(broadcast(lut))
-      .where(col("b_id") =!= col("a_id"))
-      .withColumn("adc", adcExpr)
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= 10)
+    adcRanked(packed.withColumnRenamed("vec_id", "b_id").crossJoin(broadcast(lut)), 10, "rn")
       .select(col("a_id"), col("b_id"),
         (round(col("adc"), 6) + lit(0.0)).as("adc"), col("rn"))
       .orderBy(col("a_id"), col("rn"))
@@ -1838,32 +1852,11 @@ object Similarity {
     val e = Tables.embeddings(spark, sfDir)
     val k = 10
     val (packed, lut) = pqAdcArtifacts(spark, sfDir, qBound = 8)
-    val wAdc = Window.partitionBy(col("a_id")).orderBy(asc("adc"), asc("b_id"))
-    val adcTop = packed.withColumnRenamed("vec_id", "b_id").crossJoin(broadcast(lut))
-      .where(col("b_id") =!= col("a_id"))
-      .withColumn("adc", adcExpr)
-      .withColumn("rn", row_number().over(wAdc))
-      .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
+    val adcTop =
+      adcRanked(packed.withColumnRenamed("vec_id", "b_id").crossJoin(broadcast(lut)), k, "rn")
     val q = e.where(col("vec_id") < 8)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val wEx = Window.partitionBy(col("a_id")).orderBy(asc("d2"), asc("b_id"))
-    val exact = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      .join(broadcast(q))
-      .where(col("a_id") =!= col("b_id"))
-      // the pqEncode fold shape: diff vector, then dv·dv — IEEE-identical
-      // to DuckDB's list_dot_product over the same diff list
-      .withColumn("dv", expr(
-        "zip_with(a_emb, b_emb, (x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"))
-      .withColumn("d2", expr(
-        "aggregate(zip_with(dv, dv, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, v) -> a + v)"))
-      .withColumn("rn", row_number().over(wEx))
-      .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"))
-    exact.join(adcTop, Seq("a_id", "b_id"), "left")
-      .groupBy(col("a_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
+    recallCounts(exactL2TopK(e, q, k), adcTop)
       .select(col("a_id"), col("n_exact"), col("n_hit"),
         (col("n_hit").cast("double") / col("n_exact")).as("recall"))
       .orderBy(col("a_id"))
@@ -1964,6 +1957,22 @@ object Similarity {
     "element_at(lut, element_at(cds, 1) + 1) + element_at(lut, 16 + element_at(cds, 2) + 1) " +
       "+ element_at(lut, 32 + element_at(cds, 3) + 1) + element_at(lut, 48 + element_at(cds, 4) + 1)")
 
+  /** The ADC rank cut over a scored (a_id, b_id, cds, lut) relation:
+    * self-pairs dropped, the `adc` column added, and the top `k` per query
+    * by (adc asc, b_id) kept with their rank in column `rank`. The one
+    * ranking of [[vecPqAdcTopk]], [[pqRecallAtK]], [[annIvfPqTopk]],
+    * [[vecPqRerank]] (`rn_adc`), [[searchHybridRrf]] (`rn_adc`) and
+    * [[vecPqResidual]]; callers name the rank column so their output
+    * schemas keep their names.
+    */
+  private[graft] def adcRanked(scored: DataFrame, k: Int, rank: String): DataFrame = {
+    val wAdc = Window.partitionBy(col("a_id")).orderBy(asc("adc"), asc("b_id"))
+    scored.where(col("b_id") =!= col("a_id"))
+      .withColumn("adc", adcExpr)
+      .withColumn(rank, row_number().over(wAdc))
+      .where(col(rank) <= k)
+  }
+
   /** J23 ann_ivf_pq_topk — the COMPLETE IVF-PQ serving architecture (the
     * production design for vector search at 10⁹⁺ scale): the IVF coarse
     * quantizer routes each query to its nprobe=2 cells (same routing
@@ -1981,14 +1990,10 @@ object Similarity {
   def annIvfPqTopk(spark: SparkSession, sfDir: String): DataFrame = {
     val (assigned, probe) = ivfRouting(spark, sfDir, qBound = 8, nprobe = 2)
     val (packed, lut) = pqAdcArtifacts(spark, sfDir, qBound = 8)
-    val wTop = Window.partitionBy(col("a_id")).orderBy(asc("adc"), asc("b_id"))
-    assigned.select(col("vec_id").as("b_id"), col("cell"))
+    val scored = assigned.select(col("vec_id").as("b_id"), col("cell"))
       .join(packed.withColumnRenamed("vec_id", "b_id"), Seq("b_id"))
       .join(broadcast(probe.join(lut, Seq("a_id"))), Seq("cell"))
-      .where(col("b_id") =!= col("a_id"))
-      .withColumn("adc", adcExpr)
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= 10)
+    adcRanked(scored, 10, "rn")
       .select(col("a_id"), col("b_id"),
         (round(col("adc"), 6) + lit(0.0)).as("adc"), col("rn"))
       .orderBy(col("a_id"), col("rn"))
@@ -2009,13 +2014,8 @@ object Similarity {
   def vecPqRerank(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val (packed, lut) = pqAdcArtifacts(spark, sfDir, qBound = 8)
-    val wAdc = Window.partitionBy(col("a_id")).orderBy(asc("adc"), asc("b_id"))
-    val shortlist = packed.withColumnRenamed("vec_id", "b_id")
-      .crossJoin(broadcast(lut))
-      .where(col("b_id") =!= col("a_id"))
-      .withColumn("adc", adcExpr)
-      .withColumn("rn_adc", row_number().over(wAdc))
-      .where(col("rn_adc") <= 50)
+    val shortlist =
+      adcRanked(packed.withColumnRenamed("vec_id", "b_id").crossJoin(broadcast(lut)), 50, "rn_adc")
       .select(col("a_id"), col("b_id"), col("rn_adc"))
     val wExact = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
     broadcast(shortlist)
@@ -2060,12 +2060,8 @@ object Similarity {
       .where(col("rn_cos") <= 20)
       .select(col("a_id"), col("b_id"), col("rn_cos"))
     val (packed, lut) = pqAdcArtifacts(spark, sfDir, qBound = 8)
-    val wAdc = Window.partitionBy(col("a_id")).orderBy(asc("adc"), asc("b_id"))
-    val adc20 = packed.withColumnRenamed("vec_id", "b_id").crossJoin(broadcast(lut))
-      .where(col("b_id") =!= col("a_id"))
-      .withColumn("adc", adcExpr)
-      .withColumn("rn_adc", row_number().over(wAdc))
-      .where(col("rn_adc") <= 20)
+    val adc20 =
+      adcRanked(packed.withColumnRenamed("vec_id", "b_id").crossJoin(broadcast(lut)), 20, "rn_adc")
       .select(col("a_id"), col("b_id"), col("rn_adc"))
     val wF = Window.partitionBy(col("a_id")).orderBy(desc("rrf"), asc("b_id"))
     cos20.join(adc20, Seq("a_id", "b_id"), "full_outer")
@@ -2280,31 +2276,11 @@ object Similarity {
       .groupBy(col("a_id"), col("cell"))
       .agg(expr("transform(array_sort(collect_list(struct(s * 16 + c AS i, d2))), x -> x.d2)")
         .as("lut"))
-    val wAdc = Window.partitionBy(col("a_id")).orderBy(asc("adc"), asc("b_id"))
-    val adcTop = packed.withColumnRenamed("vec_id", "b_id")
-      .join(broadcast(lut), Seq("cell"))
-      .where(col("b_id") =!= col("a_id"))
-      .withColumn("adc", adcExpr)
-      .withColumn("rn", row_number().over(wAdc))
-      .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
+    val adcTop = adcRanked(
+      packed.withColumnRenamed("vec_id", "b_id").join(broadcast(lut), Seq("cell")), k, "rn")
     val q = e.where(col("vec_id") < 8)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val wEx = Window.partitionBy(col("a_id")).orderBy(asc("d2"), asc("b_id"))
-    val exact = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      .join(broadcast(q))
-      .where(col("a_id") =!= col("b_id"))
-      .withColumn("dv", expr(
-        "zip_with(a_emb, b_emb, (x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"))
-      .withColumn("d2", expr(
-        "aggregate(zip_with(dv, dv, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, v) -> a + v)"))
-      .withColumn("rn", row_number().over(wEx))
-      .where(col("rn") <= k)
-      .select(col("a_id"), col("b_id"))
-    exact.join(adcTop, Seq("a_id", "b_id"), "left")
-      .groupBy(col("a_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
+    recallCounts(exactL2TopK(e, q, k), adcTop)
       .select(col("a_id"), col("n_exact"), col("n_hit"),
         (col("n_hit").cast("double") / col("n_exact")).as("recall"))
       .orderBy(col("a_id"))
@@ -2397,20 +2373,9 @@ object Similarity {
     val approx = dotPairs(e, cand)
       .withColumn("rn", row_number().over(wTop))
       .where(col("rn") <= 8)
-      .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
     val q = e.where(col("vec_id") < 8)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val exact = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      .join(broadcast(q))
-      .where(col("a_id") =!= col("b_id"))
-      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))))
-      .where(col("rn") <= 8)
-      .select(col("a_id"), col("b_id"))
-    exact.join(approx, Seq("a_id", "b_id"), "left")
-      .groupBy(col("a_id"))
-      .agg(count(lit(1)).as("n_exact"), coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
+    recallCounts(exactTopK(e, q, 8), approx)
       .join(nCand, Seq("a_id"), "left")
       .select(col("a_id"), coalesce(col("n_cand"), lit(0L)).as("n_cand"),
         col("n_exact"), col("n_hit"),

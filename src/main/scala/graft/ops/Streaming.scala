@@ -449,18 +449,37 @@ object Streaming {
     }
   }
 
+  /** The state-store preconditions of every transformWithState builder
+    * ([[sessionizeV2]], [[statefulCountV2]], [[statefulProfileV2]],
+    * [[statefulCountV2Ttl]]).
+    *
+    * transformWithState requires the RocksDB state store provider even for
+    * its one-shot batch execution (the v2 column-family layout); this is
+    * the provider a production deployment of this library would run anyway.
+    * Set unconditionally (ADVICE r3: getOption returns the registered
+    * default even when unset, so an isEmpty guard is dead code — and a
+    * non-RocksDB user choice would only make transformWithState fail).
+    * Session-level by necessity (read at execution time, and the builders
+    * return a lazy plan); callers wanting conf isolation pass a DataFrame
+    * built on a cloned session, as [[streamStatefulCountV2]] does.
+    *
+    * Batch execution loads a state store outside any streaming query, so
+    * the coordinator endpoint must exist first (see GraftBridge); without
+    * it the exec's store RPC blocks for the full ask timeout during
+    * planning. The ensure is idempotent.
+    */
+  private def useRocksDbState(s: SparkSession): Unit = {
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    org.apache.spark.sql.GraftBridge.ensureStateStoreCoordinator(s)
+  }
+
   /** L9 v2 streaming body (timers require EventTime mode + a watermark). */
   def sessionizeV2(ev: DataFrame): org.apache.spark.sql.Dataset[ClosedSession] = {
     val s = ev.sparkSession
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    // transformWithState REQUIRES the RocksDB provider, so set it
-    // unconditionally (ADVICE r3: getOption returns the registered default
-    // even when unset, so an isEmpty guard never fires). Callers wanting
-    // conf isolation pass a DataFrame built on a cloned session, as
-    // streamStatefulCountV2 does.
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    useRocksDbState(s)
     ev.selectExpr("user_id", "ts_us", "ts")
       .as[(Long, Long, java.sql.Timestamp)]
       .groupByKey(_._1)
@@ -473,19 +492,7 @@ object Streaming {
     val s = ev.sparkSession
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    // transformWithState requires the RocksDB state store provider even for
-    // its one-shot batch execution (the v2 column-family layout); this is
-    // the provider a production deployment of this library would run anyway.
-    // Set unconditionally (ADVICE r3: getOption returns the registered
-    // default even when unset, so an isEmpty guard is dead code — and a
-    // non-RocksDB user choice would only make transformWithState fail).
-    // Session-level by necessity (read at execution time, and this builder
-    // returns a lazy plan); the contract entry isolates it on a clone.
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // batch execution loads a state store outside any streaming query —
-    // the coordinator endpoint must exist first (see GraftBridge)
-    org.apache.spark.sql.GraftBridge.ensureStateStoreCoordinator(s)
+    useRocksDbState(s)
     ev.selectExpr("user_id").as[Long]
       .groupByKey(identity)
       .transformWithState(new CountProcessor,
@@ -560,9 +567,7 @@ object Streaming {
     val s = ev.sparkSession
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    org.apache.spark.sql.GraftBridge.ensureStateStoreCoordinator(s)
+    useRocksDbState(s)
     ev.selectExpr("user_id", "event_type", "value")
       .as[(Long, String, Double)]
       .groupByKey(_._1)
@@ -572,17 +577,14 @@ object Streaming {
   }
 
   /** TTL twin builder (streaming only — TTL needs processing time). Same
-    * provider/coordinator preconditions as [[statefulCountV2]]: without the
-    * coordinator endpoint the exec's store RPC blocks for the full ask
-    * timeout during planning.
+    * provider/coordinator preconditions as [[statefulCountV2]]
+    * ([[useRocksDbState]]).
     */
   def statefulCountV2Ttl(ev: DataFrame, ttlMillis: Long): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    org.apache.spark.sql.GraftBridge.ensureStateStoreCoordinator(s)
+    useRocksDbState(s)
     ev.selectExpr("user_id").as[Long]
       .groupByKey(identity)
       .transformWithState(new CountProcessorTtl(ttlMillis),

@@ -127,28 +127,6 @@ object TextAnalysis {
       .orderBy(col("source"))
   }
 
-  /** pipeline_incremental_merge — the MERGE/upsert shape every incremental
-    * curation pipeline runs daily: today's crawl batch ⊕ the existing
-    * curated corpus, keyed by content fingerprint (the 8-token-prefix md5
-    * dedup_exact_keep_first uses, so cross-document collisions are real).
-    * Per the keep-first-seen convention:
-    *   - `batch_dup`: within-batch fingerprint collision (all but the
-    *     lowest doc_id) — dropped before the corpus is even consulted;
-    *   - `dup`: batch fingerprint already in the corpus — dropped,
-    *     first-seen wins;
-    *   - `insert`: unseen fingerprint — lands in the corpus;
-    *   - `keep`: existing corpus row — never rewritten (insert-only merge).
-    * Emits the per-action audit counts a production merge logs every run.
-    * The existing corpus is modeled as even doc_ids, the new batch as
-    * doc_ids divisible by 3 — overlapping on multiples of 6, so all four
-    * actions occur.
-    *
-    * 100 TB note: the whole merge is ONE keyed shuffle per input on the
-    * fingerprint — the batch side's dedup window and its membership join
-    * share the same hash partitioning, and the corpus side ships only its
-    * (fp)-projected distinct keys; no row of either side moves twice and
-    * nothing is cartesian (PlanSpec gate). The audit aggregate is 4 rows.
-    */
   /** The 8-token-prefix content fingerprint the whole exact-dedup/merge
     * family keys on (same expression as dedup_exact_keep_first).
     */
@@ -177,6 +155,28 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"), col("fp"), col("action"))
   }
 
+  /** pipeline_incremental_merge — the MERGE/upsert shape every incremental
+    * curation pipeline runs daily: today's crawl batch ⊕ the existing
+    * curated corpus, keyed by content fingerprint (the 8-token-prefix md5
+    * dedup_exact_keep_first uses, so cross-document collisions are real).
+    * Per the keep-first-seen convention:
+    *   - `batch_dup`: within-batch fingerprint collision (all but the
+    *     lowest doc_id) — dropped before the corpus is even consulted;
+    *   - `dup`: batch fingerprint already in the corpus — dropped,
+    *     first-seen wins;
+    *   - `insert`: unseen fingerprint — lands in the corpus;
+    *   - `keep`: existing corpus row — never rewritten (insert-only merge).
+    * Emits the per-action audit counts a production merge logs every run.
+    * The existing corpus is modeled as even doc_ids, the new batch as
+    * doc_ids divisible by 3 — overlapping on multiples of 6, so all four
+    * actions occur.
+    *
+    * 100 TB note: the whole merge is ONE keyed shuffle per input on the
+    * fingerprint — the batch side's dedup window and its membership join
+    * share the same hash partitioning, and the corpus side ships only its
+    * (fp)-projected distinct keys; no row of either side moves twice and
+    * nothing is cartesian (PlanSpec gate). The audit aggregate is 4 rows.
+    */
   def incrementalMerge(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), contentFp.as("fp"))
@@ -454,24 +454,12 @@ object TextAnalysis {
     * identical doubles on both engines, making the top-3 cut
     * deterministic. Doc-keyed rank window; df is one token-keyed agg.
     */
-  def keywordsPerDoc(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(spark, sfDir).where(col("doc_id") < 100)
-    val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-    val tf = toks.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-    val dfreq = toks.distinct().groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val n = docs.agg(count(lit(1)).as("n_docs"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(desc("tfidf"), asc("w"))
-    tf.join(dfreq, "w")
-      .crossJoin(broadcast(n))
-      .withColumn("idf", round(log(col("n_docs").cast("double") / col("df")), 6))
-      .withColumn("tfidf", col("tf") * col("idf"))
-      .withColumn("rk", row_number().over(w))
+  def keywordsPerDoc(spark: SparkSession, sfDir: String): DataFrame =
+    VectorText.tfidfRanked(Tables.documents(spark, sfDir).where(col("doc_id") < 100), "rk")
       .where(col("rk") <= 3)
       .select(col("doc_id"), col("rk"), col("w").as("term"), col("tf"),
         round(col("tfidf"), 6).as("tfidf"))
       .orderBy(col("doc_id"), col("rk"))
-  }
 
   /** text_pii_redact — the PII scrubbing pass a public-web corpus gets
     * before training: regex-redact emails and phone numbers, count the
@@ -989,21 +977,6 @@ object TextAnalysis {
       .limit(20)
   }
 
-  /** M93 pipeline_version_hash — content-addressable dataset versioning:
-    * every (doc_id, text) pair contributes a 32-bit word decoded from its
-    * md5 head (the M90 nibble arithmetic ×8), and the corpus version is
-    * the XOR of all words — ORDER-INDEPENDENT by construction, so the
-    * same logical corpus yields the same version under any partitioning,
-    * split count, engine, or shuffle plan. Per-source subversions compose
-    * the same way (XOR is the mergeable aggregate), and any single-row
-    * change flips the version with probability 1 − 2⁻³². This is the
-    * "did the input actually change" primitive that gates incremental
-    * rebuilds and pins training-data provenance.
-    *
-    * 100 TB: one scan, one keyed XOR aggregate (map-side combinable);
-    * the version of a union of shards is the XOR of shard versions —
-    * verifiable without re-reading data.
-    */
   /** Per-row version words for [[versionHash]], factored over an ARBITRARY
     * (doc_id, text, source) input so the partitioning-invariance property
     * is testable against a reshuffled physical layout of the same corpus
@@ -1020,6 +993,21 @@ object TextAnalysis {
       .select(col("source"), expr(s"CAST($wordExpr AS BIGINT)").as("w"))
   }
 
+  /** M93 pipeline_version_hash — content-addressable dataset versioning:
+    * every (doc_id, text) pair contributes a 32-bit word decoded from its
+    * md5 head (the M90 nibble arithmetic ×8), and the corpus version is
+    * the XOR of all words — ORDER-INDEPENDENT by construction, so the
+    * same logical corpus yields the same version under any partitioning,
+    * split count, engine, or shuffle plan. Per-source subversions compose
+    * the same way (XOR is the mergeable aggregate), and any single-row
+    * change flips the version with probability 1 − 2⁻³². This is the
+    * "did the input actually change" primitive that gates incremental
+    * rebuilds and pins training-data provenance.
+    *
+    * 100 TB: one scan, one keyed XOR aggregate (map-side combinable);
+    * the version of a union of shards is the XOR of shard versions —
+    * verifiable without re-reading data.
+    */
   def versionHash(spark: SparkSession, sfDir: String): DataFrame = {
     val d = versionWords(Tables.documents(spark, sfDir))
     val perSource = d.groupBy(col("source"))

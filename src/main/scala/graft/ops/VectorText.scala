@@ -214,8 +214,23 @@ object VectorText {
       .orderBy(col("source"))
 
   /** J9 — tf·idf argmax term per doc; idf = ln(N/df) rounded 6 dp. */
-  def textTfidfTop(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).where(col("doc_id") < 50)
+  def textTfidfTop(spark: SparkSession, sfDir: String): DataFrame =
+    tfidfRanked(Tables.documents(spark, sfDir).where(col("doc_id") < 50), "rn")
+      .where(col("rn") === 1)
+      .select(col("doc_id"), col("w").as("term"), col("tf"), col("idf"),
+        round(col("tfidf"), 6).as("tfidf"))
+      .orderBy(col("doc_id"))
+
+  /** Per-document tf-idf ranking over a bounded `docs` slice: every
+    * (doc_id, w) with its raw count `tf`, `idf` = ln(N/df) rounded 6 dp,
+    * `tfidf` = tf·idf and its rank within the doc by (tfidf desc, w) in
+    * column `rank`. Rounding the idf BEFORE ranking makes the rank key one
+    * exact-int × rounded-double multiply — identical doubles on both
+    * engines, so any rank cut is deterministic. Shared by
+    * [[textTfidfTop]] (rank 1) and [[TextAnalysis.keywordsPerDoc]]
+    * (top 3); each caller applies its own cut and output columns.
+    */
+  private[graft] def tfidfRanked(docs: DataFrame, rank: String): DataFrame = {
     val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
     val tf = toks.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
     val dfreq = toks.distinct().groupBy(col("w")).agg(count(lit(1)).as("df"))
@@ -225,11 +240,7 @@ object VectorText {
       .crossJoin(broadcast(n))
       .withColumn("idf", round(log(col("n_docs").cast("double") / col("df")), 6))
       .withColumn("tfidf", col("tf") * col("idf"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col("doc_id"), col("w").as("term"), col("tf"), col("idf"),
-        round(col("tfidf"), 6).as("tfidf"))
-      .orderBy(col("doc_id"))
+      .withColumn(rank, row_number().over(w))
   }
 
   /** M36 text_sparse_cosine_topk — document-pair cosine similarity over

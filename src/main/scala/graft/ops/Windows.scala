@@ -183,14 +183,6 @@ object Windows {
       .orderBy(col("r_name"), col("n_name"))
   }
 
-  /** F9 — gaps-and-islands: longest run of CONSECUTIVE order days per
-    * customer. The classic `day − row_number()` island id — constant
-    * within a consecutive run, distinct across gaps. Days are epoch-day
-    * integers (datediff from 1970-01-01) so the arithmetic is identical
-    * on every engine; the window partitions by customer (never global),
-    * and both aggregations shuffle on the customer key. The production
-    * shape for retention / streak features at any scale.
-    */
   /** Core of F9 over any distinct (o_custkey, d) relation — separated so
     * PropertiesSpec can law-check it against a brute-force model.
     */
@@ -208,6 +200,14 @@ object Windows {
       .orderBy(col("o_custkey"))
   }
 
+  /** F9 — gaps-and-islands: longest run of CONSECUTIVE order days per
+    * customer. The classic `day − row_number()` island id — constant
+    * within a consecutive run, distinct across gaps. Days are epoch-day
+    * integers (datediff from 1970-01-01) so the arithmetic is identical
+    * on every engine; the window partitions by customer (never global),
+    * and both aggregations shuffle on the customer key. The production
+    * shape for retention / streak features at any scale.
+    */
   def winStreakIslands(spark: SparkSession, sfDir: String): DataFrame =
     streaksOf(Tables.orders(spark, sfDir)
       .select(col("o_custkey"),

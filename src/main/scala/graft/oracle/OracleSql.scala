@@ -237,12 +237,11 @@ object OracleSql {
       s"SELECT doc_id, CAST($simExpr AS INT) AS simhash FROM sums ORDER BY doc_id"
   }
 
-  /** Transitive-closure component labels over the LSH-verified pair graph;
-    * shared by dedup_connected_components (propagation loop) and its
-    * large-star/small-star twin dedup_connected_components_v2.
-    */
-  /** The recursive chain up to per-node component labels, reused by the
-    * CC contract queries AND the canonical-pick composition below.
+  /** Transitive-closure component labels over the LSH-verified pair graph:
+    * the recursive chain up to per-node component labels, reused by the
+    * CC contract queries (dedup_connected_components and its
+    * large-star/small-star twin dedup_connected_components_v2) AND the
+    * canonical-pick composition below.
     */
   private val componentChain: String =
     s"WITH RECURSIVE $lshPairChain, " +

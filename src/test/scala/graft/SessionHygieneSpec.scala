@@ -35,6 +35,18 @@ class SessionHygieneSpec extends SparkSpec {
     assert(graftFns.isEmpty, s"kernels registered session functions: ${graftFns.mkString(", ")}")
   }
 
+  test("the LSH keys leave no cached relation in the session") {
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    spark.catalog.clearCache()
+    val fresh = spark.newSession()
+    Seq("dedup_minhash_pairs", "dedup_connected_components",
+      "dedup_connected_components_v2", "dedup_cluster_canonical", "dedup_lsh_recall_eval",
+      "dedup_band_tuning_sweep", "dedup_multi_signal")
+      .foreach(k => SparkEntry.queries(k)(fresh, sf).collect())
+    assert(cacheManager.isEmpty, "an LSH key left a relation in the shared CacheManager")
+  }
+
   test("the SQL function keys drop their temp function and still return the parent session's rows") {
     val fresh = spark.newSession()
     Seq("sql_udf_scalar", "sql_udf_table").foreach { k =>
