@@ -510,7 +510,6 @@ object Dedup {
     * treatment before the join.
     */
   def shingleContainment(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sh = shingles(spark, sfDir, Int.MaxValue)
     val probe = sh.where(col("doc_id") < 50)
       .select(col("doc_id").as("a_id"), col("s"))
@@ -521,10 +520,7 @@ object Dedup {
       .where(col("b_id") =!= col("a_id"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("inter"))
-    val w = Window.partitionBy(col("a_id")).orderBy(desc("inter"), asc("b_id"))
-    inter.join(broadcast(na), Seq("a_id"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 3)
+    Similarity.topPerQuery(inter.join(broadcast(na), Seq("a_id")), desc("inter"), 3)
       .withColumn("containment",
         round(col("inter").cast("double") / col("n_a").cast("double"), 6) + lit(0.0))
       .where(col("containment") >= 0.05)

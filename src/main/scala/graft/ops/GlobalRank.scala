@@ -22,26 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object GlobalRank {
 
-  /** Plan-gate hook (ADVICE r6 #2): `localCheckpoint` truncates lineage,
-    * so the heavy ranking stage's rangepartitioning is INVISIBLE in any
-    * consumer's executedPlan — a spec asserting on the consumer would
-    * silently pass even if the ranking regressed to a grouped window.
-    * With `capturePlans` on, the physical plan of each checkpointed stage
-    * is recorded here at materialization time, letting PlanSpec assert on
-    * the plan that actually executed. Off (zero-cost) outside specs.
+  /** localCheckpoint by default; the spark.graft.checkpointDir knob
+    * switches to reliable checkpoint() (see [[Checkpoints]]) — the ranked
+    * relation is the durability-critical pin here (two consumers of one
+    * RangePartitioner sample), so at cluster scale it should survive
+    * executor loss like every other lineage cut. The cut truncates
+    * lineage, so the ranking stage's plan shows only in the checkpoint
+    * action's own query execution, not in any consumer's executedPlan.
     */
-  @volatile private[graft] var capturePlans = false
-  @volatile private[graft] var lastRankedPlan: String = ""
-
-  private def checkpointEagerly(df: DataFrame): DataFrame = {
-    if (capturePlans) lastRankedPlan = df.queryExecution.executedPlan.toString
-    // localCheckpoint by default; the spark.graft.checkpointDir knob
-    // switches to reliable checkpoint() (see [[Checkpoints]]) — the
-    // ranked relation is the durability-critical pin here (two consumers
-    // of one RangePartitioner sample), so at cluster scale it should
-    // survive executor loss like every other lineage cut.
+  private def checkpointEagerly(df: DataFrame): DataFrame =
     Checkpoints.cut(df, eager = true)
-  }
 
   /** Appends `rn` (global row_number over `order`) and `n_total` to `df`
     * without a single-partition sort. The `order` columns MUST be a unique

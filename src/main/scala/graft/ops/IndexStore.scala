@@ -871,12 +871,8 @@ object IndexStore {
             s"$tmp/knn_pairs_delta")
           val deltaPairs = GraftParquet.read(spark, s"$tmp/knn_pairs_delta")
           val baseShort = GraftParquet.read(spark, s"$baseDir/knn_candidates_full")
-          val wTop = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("a_id")).orderBy(col("dot").desc, col("b_id").asc)
-          write(baseShort.unionByName(deltaPairs)
-              .withColumn("rn", row_number().over(wTop))
-              .where(col("rn") <= KnnFullTopK)
-              .drop("rn"),
+          write(Similarity.topPerQuery(baseShort.unionByName(deltaPairs),
+              desc("dot"), KnnFullTopK).drop("rn"),
             s"$tmp/knn_candidates_full")
         },
         // lane 2 — delta encode, merged codes, delta-only packed words

@@ -23,6 +23,28 @@ object Similarity {
       when(element_at(col(emb), i + 1) > 0f, math.pow(2, i).toInt).otherwise(0)
     }.reduce(_ + _).cast("int")
 
+  /** The per-query rank cut of every neighbour search: column `rank` =
+    * row_number over (a_id) ordered by `score` with `b_id` breaking ties
+    * (the cross-engine determinism rule), and only `rank` ≤ `k` kept. The
+    * caller picks the score direction (`desc("dot")`, `asc("d2")`, ...).
+    */
+  private[graft] def topPerQuery(scored: DataFrame, score: Column, k: Int,
+      rank: String = "rn"): DataFrame =
+    scored
+      .withColumn(rank, row_number().over(
+        Window.partitionBy(col("a_id")).orderBy(score, asc("b_id"))))
+      .where(col(rank) <= k)
+
+  /** The IVF routing rank over a (vec_id, cell, d) relation: `crn` =
+    * row_number per vector by (d desc, cell asc), the `n` nearest cells
+    * kept.
+    */
+  private def nearestCells(scored: DataFrame, n: Int): DataFrame =
+    scored
+      .withColumn("crn", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(desc("d"), asc("cell"))))
+      .where(col("crn") <= n)
+
   /** The shared per-label centroid quantizer BUILD (cell, cvec) — one
     * supervised k-means M-step, components integerized at 2^20 (ADVICE r6
     * #5: exact LONG component sums → order-independent by construction)
@@ -142,12 +164,9 @@ object Similarity {
       qBound: Int, maxProbe: Int): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val cent = IndexStore.read(spark, sfDir, "ivf_centroids")
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(desc("d"), asc("cell"))
-    e.where(col("vec_id") < qBound)
-      .crossJoin(broadcast(cent))
-      .withColumn("d", dot(col("embedding"), col("cvec")))
-      .withColumn("crn", row_number().over(wAssign))
-      .where(col("crn") <= maxProbe)
+    nearestCells(e.where(col("vec_id") < qBound)
+        .crossJoin(broadcast(cent))
+        .withColumn("d", dot(col("embedding"), col("cvec"))), maxProbe)
       .select(col("vec_id").as("a_id"), col("cell"), col("crn"))
   }
 
@@ -162,15 +181,11 @@ object Similarity {
     * full cross join never exists. Recall < 1 by design — the oracle
     * replicates the algorithm, so results still hash-match.
     */
-  def annIvfTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
-    ivfCandidates(spark, sfDir, qBound = 20, nprobe = 2)
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= 3)
+  def annIvfTopk(spark: SparkSession, sfDir: String): DataFrame =
+    topPerQuery(ivfCandidates(spark, sfDir, qBound = 20, nprobe = 2), desc("sim_raw"), 3)
       .select(col("a_id"), col("b_id"),
         (round(col("sim_raw"), 4) + lit(0.0)).as("sim"), col("rn"))
       .orderBy(col("a_id"), col("rn"))
-  }
 
   /** J31 vec_ivf_recall_sweep (round 12) — the recall/cost CURVE the M37
     * point measurement sits on: recall@10 of the IVF index at nprobe = 1,
@@ -209,11 +224,8 @@ object Similarity {
       .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
       .select(col("a_id"), col("b_id"), col("crn"), col("sim_raw"))
       .lineageCut(true) // three arms + nothing else re-reads the corpus
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
     val arms = (1 to 3).map { p =>
-      scored.where(col("crn") <= p)
-        .withColumn("rn", row_number().over(wTop))
-        .where(col("rn") <= k)
+      topPerQuery(scored.where(col("crn") <= p), desc("sim_raw"), k)
         .select(lit(p).as("nprobe"), col("a_id"), col("b_id"))
     }.reduce(_ unionByName _)
     val exact = exactTopK(e, q, k)
@@ -241,16 +253,12 @@ object Similarity {
     * [[annRecallFull]], [[vecIvfRecallSweep]], [[vecProbeAdaptive]] and
     * [[annMultitableTopk]].
     */
-  private def exactTopK(e: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
-    e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      .join(broadcast(q))
-      .where(col("a_id") =!= col("b_id"))
-      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
+  private def exactTopK(e: DataFrame, q: DataFrame, k: Int): DataFrame =
+    topPerQuery(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
+        .join(broadcast(q))
+        .where(col("a_id") =!= col("b_id"))
+        .withColumn("sim_raw", dot(col("a_emb"), col("b_emb"))), desc("sim_raw"), k)
       .select(col("a_id"), col("b_id"))
-  }
 
   /** The squared-L2 twin of [[exactTopK]]: exact top-`k` (a_id, b_id) by
     * (d2 asc, b_id), the ground truth of the PQ recall harnesses
@@ -258,21 +266,18 @@ object Similarity {
     * quantizes, so their recall isolates quantization loss from metric
     * mismatch.
     */
-  private def exactL2TopK(e: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    val wEx = Window.partitionBy(col("a_id")).orderBy(asc("d2"), asc("b_id"))
-    e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      .join(broadcast(q))
-      .where(col("a_id") =!= col("b_id"))
-      // the pqEncode fold shape: diff vector, then dv·dv — IEEE-identical
-      // to DuckDB's list_dot_product over the same diff list
-      .withColumn("dv", expr(
-        "zip_with(a_emb, b_emb, (x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"))
-      .withColumn("d2", expr(
-        "aggregate(zip_with(dv, dv, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, v) -> a + v)"))
-      .withColumn("rn", row_number().over(wEx))
-      .where(col("rn") <= k)
+  private def exactL2TopK(e: DataFrame, q: DataFrame, k: Int): DataFrame =
+    topPerQuery(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
+        .join(broadcast(q))
+        .where(col("a_id") =!= col("b_id"))
+        // the pqEncode fold shape: diff vector, then dv·dv — IEEE-identical
+        // to DuckDB's list_dot_product over the same diff list
+        .withColumn("dv", expr(
+          "zip_with(a_emb, b_emb, (x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"))
+        .withColumn("d2", expr(
+          "aggregate(zip_with(dv, dv, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, v) -> a + v)")),
+        asc("d2"), k)
       .select(col("a_id"), col("b_id"))
-  }
 
   /** Per-query recall counts of an approximate (a_id, b_id) top-k against
     * its exact ground truth: (a_id, n_exact, n_hit), one row per query in
@@ -303,12 +308,9 @@ object Similarity {
   def annRecallAtK(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val k = 10
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val ivf = ivfCandidates(spark, sfDir, qBound = 10, nprobe = 2)
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
+    val ivf = topPerQuery(ivfCandidates(spark, sfDir, qBound = 10, nprobe = 2), desc("sim_raw"), k)
     recallCounts(exactTopK(e, q, k), ivf)
       .select(col("a_id"), col("n_exact"), col("n_hit"),
         (col("n_hit").cast("double") / col("n_exact")).as("recall"))
@@ -377,7 +379,6 @@ object Similarity {
       .crossJoin(broadcast(floorRel))
       .where(col("cum_before") < col("floor_cnt"))
       .select(col("a_id"), col("cell"))
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
     // the sweep's pruned-id candidate shape: broadcast probe join first,
     // embeddings attached only to surviving list entries
     val scored = assigned
@@ -392,10 +393,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_cand"))
       .join(probe.groupBy(col("a_id")).agg(count(lit(1)).as("n_probed")),
         Seq("a_id"))
-    val top = scored
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
-    recallCounts(exactTopK(e, q, k), top)
+    recallCounts(exactTopK(e, q, k), topPerQuery(scored, desc("sim_raw"), k))
       .join(cost, Seq("a_id"))
       .select(col("a_id"), col("n_probed"), col("n_cand"), col("n_exact"),
         col("n_hit"),
@@ -411,13 +409,10 @@ object Similarity {
         bucketCol("embedding").as("bucket"))
     val c = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
       bucketCol("embedding").as("bucket"))
-    val w = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
-    c.join(broadcast(q), Seq("bucket"))
-      .where(col("a_id") =!= col("b_id"))
-      // codegen'd kernel; IEEE-identical to the HOF form (see DotProduct)
-      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 3)
+    topPerQuery(c.join(broadcast(q), Seq("bucket"))
+        .where(col("a_id") =!= col("b_id"))
+        // codegen'd kernel; IEEE-identical to the HOF form (see DotProduct)
+        .withColumn("sim_raw", dot(col("a_emb"), col("b_emb"))), desc("sim_raw"), 3)
       .select(col("a_id"), col("bucket"), col("b_id"),
         (round(col("sim_raw"), 4) + lit(0.0)).as("sim"), col("rn"))
       .orderBy(col("a_id"), col("rn"))
@@ -436,13 +431,9 @@ object Similarity {
     * relation: a top-k cut of [[knnCandidates]] ((dot desc, b_id) total
     * order) served from the store, no rebuild.
     */
-  private[graft] def knnEdgesStored(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("dot"), asc("b_id"))
-    knnCandidatesStored(spark, sfDir)
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
+  private[graft] def knnEdgesStored(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    topPerQuery(knnCandidatesStored(spark, sfDir), desc("dot"), k)
       .select(col("a_id"), col("b_id"))
-  }
 
   /** The FULL-CORPUS kNN candidate relation (VERDICT r9 #1 / r10 #1) —
     * the `knn_candidates` idea with NO vec_id bound and cells that scale
@@ -602,12 +593,9 @@ object Similarity {
   private[graft] def knnShortlistCut(keyed: DataFrame, k: Int): DataFrame = {
     val wPre = Window.partitionBy(col("cell"), col("bucket"), col("a_id"))
       .orderBy(desc("dot"), asc("b_id"))
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("dot"), asc("b_id"))
-    keyed
-      .withColumn("prn", row_number().over(wPre))
-      .where(col("prn") <= k)
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
+    topPerQuery(keyed
+        .withColumn("prn", row_number().over(wPre))
+        .where(col("prn") <= k), desc("dot"), k)
       .select(col("a_id"), col("b_id"), col("dot"))
   }
 
@@ -827,13 +815,7 @@ object Similarity {
     // (optimization round 16; one hash exchange + sort removed per
     // consumer).
     if (k == IndexStore.KnnFullTopK) stored.select(col("a_id"), col("b_id"))
-    else {
-      val wTop = Window.partitionBy(col("a_id")).orderBy(desc("dot"), asc("b_id"))
-      stored
-        .withColumn("rn", row_number().over(wTop))
-        .where(col("rn") <= k)
-        .select(col("a_id"), col("b_id"))
-    }
+    else topPerQuery(stored, desc("dot"), k).select(col("a_id"), col("b_id"))
   }
 
   /** MUTUAL 8-NN edges over the whole corpus (reciprocated in both top-8
@@ -906,20 +888,12 @@ object Similarity {
     var nEdges = prevEdges
     while (rounds < KcoreFullMaxRounds && !converged) {
       rounds += 1
-      val adj = edges.select(col("u").as("x"))
-        .unionAll(edges.select(col("v").as("x")))
-      // lazy cut (optimization round 16): the degree aggregate's shuffle
+      // lazy cuts (optimization round 16): the degree aggregate's shuffle
       // runs when the cut is taken (AQE, see Checkpoints); its final
       // stage rides the round's count action, and both semi-join
       // references read the one checkpointed copy
-      val alive = adj.groupBy(col("x")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= KcoreFullK)
-        .select(col("x"))
-        .lineageCut(false)
-      edges = edges
-        .join(alive.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
-        .join(alive.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-        .lineageCut(false)
+      val (alive, survivors) = kcorePeelRound(edges, KcoreFullK, eager = false)
+      edges = survivors
       // ONE count action per round (optimization round 17; was an eager
       // edge checkpoint plus two scalar counts): the loop control needs
       // exactly two numbers, so read them in one action whose execution
@@ -1077,15 +1051,11 @@ object Similarity {
     * Θ(n·√n) build amortized across every consumer — this query itself
     * is a map-only scan + per-key top-k, no corpus² anywhere.
     */
-  def vecKnnJoinFull(spark: SparkSession, sfDir: String): DataFrame = {
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("dot"), asc("b_id"))
-    knnCandidatesFullStored(spark, sfDir)
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= 3)
+  def vecKnnJoinFull(spark: SparkSession, sfDir: String): DataFrame =
+    topPerQuery(knnCandidatesFullStored(spark, sfDir), desc("dot"), 3)
       .select(col("a_id"), col("b_id"),
         (round(col("dot"), 4) + lit(0.0)).as("sim"), col("rn"))
       .orderBy(col("a_id"), col("rn"))
-  }
 
   /** The cell-pruned kNN candidate relation (a_id, b_id, dot), before
     * any rank cut: the build behind the standing `knn_candidates`
@@ -1119,15 +1089,12 @@ object Similarity {
     */
   private[graft] def knnCandidates(e: DataFrame, nprobe: Int): DataFrame = {
     val cent = centroidsBuild(e).lineageCut(true)
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(desc("d"), asc("cell"))
     // (vec_id, cell, crn ≤ nprobe): the routing table — pinned because the
     // assigned (crn=1) and probe (crn≤nprobe) slices both read it, and at
     // 100 TB it is exactly what an IVF index persists bucketed by cell.
-    val cells = e.crossJoin(broadcast(cent))
-      .withColumn("d", dot(col("embedding"), col("cvec")))
-      .select(col("vec_id"), col("cell"), col("d"))
-      .withColumn("crn", row_number().over(wAssign))
-      .where(col("crn") <= nprobe)
+    val cells = nearestCells(e.crossJoin(broadcast(cent))
+        .withColumn("d", dot(col("embedding"), col("cvec")))
+        .select(col("vec_id"), col("cell"), col("d")), nprobe)
       .select(col("vec_id"), col("cell"), col("crn"))
       .lineageCut(true)
     val assigned = cells.where(col("crn") === 1)
@@ -1156,13 +1123,10 @@ object Similarity {
   def vecHardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir).where(col("vec_id") < 500)
       .select(col("vec_id"), col("label"))
-    val w = Window.partitionBy(col("a_id")).orderBy(desc("dot"), asc("b_id"))
-    knnCandidatesStored(spark, sfDir)
-      .join(e.select(col("vec_id").as("a_id"), col("label").as("a_label")), Seq("a_id"))
-      .join(e.select(col("vec_id").as("b_id"), col("label").as("b_label")), Seq("b_id"))
-      .where(col("b_label") =!= col("a_label"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 3)
+    topPerQuery(knnCandidatesStored(spark, sfDir)
+        .join(e.select(col("vec_id").as("a_id"), col("label").as("a_label")), Seq("a_id"))
+        .join(e.select(col("vec_id").as("b_id"), col("label").as("b_label")), Seq("b_id"))
+        .where(col("b_label") =!= col("a_label")), desc("dot"), 3)
       .select(col("a_id"), col("a_label"), col("b_id"), col("b_label"),
         (round(col("dot"), 4) + lit(0.0)).as("sim"), col("rn"))
       .orderBy(col("a_id"), col("rn"))
@@ -1438,21 +1402,16 @@ object Similarity {
   def vecMatryoshkaEval(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val k = 10
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
     val pairs = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
       .join(broadcast(q))
       .where(col("a_id") =!= col("b_id"))
-    val full = pairs
-      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
+    val full = topPerQuery(
+        pairs.withColumn("sim_raw", dot(col("a_emb"), col("b_emb"))), desc("sim_raw"), k)
       .select(col("a_id"), col("b_id"))
-    val trunc = pairs
-      .withColumn("sim_raw", dot(slice(col("a_emb"), 1, 16), slice(col("b_emb"), 1, 16)))
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= k)
+    val trunc = topPerQuery(pairs.withColumn("sim_raw",
+        dot(slice(col("a_emb"), 1, 16), slice(col("b_emb"), 1, 16))), desc("sim_raw"), k)
       .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
     full.join(trunc, Seq("a_id", "b_id"), "left")
       .groupBy(col("a_id"))
@@ -1498,10 +1457,9 @@ object Similarity {
   /** The PQ index-build shared by vec_pq_adc_topk / vec_pq_error: 4
     * subspaces of 16 dims, a 16-entry codebook per subspace TRAINED with
     * one Lloyd round (VERDICT r7 #3) — init from the first 16 vectors
-    * (the standard cheap bootstrap, kept as [[pqIndexSampled]] for the
-    * quality spec), assign the whole corpus to its argmin code, then
-    * recompute each code as the mean of its assigned subvectors through
-    * the 2^20 fixed-point protocol (exact LONG component sums →
+    * (the standard cheap bootstrap), assign the whole corpus to its
+    * argmin code, then recompute each code as the mean of its assigned
+    * subvectors through the 2^20 fixed-point protocol (exact LONG component sums →
     * order-independent, round 6 dp — the J17/J18 centroid discipline), a
     * dead code keeping its init entry. Returns (codebook, codes):
     * `codebook` = (s, c, cb double[16]); `codes` = per-vector (vec_id, s,
@@ -1549,16 +1507,6 @@ object Similarity {
   private[graft] def pqEncodeAgainst(e: DataFrame, cb: DataFrame): DataFrame =
     pqEncode(pqSubvectors(e), cb)
       .select(col("vec_id"), col("s"), col("code"), col("qerr"))
-
-  /** The untrained (first-16-sampled) PQ index — the bootstrap [[pqIndex]]
-    * now trains past; kept so the quality spec can assert the Lloyd round
-    * strictly reduces mean quantization error.
-    */
-  private[graft] def pqIndexSampled(e: DataFrame): (DataFrame, DataFrame) = {
-    val sub = pqSubvectors(e)
-    val cb0 = pqSampledCodebook(sub)
-    (cb0, pqEncode(sub, cb0))
-  }
 
   /** Corpus → (vec_id, s, sv): the 4 16-dim double subvectors per vector. */
   private def pqSubvectors(e: DataFrame): DataFrame =
@@ -1965,13 +1913,9 @@ object Similarity {
     * [[vecPqResidual]]; callers name the rank column so their output
     * schemas keep their names.
     */
-  private[graft] def adcRanked(scored: DataFrame, k: Int, rank: String): DataFrame = {
-    val wAdc = Window.partitionBy(col("a_id")).orderBy(asc("adc"), asc("b_id"))
-    scored.where(col("b_id") =!= col("a_id"))
-      .withColumn("adc", adcExpr)
-      .withColumn(rank, row_number().over(wAdc))
-      .where(col(rank) <= k)
-  }
+  private[graft] def adcRanked(scored: DataFrame, k: Int, rank: String): DataFrame =
+    topPerQuery(scored.where(col("b_id") =!= col("a_id")).withColumn("adc", adcExpr),
+      asc("adc"), k, rank)
 
   /** J23 ann_ivf_pq_topk — the COMPLETE IVF-PQ serving architecture (the
     * production design for vector search at 10⁹⁺ scale): the IVF coarse
@@ -2017,14 +1961,11 @@ object Similarity {
     val shortlist =
       adcRanked(packed.withColumnRenamed("vec_id", "b_id").crossJoin(broadcast(lut)), 50, "rn_adc")
       .select(col("a_id"), col("b_id"), col("rn_adc"))
-    val wExact = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
-    broadcast(shortlist)
-      .join(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb")), Seq("b_id"))
-      .join(broadcast(e.where(col("vec_id") < 8)
-        .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))), Seq("a_id"))
-      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
-      .withColumn("rn", row_number().over(wExact))
-      .where(col("rn") <= 10)
+    topPerQuery(broadcast(shortlist)
+        .join(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb")), Seq("b_id"))
+        .join(broadcast(e.where(col("vec_id") < 8)
+          .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))), Seq("a_id"))
+        .withColumn("sim_raw", dot(col("a_emb"), col("b_emb"))), desc("sim_raw"), 10)
       .select(col("a_id"), col("b_id"),
         (round(col("sim_raw"), 4) + lit(0.0)).as("sim"), col("rn"), col("rn_adc"))
       .orderBy(col("a_id"), col("rn"))
@@ -2051,27 +1992,22 @@ object Similarity {
     val e = Tables.embeddings(spark, sfDir)
     val q = e.where(col("vec_id") < 8)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val wCos = Window.partitionBy(col("a_id")).orderBy(desc("sim"), asc("b_id"))
-    val cos20 = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      .join(broadcast(q))
-      .where(col("b_id") =!= col("a_id"))
-      .withColumn("sim", dot(col("a_emb"), col("b_emb")))
-      .withColumn("rn_cos", row_number().over(wCos))
-      .where(col("rn_cos") <= 20)
+    val cos20 = topPerQuery(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
+        .join(broadcast(q))
+        .where(col("b_id") =!= col("a_id"))
+        .withColumn("sim", dot(col("a_emb"), col("b_emb"))), desc("sim"), 20, "rn_cos")
       .select(col("a_id"), col("b_id"), col("rn_cos"))
     val (packed, lut) = pqAdcArtifacts(spark, sfDir, qBound = 8)
     val adc20 =
       adcRanked(packed.withColumnRenamed("vec_id", "b_id").crossJoin(broadcast(lut)), 20, "rn_adc")
       .select(col("a_id"), col("b_id"), col("rn_adc"))
-    val wF = Window.partitionBy(col("a_id")).orderBy(desc("rrf"), asc("b_id"))
-    cos20.join(adc20, Seq("a_id", "b_id"), "full_outer")
-      .select(col("a_id"), col("b_id"),
-        coalesce(col("rn_cos"), lit(0)).as("rnc"),
-        coalesce(col("rn_adc"), lit(0)).as("rna"),
-        (coalesce(lit(1.0) / (lit(60) + col("rn_cos")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("rn_adc")), lit(0.0))).as("rrf"))
-      .withColumn("rn", row_number().over(wF))
-      .where(col("rn") <= 10)
+    topPerQuery(cos20.join(adc20, Seq("a_id", "b_id"), "full_outer")
+        .select(col("a_id"), col("b_id"),
+          coalesce(col("rn_cos"), lit(0)).as("rnc"),
+          coalesce(col("rn_adc"), lit(0)).as("rna"),
+          (coalesce(lit(1.0) / (lit(60) + col("rn_cos")), lit(0.0)) +
+            coalesce(lit(1.0) / (lit(60) + col("rn_adc")), lit(0.0))).as("rrf")),
+        desc("rrf"), 10)
       .select(col("a_id"), col("b_id"),
         col("rnc").cast("long").as("rn_cos"), col("rna").cast("long").as("rn_adc"),
         (round(col("rrf"), 6) + lit(0.0)).as("rrf"), col("rn"))
@@ -2124,6 +2060,26 @@ object Similarity {
           + lit(0.0)).as("modularity"))
   }
 
+  /** One k-core peel round over an undirected (u, v) edge list: `alive`
+    * (one column, x) holds the vertices of degree ≥ `k`, and the returned
+    * edges are those with both ends alive. Both relations are
+    * lineage-cut with the caller's eagerness (see [[Checkpoints]]). The
+    * round of [[graphKcorePeel]] and [[graphKcoreFull]].
+    */
+  private[graft] def kcorePeelRound(edges: DataFrame, k: Int,
+      eager: Boolean): (DataFrame, DataFrame) = {
+    val alive = edges.select(col("u").as("x"))
+      .unionAll(edges.select(col("v").as("x")))
+      .groupBy(col("x")).agg(count(lit(1)).as("deg"))
+      .where(col("deg") >= k)
+      .select(col("x"))
+      .lineageCut(eager)
+    (alive, edges
+      .join(alive.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
+      .join(alive.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
+      .lineageCut(eager))
+  }
+
   /** M98 graph_kcore_peel (round 9) — bounded k-core peeling on the
     * symmetrized 5-NN graph: three rounds of "drop every vertex with
     * degree < 6, keep only edges between survivors", reporting the
@@ -2148,19 +2104,12 @@ object Similarity {
     var edges = undirected(knnEdgesStored(spark, sfDir, 5))
     var trace: DataFrame = null
     for (peelRound <- 1 to 3) {
-      val adj = edges.select(col("u").as("x"))
-        .unionAll(edges.select(col("v").as("x")))
-      // pin the survivor set: it has three consumers (both semi-join
-      // sides + the n_alive audit count) and would otherwise re-run the
-      // 2|E| degree aggregate per consumer — the M42 multi-consumer idiom
-      val alive = adj.groupBy(col("x")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k)
-        .select(col("x"))
-        .lineageCut(true)
-      edges = edges
-        .join(alive.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
-        .join(alive.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-        .lineageCut(true)
+      // eager cuts pin the survivor set: it has three consumers (both
+      // semi-join sides + the n_alive audit count) and would otherwise
+      // re-run the 2|E| degree aggregate per consumer — the M42
+      // multi-consumer idiom
+      val (alive, survivors) = kcorePeelRound(edges, k, eager = true)
+      edges = survivors
       // per-round audit row: 1-row survivor count × 1-row edge count
       val row = alive.agg(count(lit(1)).as("n_alive"))
         .crossJoin(broadcast(edges.agg(count(lit(1)).as("n_edges"))))
@@ -2369,10 +2318,7 @@ object Similarity {
       .where(col("a_id") =!= col("b_id"))
       .select(col("a_id"), col("b_id")).distinct()
     val nCand = cand.groupBy(col("a_id")).agg(count(lit(1)).as("n_cand"))
-    val wTop = Window.partitionBy(col("a_id")).orderBy(desc("dot"), asc("b_id"))
-    val approx = dotPairs(e, cand)
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= 8)
+    val approx = topPerQuery(dotPairs(e, cand), desc("dot"), 8)
     val q = e.where(col("vec_id") < 8)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
     recallCounts(exactTopK(e, q, 8), approx)

@@ -124,12 +124,9 @@ object VectorText {
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
     val c = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-    val w = Window.partitionBy(col("a_id")).orderBy(desc("sim_raw"), asc("b_id"))
-    c.join(broadcast(q), col("a_id") =!= col("b_id"))
-      // IEEE-identical to the HOF dotExpr (see DotProduct) — oracle unchanged
-      .withColumn("sim_raw", dot(col("a_emb"), col("b_emb")))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 5)
+    Similarity.topPerQuery(c.join(broadcast(q), col("a_id") =!= col("b_id"))
+        // IEEE-identical to the HOF dotExpr (see DotProduct) — oracle unchanged
+        .withColumn("sim_raw", dot(col("a_emb"), col("b_emb"))), desc("sim_raw"), 5)
       .select(col("a_id"), col("b_id"),
         (round(col("sim_raw"), 4) + lit(0.0)).as("sim"), col("rn"))
       .orderBy(col("a_id"), col("rn"))
@@ -446,7 +443,6 @@ object VectorText {
     * shortlist+exact pattern applies to either.
     */
   def vecBinaryHammingTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, sfDir)
     val sig = e.select(col("vec_id"), expr(
       """aggregate(sequence(0, 62), 0L, (acc, i) ->
@@ -454,13 +450,10 @@ object VectorText {
         |           shiftleft(1L, CAST(i AS INT)), 0L))""".stripMargin).as("sig"))
     val q = sig.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("sig").as("sa"))
-    val wTop = Window.partitionBy(col("a_id")).orderBy(asc("hamming"), asc("b_id"))
-    sig.select(col("vec_id").as("b_id"), col("sig").as("sb"))
-      .join(broadcast(q))
-      .where(col("a_id") =!= col("b_id"))
-      .withColumn("hamming", expr("CAST(bit_count(sa ^ sb) AS INT)"))
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= 10)
+    Similarity.topPerQuery(sig.select(col("vec_id").as("b_id"), col("sig").as("sb"))
+        .join(broadcast(q))
+        .where(col("a_id") =!= col("b_id"))
+        .withColumn("hamming", expr("CAST(bit_count(sa ^ sb) AS INT)")), asc("hamming"), 10)
       .select(col("a_id"), col("b_id"), col("hamming"), col("rn"))
       .orderBy(col("a_id"), col("rn"))
   }

@@ -25,8 +25,11 @@ class GoldenPlanSpec extends SparkSpec {
   private[graft] def signature(plan: String): String = {
     // AQE repeats the whole tree under "== Initial Plan ==" with fresh
     // plan ids — count only the section above the marker (see the r3
-    // plan-gate notes); un-executed plans have no marker and pass through
-    val section = plan.split("== Initial Plan ==")(0)
+    // plan-gate notes); un-executed plans have no marker and pass through.
+    // Only the top-level marker counts: it is the one at column 0, under
+    // the root AdaptiveSparkPlan. A nested adaptive plan (a cached
+    // relation's InMemoryRelation) prints its own marker indented.
+    val section = plan.split("(?m)^\\+- == Initial Plan ==")(0)
     val node = "^[\\s:+\\-*()0-9]*([A-Za-z][A-Za-z0-9]*)".r
     section.linesIterator.flatMap { line =>
       node.findFirstMatchIn(line).map(_.group(1)).map {
@@ -37,6 +40,35 @@ class GoldenPlanSpec extends SparkSpec {
       }
     }.toSeq.groupBy(identity).view.mapValues(_.size).toSeq.sorted
       .map { case (n, c) => s"$n:$c" }.mkString(",")
+  }
+
+  test("signature splits at the top-level Initial Plan marker, not a nested one") {
+    // a cached relation's InMemoryRelation prints its own adaptive plan,
+    // whose markers sit indented inside the final plan's tree
+    val plan =
+      """AdaptiveSparkPlan isFinalPlan=true
+        |+- == Final Plan ==
+        |   HashAggregate(keys=[k#1], functions=[count(1)])
+        |   +- ShuffleQueryStage 0
+        |      +- Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=9]
+        |         +- InMemoryTableScan [k#1]
+        |               +- InMemoryRelation [k#1], StorageLevel(disk, memory, deserialized, 1 replicas)
+        |                     +- AdaptiveSparkPlan isFinalPlan=true
+        |                        +- == Final Plan ==
+        |                           Project [k#1]
+        |                        +- == Initial Plan ==
+        |                           Project [k#1]
+        |   +- BroadcastQueryStage 1
+        |      +- BroadcastExchange HashedRelationBroadcastMode(List(k#2),false), [plan_id=12]
+        |         +- FileScan parquet [k#2] Batched: true
+        |+- == Initial Plan ==
+        |   HashAggregate(keys=[k#1], functions=[count(1)])
+        |   +- Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=5]
+        |""".stripMargin
+    assert(signature(plan) === Seq("AdaptiveSparkPlan:2", "BroadcastExchange:1",
+      "BroadcastQueryStage:1", "ExchangeHash:1", "FileScan:1", "HashAggregate:1",
+      "InMemoryRelation:1", "InMemoryTableScan:1", "Project:2",
+      "ShuffleQueryStage:1").mkString(","))
   }
 
   test("every contract query's plan operator-multiset matches golden-plans.txt") {

@@ -95,18 +95,15 @@ class PlanSpec extends SparkSpec {
     // scale plan. The closed-form path never evaluates an ntile window
     // function at all, and the only unpartitioned window runs over the
     // P-row offsets summary (bounded by partition count, not data).
-    // the eager checkpoint fires at DataFrame CONSTRUCTION — enable the
-    // capture hook before building the query, not just before collect()
-    ops.GlobalRank.capturePlans = true
-    val df = try {
-      ops.GlobalRank.lastRankedPlan = ""
-      val d = run("win_ntile_pct")
-      d.collect()
-      val ranked = ops.GlobalRank.lastRankedPlan
-      assert(ranked.contains("rangepartitioning") && ranked.contains("c_acctbal"),
-        s"ranking stage must range-partition on the order key:\n$ranked")
-      d
-    } finally ops.GlobalRank.capturePlans = false
+    // the eager checkpoint fires at DataFrame CONSTRUCTION — capture the
+    // checkpoint plans around building the query, not just collect()
+    var df: org.apache.spark.sql.DataFrame = null
+    val ranked = CheckpointPlans.last(spark) {
+      df = run("win_ntile_pct")
+      df.collect()
+    }
+    assert(ranked.contains("rangepartitioning") && ranked.contains("c_acctbal"),
+      s"ranking stage must range-partition on the order key:\n$ranked")
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("ntile("),
       s"primary path must use the closed form, not a global ntile window:\n$plan")
@@ -153,23 +150,18 @@ class PlanSpec extends SparkSpec {
     // ADVICE r6 #2: assert on the QUERY's own execution, not a locally
     // re-built stand-in. The heavy stage checkpoints inside GlobalRank
     // (lineage truncation hides it from the consumer's executedPlan), so
-    // the gate reads the capture hook — the plan that actually ran.
+    // the gate reads the checkpoint's own plan — the plan that actually ran.
     spark.conf.set("spark.sql.debug.maxToStringFields", "200")
-    ops.GlobalRank.capturePlans = true
-    try {
-      ops.GlobalRank.lastRankedPlan = ""
-      run("agg_weighted_median").collect()
-      val ranked = ops.GlobalRank.lastRankedPlan
-      assert(ranked.nonEmpty, "query must rank through GlobalRank")
-      // the range partitioner must order the full 4-column total order
-      // (group, value, unique tiebreak) — the partitioning a grouped
-      // window cannot produce
-      val rp = "rangepartitioning\\(([^)]*)".r.findAllMatchIn(ranked).map(_.group(1)).toList
-      assert(rp.exists(k => k.contains("l_returnflag") && k.contains("l_extendedprice")),
-        s"range keys must span the 4-column total order, got: $rp")
-      assert(!ranked.contains("windowspecdefinition(l_returnflag"),
-        "cumulative window must partition on the range id, not the 3-value group key")
-    } finally ops.GlobalRank.capturePlans = false
+    val ranked = CheckpointPlans.last(spark)(run("agg_weighted_median").collect())
+    assert(ranked.nonEmpty, "query must rank through GlobalRank")
+    // the range partitioner must order the full 4-column total order
+    // (group, value, unique tiebreak) — the partitioning a grouped
+    // window cannot produce
+    val rp = "rangepartitioning\\(([^)]*)".r.findAllMatchIn(ranked).map(_.group(1)).toList
+    assert(rp.exists(k => k.contains("l_returnflag") && k.contains("l_extendedprice")),
+      s"range keys must span the 4-column total order, got: $rp")
+    assert(!ranked.contains("windowspecdefinition(l_returnflag"),
+      "cumulative window must partition on the range id, not the 3-value group key")
   }
 
   test("A4q: sink_partitioned_stats read-back prunes partitions") {

@@ -20,18 +20,15 @@ class Round15Spec extends SparkSpec {
 
   test("win_rfm_scores_scalable ranks via range partitioning — no global ntile window (VERDICT r14 #5)") {
     // the F5 plan gate applied to the RFM twin: the eager checkpoint
-    // inside GlobalRank fires at DataFrame construction, so enable the
-    // capture hook before building the query
-    ops.GlobalRank.capturePlans = true
-    val df = try {
-      ops.GlobalRank.lastRankedPlan = ""
-      val d = run("win_rfm_scores_scalable")
-      d.collect()
-      val ranked = ops.GlobalRank.lastRankedPlan
-      assert(ranked.contains("rangepartitioning"),
-        s"ranking stage must range-partition on the order key:\n$ranked")
-      d
-    } finally ops.GlobalRank.capturePlans = false
+    // inside GlobalRank fires at DataFrame construction, so capture the
+    // checkpoint plans around building the query
+    var df: org.apache.spark.sql.DataFrame = null
+    val ranked = CheckpointPlans.last(spark) {
+      df = run("win_rfm_scores_scalable")
+      df.collect()
+    }
+    assert(ranked.contains("rangepartitioning"),
+      s"ranking stage must range-partition on the order key:\n$ranked")
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("ntile("),
       s"the scalable twin must use the closed form, not a global ntile window:\n$plan")

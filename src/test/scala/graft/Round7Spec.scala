@@ -295,7 +295,13 @@ class Round7Spec extends SparkSpec {
       codes.groupBy(col("s")).agg(avg(col("qerr")).as("mq"))
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     val trained = meanBySubspace(codes)
-    val sampled = meanBySubspace(graft.ops.Similarity.pqIndexSampled(e)._2)
+    // the bootstrap: each subspace's codebook is the first 16 vectors'
+    // subvectors, encoded with the same argmin kernel as the trained index
+    val sampledCb = e.where(col("vec_id") < 16)
+      .crossJoin(spark.range(4).select(col("id").cast("int").as("s")))
+      .select(col("s"), col("vec_id").cast("int").as("c"),
+        expr("transform(slice(embedding, s * 16 + 1, 16), x -> CAST(x AS DOUBLE))").as("cb"))
+    val sampled = meanBySubspace(graft.ops.Similarity.pqEncodeAgainst(e, sampledCb))
     assert(trained.keySet == Set(0, 1, 2, 3) && sampled.keySet == Set(0, 1, 2, 3))
     for (s <- 0 to 3)
       assert(trained(s) < sampled(s),
