@@ -76,11 +76,14 @@ object IndexStore {
     "pq_codebook", "pq_codes", "pq_packed")
 
   /** The bounded slice the `knn_candidates` artifact covers (the
-    * M42-family contract bound; see Similarity.knnCandidates).
+    * M42-family contract bound; see Similarity.knnCandidates), and so the
+    * vertex set of the graph keys over it: `graph_pagerank_knn` states it
+    * on its vertices and on both edge endpoints, the label keys and
+    * `vec_hard_negatives` on their label lookups.
     * `knn_candidates_full` has no bound — it covers the whole corpus with
     * √n-scaled cells (VERDICT r9 #1; see Similarity.knnFullSides).
     */
-  private val KnnBound = 500
+  private[graft] val KnnBound = 500
   private val KnnNprobe = 2
 
   /** The rank cut the FULL-corpus artifact persists: the top-K candidate
@@ -493,14 +496,18 @@ object IndexStore {
   /** The IVF chain: the coarse quantizer, then the inverted lists
     * computed against the STORED centroids (read back, so the persisted
     * assignment provably derives from the persisted quantizer — the same
-    * read path queries use). Returns the stored (centroids, assignment).
+    * read path queries use). Returns the stored centroids, collected once
+    * for every ranking the build runs against them, the stored
+    * assignment, and its row count from the parquet footers.
     */
-  private def writeIvf(e: DataFrame, dir: String): (DataFrame, DataFrame) = {
+  private def writeIvf(e: DataFrame, dir: String)
+      : (Similarity.Quantizer, DataFrame, Long) = {
     val spark = e.sparkSession
     write(Similarity.centroidsBuild(e), s"$dir/ivf_centroids")
-    val cent = GraftParquet.read(spark, s"$dir/ivf_centroids")
-    write(Similarity.ivfAssignBuild(e, cent), s"$dir/ivf_assigned")
-    (cent, GraftParquet.read(spark, s"$dir/ivf_assigned"))
+    val cents = Similarity.centCollect(GraftParquet.read(spark, s"$dir/ivf_centroids"))
+    write(Similarity.ivfAssignBuild(e, cents), s"$dir/ivf_assigned")
+    (cents, GraftParquet.read(spark, s"$dir/ivf_assigned"),
+      footerRows(s"$dir/ivf_assigned", spark.sparkContext.hadoopConfiguration))
   }
 
   /** The PQ chain: trained codebooks, per-subvector codes, and the packed
@@ -542,9 +549,9 @@ object IndexStore {
       // as the top-K shortlist per vector (see [[KnnFullTopK]]): the raw
       // candidate relation is build-time-only working set.
       () => {
-        val (cent, storedAssigned) = writeIvf(e, dir)
-        write(Similarity.knnShortlistFull(e, storedAssigned, cent, KnnFullTopK),
-          s"$dir/knn_candidates_full")
+        val (cents, storedAssigned, n) = writeIvf(e, dir)
+        write(Similarity.knnShortlistFull(e, storedAssigned, cents,
+          Similarity.subBuckets(n), KnnFullTopK), s"$dir/knn_candidates_full")
       },
       // lane 2 — PQ: trained codebooks + per-subvector codes + packed words
       () => writePq(e, dir),
@@ -742,16 +749,17 @@ object IndexStore {
   def ensureVecBase(spark: SparkSession, sfDir: String): String =
     ensure(vecBase(sfDir)) { tmp =>
       val base = Tables.embeddings(spark, sfDir).where(s"NOT ($VecDeltaPred)")
-      val (cent, storedAssigned) = writeIvf(base, tmp)
+      val (cents, storedAssigned, n) = writeIvf(base, tmp)
       // packed serving words over the base slice (v3): the incremental
       // update links these verbatim and packs only the delta's codes —
       // base and delta vec_ids are disjoint, so the merged grouping is
       // exactly the disjoint union of the two groupings
       writePq(base, tmp)
       // the frozen routing relations (see VecBaseArtifactNames)
-      write(Similarity.knnRouting(storedAssigned), s"$tmp/knn_routing")
+      write(Similarity.knnRouting(storedAssigned, Similarity.subBuckets(n)),
+        s"$tmp/knn_routing")
       val routing = GraftParquet.read(spark, s"$tmp/knn_routing")
-      write(Similarity.mapByBounds(Similarity.probeCells(base, cent),
+      write(Similarity.mapByBounds(Similarity.probeCells(base, cents),
         Similarity.knnBounds(routing)), s"$tmp/knn_probes_alt")
       // base shortlist — built FROM the persisted routing relations
       // (probes = routing ∪ alt-cell centers, membership = routing),
@@ -837,7 +845,9 @@ object IndexStore {
         // lane 1 — delta assignment, merged inverted lists, the shortlist
         // delta band against the FROZEN base routing, merged shortlist
         () => {
-          write(Similarity.ivfAssignBuild(delta, cent),
+          // the frozen quantizer, collected once for both delta rankings
+          val cents = Similarity.centCollect(cent)
+          write(Similarity.ivfAssignBuild(delta, cents),
             s"$tmp/ivf_assigned_delta")
           val deltaAsg = GraftParquet.read(spark, s"$tmp/ivf_assigned_delta")
           linkParts(s"$baseDir/ivf_assigned", s"$tmp/ivf_assigned", "base")
@@ -849,7 +859,7 @@ object IndexStore {
           val deltaOwn = Similarity.mapByBounds(deltaAsg, bounds)
             .lineageCut(false) // probe side, membership side, and the B band read it
           val deltaSec = Similarity.mapByBounds(
-            Similarity.probeCells(delta, cent), bounds)
+            Similarity.probeCells(delta, cents), bounds)
           // Broadcast the |delta|-proportional side of each band when the
           // MEASURED delta artifact is broadcast-small (optimization round
           // 17, guide §3.1): band A's probe side and band B's membership

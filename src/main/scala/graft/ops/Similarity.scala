@@ -62,6 +62,12 @@ object Similarity {
       .agg(expr("transform(array_sort(collect_list(struct(dim, c))), s -> s.c)").as("cvec"))
       .select(col("label").as("cell"), col("cvec"))
 
+  /** A driver-collected quantizer ([[centCollect]]): (cell, cvec) pairs,
+    * cell-ascending. A build collects it once and hands it to every
+    * per-row ranking it runs ([[ivfAssignBuild]], [[probeCells]]).
+    */
+  private[graft] type Quantizer = Seq[(Int, Seq[Double])]
+
   /** The ≤10-row quantizer pulled to the driver as (cell, cvec) pairs,
     * cell-ascending (optimization round 17). Every use site already
     * BROADCASTS this relation — a driver collect of a broadcast-sized
@@ -69,10 +75,10 @@ object Similarity {
     * probe rankings below become per-row expressions over literal
     * centroid arrays instead of a corpus×cells shuffle + sort.
     */
-  private def centCollect(cent: DataFrame): Array[(Int, Seq[Double])] =
+  private[graft] def centCollect(cent: DataFrame): Quantizer =
     cent.select(col("cell").cast("int"), col("cvec")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
+      .sortBy(_._1).toSeq
 
   /** One candidate struct per centroid: (nd = −dot, cell), with the dot
     * computed by the codegen'd [[graft.functions.DotProduct]] kernel — the
@@ -82,8 +88,8 @@ object Similarity {
     * the assignment protocol's (d desc, cell asc); −(−d) restores d
     * bit-exactly (finite doubles; an accumulated sum is never −0.0).
     */
-  private def centDotStructs(cents: Array[(Int, Seq[Double])]): Seq[Column] =
-    cents.toSeq.map { case (cell, cvec) =>
+  private def centDotStructs(cents: Quantizer): Seq[Column] =
+    cents.map { case (cell, cvec) =>
       struct(
         (-dot(col("embedding"), typedLit(cvec))).as("nd"),
         lit(cell).as("cell"))
@@ -103,8 +109,8 @@ object Similarity {
     * argmin into each field extraction (the round-16 grid-islands
     * lesson).
     */
-  private[graft] def ivfAssignBuild(e: DataFrame, cent: DataFrame): DataFrame = {
-    val best = array_min(array(centDotStructs(centCollect(cent)): _*))
+  private[graft] def ivfAssignBuild(e: DataFrame, cents: Quantizer): DataFrame = {
+    val best = array_min(array(centDotStructs(cents): _*))
     e.select(col("vec_id"), explode(array(best)).as("g"))
       .select(col("vec_id"), col("g.cell").as("cell"), (-col("g.nd")).as("d"))
   }
@@ -493,20 +499,20 @@ object Similarity {
     * this builds is the one the whole graph family consumes, so the n·√n
     * dot pass runs once per corpus version, not once per analytic.
     *
-    * This returns the join's probe side, membership side, and sub-bucket
-    * count; [[knnKeyedDots]] scores the join and [[knnShortlistFull]]
-    * persists its top-k cut. The routing is computed ONCE and lineage-cut
-    * because the probe relation, the membership relation, and the
-    * boundary relation all read it.
+    * This returns the join's probe side and membership side for `m`
+    * sub-buckets per cell (the caller sizes it with [[subBuckets]]);
+    * [[knnKeyedDots]] scores the join and [[knnShortlistFull]] persists
+    * its top-k cut. The routing is computed ONCE and lineage-cut because
+    * the probe relation, the membership relation, and the boundary
+    * relation all read it.
     */
   private[graft] def knnFullSides(e: DataFrame, assigned: DataFrame,
-      cent: DataFrame): (DataFrame, DataFrame, Long) = {
-    val m = subBuckets(assigned)
+      cents: Quantizer, m: Long): (DataFrame, DataFrame) = {
     val routed = knnRouting(assigned, m).lineageCut(true)
-    val mapped = mapByBounds(probeCells(e, cent), knnBounds(routed))
+    val mapped = mapByBounds(probeCells(e, cents), knnBounds(routed))
     val probes = routed.select(col("vec_id"), col("cell"), col("bucket"))
       .unionByName(mapped.select(col("vec_id"), col("cell"), col("bucket")))
-    (probes, routed, m)
+    (probes, routed)
   }
 
   /** The KEYED candidate relation (cell, bucket, a_id, b_id, dot): probe
@@ -606,8 +612,8 @@ object Similarity {
     * at a fraction of the shuffle volume.
     */
   private[graft] def knnShortlistFull(e: DataFrame, assigned: DataFrame,
-      cent: DataFrame, k: Int): DataFrame = {
-    val (probes, routed, m) = knnFullSides(e, assigned, cent)
+      cents: Quantizer, m: Long, k: Int): DataFrame = {
+    val (probes, routed) = knnFullSides(e, assigned, cents, m)
     knnShortlistCut(knnKeyedDots(e, probes, routed, m), k)
   }
 
@@ -617,23 +623,9 @@ object Similarity {
     * [[knnFullSides]], factored out (round 12) because incremental
     * maintenance needs the BASE version's routing as a standing artifact
     * (the delta update maps new vectors into it instead of re-ranking the
-    * corpus). One keyed window over the inverted lists; the single
-    * driver-side count sizes m (an O(1)-byte action, the documented
-    * loop-control pattern).
+    * corpus). One keyed window over the inverted lists, cut into the `m`
+    * sub-buckets [[subBuckets]] sizes.
     */
-  private[graft] def knnRouting(assigned: DataFrame): DataFrame =
-    knnRouting(assigned, subBuckets(assigned))
-
-  /** The √n-scaled sub-bucket count m = ⌈√n / 10⌉ — the single
-    * driver-side count that sizes the routing (an O(1)-byte action, the
-    * documented loop-control pattern). Exposed separately (round 14) so
-    * callers that also need m for the probe-window clip size it once.
-    */
-  private[graft] def subBuckets(assigned: DataFrame): Long = {
-    val n = assigned.count()
-    math.max(1L, math.ceil(math.sqrt(n.toDouble) / 10.0).toLong)
-  }
-
   private[graft] def knnRouting(assigned: DataFrame, m: Long): DataFrame = {
     val wCell = Window.partitionBy(col("cell")).orderBy(desc("d"), asc("vec_id"))
     assigned
@@ -642,6 +634,14 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("d"),
         expr(s"((rn - 1) * ${m}L) div cnt").as("bucket"))
   }
+
+  /** The √n-scaled sub-bucket count m = ⌈√n / 10⌉ of an `n`-row
+    * inverted list. The index builds take `n` from the stored
+    * `ivf_assigned` artifact's parquet footers
+    * ([[IndexStore.footerRows]]), so sizing the routing runs no Spark job.
+    */
+  private[graft] def subBuckets(n: Long): Long =
+    math.max(1L, math.ceil(math.sqrt(n.toDouble) / 10.0).toLong)
 
   /** The probe window's bucket offsets (−W..W around each probe center,
     * W = [[IndexStore.KnnFullProbeWidth]]) — the ONE literal both pair
@@ -668,14 +668,14 @@ object Similarity {
     * Cells at distinct ranks are distinct, so downstream probe relations
     * keep the at-most-one-probe-center-per-(vector, cell) invariant.
     */
-  private[graft] def probeCells(e: DataFrame, cent: DataFrame): DataFrame = {
+  private[graft] def probeCells(e: DataFrame, cents: Quantizer): DataFrame = {
     // map-only since optimization round 17 (same rewrite as
     // [[ivfAssignBuild]]): ranks 2..P of a ≤10-element per-row set are a
     // sorted-array slice over the driver-collected quantizer, not a
     // corpus×cells window. sort_array asc on (nd = −d, cell) ≡ the
     // (d desc, cell asc) ranking protocol; the explode is the Generate
     // barrier AND the row producer.
-    val ranked = sort_array(array(centDotStructs(centCollect(cent)): _*))
+    val ranked = sort_array(array(centDotStructs(cents): _*))
     e.select(col("vec_id"),
         explode(slice(ranked, 2, IndexStore.KnnFullProbeCells - 1)).as("g"))
       .select(col("vec_id"), col("g.cell").as("cell"), (-col("g.nd")).as("d"))
@@ -972,6 +972,16 @@ object Similarity {
     * iteration reads the previous ranks once, so the plan grows linearly
     * over the fixed three rounds and needs no lineage cut.
     *
+    * All three rounds read ONE links relation: one edge scan, one window
+    * exchange and one links broadcast, which the later rounds reuse
+    * (`ReusedExchange`). That holds because the links state every filter
+    * Catalyst would otherwise infer per round — `isnotnull(a_id)` and
+    * `isnotnull(b_id)` here, and the caller's vertex bound on both edge
+    * endpoints (`pageRankKnn`'s `KnnBound`) — so no round's copy of
+    * the links differs from another's. Those filters drop no row as long
+    * as every edge endpoint is a vertex, which both callers' edge lists
+    * guarantee (each stored kNN artifact is built from its vertex set).
+    *
     * Determinism: in-neighbor rank sums are float additions whose order
     * differs across engines, so each iteration's rank is rounded to 12 dp
     * BEFORE feeding the next — both engines then iterate on bit-identical
@@ -983,6 +993,7 @@ object Similarity {
     val links = edges.select(col("a_id"), col("b_id"), col("od"))
       .unionByName(verts.select(col("vec_id").as("a_id"),
         col("vec_id").as("b_id"), lit(null).cast("long").as("od")))
+      .where(col("a_id").isNotNull && col("b_id").isNotNull)
     var ranks = verts.crossJoin(broadcast(n1))
       .select(col("vec_id"), (lit(1.0) / col("n")).as("r"), col("n"))
     for (_ <- 1 to 3) {
@@ -1121,7 +1132,7 @@ object Similarity {
     * artifact the router persists.
     */
   def vecHardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir).where(col("vec_id") < 500)
+    val e = Tables.embeddings(spark, sfDir).where(col("vec_id") < IndexStore.KnnBound)
       .select(col("vec_id"), col("label"))
     topPerQuery(knnCandidatesStored(spark, sfDir)
         .join(e.select(col("vec_id").as("a_id"), col("label").as("a_label")), Seq("a_id"))
@@ -1197,11 +1208,19 @@ object Similarity {
     * dangling nodes and each vertex ships rank/5 along its edges — the
     * standard Spark PageRank shape, linear in |E| per round, run as one
     * query over the stored edge list ([[pageRank]]: 12-dp rounding per
-    * iteration, 6-dp output, (rank desc, vec_id) tiebreak).
+    * iteration, 6-dp output, (rank desc, vec_id) tiebreak). The slice
+    * bound is also stated on both edge endpoints (`a_id`'s pushed into
+    * the scan), so every round reads the same links relation (see
+    * [[pageRank]]); it drops no edge, since the stored slice only holds
+    * edges between slice vertices.
     */
   def pageRankKnn(spark: SparkSession, sfDir: String): DataFrame =
-    pageRank(Tables.embeddings(spark, sfDir).where(col("vec_id") < 500).select(col("vec_id")),
-      knnEdgesStored(spark, sfDir, 5).withColumn("od", lit(5L)))
+    pageRank(
+      Tables.embeddings(spark, sfDir).where(col("vec_id") < IndexStore.KnnBound)
+        .select(col("vec_id")),
+      knnEdgesStored(spark, sfDir, 5)
+        .where(col("a_id") < IndexStore.KnnBound && col("b_id") < IndexStore.KnnBound)
+        .withColumn("od", lit(5L)))
 
   /** Per-cell centroid build shared by the Lloyd rounds: component means
     * rounded 6 dp (the IVF quantizer idiom — the rounding is also what
@@ -1811,7 +1830,7 @@ object Similarity {
   }
 
   def graphLabelPropagation(spark: SparkSession, sfDir: String): DataFrame =
-    labelPropagation(Tables.embeddings(spark, sfDir).where(col("vec_id") < 500)
+    labelPropagation(Tables.embeddings(spark, sfDir).where(col("vec_id") < IndexStore.KnnBound)
       .select(col("vec_id"), col("label")), knnEdgesStored(spark, sfDir, 5))
 
   def graphLabelPropFull(spark: SparkSession, sfDir: String): DataFrame =
@@ -2015,7 +2034,7 @@ object Similarity {
   }
 
   def graphModularityLabels(spark: SparkSession, sfDir: String): DataFrame =
-    labelModularity(Tables.embeddings(spark, sfDir).where(col("vec_id") < 500)
+    labelModularity(Tables.embeddings(spark, sfDir).where(col("vec_id") < IndexStore.KnnBound)
       .select(col("vec_id"), col("label")), knnEdgesStored(spark, sfDir, 5))
 
   def graphModularityFull(spark: SparkSession, sfDir: String): DataFrame =
@@ -2444,29 +2463,45 @@ object Similarity {
     * convention); the serving side is one filtered scan of the standing
     * 8n-row artifact.
     */
-  def annRangeSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
+  def annRangeSearch(spark: SparkSession, sfDir: String): DataFrame =
+    rangeRecall(Tables.embeddings(spark, sfDir), knnCandidatesFullStored(spark, sfDir))
+
+  /** The range-recall report of [[annRangeSearch]] over the corpus `e`
+    * (vec_id, embedding) and a scored shortlist (a_id, b_id, dot): per
+    * query (vec_id < 10) `n_true` (ε-ball size), `n_found` (shortlist
+    * rows at τ) and `range_recall` (1.0 for an empty ball).
+    *
+    * One aggregate: the query ids, the ε-ball members and the shortlist
+    * hits are tagged rows of one union, grouped once by `a_id`, and only
+    * groups holding a query row are kept — eager aggregation in place of
+    * two per-query counts left-joined back onto the queries. It is
+    * row-identical to that join form because `vec_id` is a key of the
+    * corpus: each query contributes exactly one tag-0 row, so a group is
+    * one query and its counts are its ball and its hits. The report has at
+    * most 10 rows at any corpus size, so it is ordered in one partition:
+    * a global sort would add a range exchange, a sampling job and a
+    * shuffle stage, to order 10 rows.
+    */
+  private[graft] def rangeRecall(e: DataFrame, shortlist: DataFrame): DataFrame = {
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val truth = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
+    val ball = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
       .join(broadcast(q))
       .where(col("a_id") =!= col("b_id"))
       .withColumn("dot", dot(col("a_emb"), col("b_emb")))
       .where(col("dot") >= RangeSearchTau)
-      .groupBy(col("a_id")).agg(count(lit(1)).as("n_true"))
-    val found = knnCandidatesFullStored(spark, sfDir)
-      .where(col("a_id") < 10 && col("dot") >= RangeSearchTau)
-      .groupBy(col("a_id")).agg(count(lit(1)).as("n_found"))
-    q.select(col("a_id"))
-      .join(truth, Seq("a_id"), "left")
-      .join(found, Seq("a_id"), "left")
-      .select(col("a_id"),
-        coalesce(col("n_true"), lit(0L)).as("n_true"),
-        coalesce(col("n_found"), lit(0L)).as("n_found"),
-        when(coalesce(col("n_true"), lit(0L)) > 0,
-          round(coalesce(col("n_found"), lit(0L)).cast("double")
-            / col("n_true"), 6) + lit(0.0))
+    val hits = shortlist.where(col("a_id") < 10 && col("dot") >= RangeSearchTau)
+    def tagged(rows: DataFrame, tag: Int) = rows.select(col("a_id"), lit(tag).as("tag"))
+    def tagCount(tag: Int) = count(when(col("tag") === tag, 1))
+    tagged(q, 0).unionByName(tagged(ball, 1)).unionByName(tagged(hits, 2))
+      .groupBy(col("a_id"))
+      .agg(tagCount(0).as("n_q"), tagCount(1).as("n_true"), tagCount(2).as("n_found"))
+      .where(col("n_q") > 0)
+      .select(col("a_id"), col("n_true"), col("n_found"),
+        when(col("n_true") > 0,
+          round(col("n_found").cast("double") / col("n_true"), 6) + lit(0.0))
           .otherwise(lit(1.0)).as("range_recall"))
+      .coalesce(1)
       .orderBy(col("a_id"))
   }
 
@@ -2539,9 +2574,9 @@ object Similarity {
   def vecRetrainChurn(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val baseCent = IndexStore.readVecBase(spark, sfDir, "ivf_centroids")
-    val baseAsg = ivfAssignBuild(e, baseCent)
+    val baseAsg = ivfAssignBuild(e, centCollect(baseCent))
       .select(col("vec_id"), col("cell").as("base_cell"))
-    val nowAsg = ivfAssignBuild(e, centroidsBuild(e))
+    val nowAsg = ivfAssignBuild(e, centCollect(centroidsBuild(e)))
       .select(col("vec_id"), col("cell").as("now_cell"))
     val joined = baseAsg.join(nowAsg, Seq("vec_id")).lineageCut(false)
     val total = joined.agg(count(lit(1)).as("n_total"))

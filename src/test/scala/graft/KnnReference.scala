@@ -29,7 +29,8 @@ object KnnReference {
     */
   def knnCandidatesFull(e: DataFrame, assigned: DataFrame,
       cent: DataFrame): DataFrame = {
-    val (probes, routed, m) = Similarity.knnFullSides(e, assigned, cent)
+    val m = Similarity.subBuckets(assigned.count())
+    val (probes, routed) = Similarity.knnFullSides(e, assigned, Similarity.centCollect(cent), m)
     Similarity.knnKeyedDots(e, probes, routed, m)
       .select(col("a_id"), col("b_id"), col("dot"))
   }

@@ -23,7 +23,7 @@ class Round12Spec extends SparkSpec {
     val cb = spark.read.parquet(s"$baseDir/pq_codebook")
     // assignment and encoding are per-vector pure functions of the frozen
     // quantizers, so (base ∪ delta) must equal one whole-corpus pass
-    val refAsg = ops.Similarity.ivfAssignBuild(e, cent)
+    val refAsg = ops.Similarity.ivfAssignBuild(e, ops.Similarity.centCollect(cent))
     val updAsg = spark.read.parquet(s"$updDir/ivf_assigned")
     assert(updAsg.count() === refAsg.count())
     assert(updAsg.except(refAsg).count() === 0L, "merged ivf_assigned has extra rows")
@@ -45,7 +45,7 @@ class Round12Spec extends SparkSpec {
   test("index_update_vecsearch: the incrementally-merged shortlist is row-identical to a from-scratch build under the frozen base routing") {
     val (updDir, baseDir) = forceUpdate()
     val e = Tables.embeddings(spark, sf)
-    val cent = spark.read.parquet(s"$baseDir/ivf_centroids")
+    val cents = ops.Similarity.centCollect(spark.read.parquet(s"$baseDir/ivf_centroids"))
     val routing = spark.read.parquet(s"$baseDir/knn_routing")
     val bounds = ops.Similarity.knnBounds(routing)
     // from-scratch: map EVERY vector under the frozen routing (delta own
@@ -54,9 +54,9 @@ class Round12Spec extends SparkSpec {
     // the base shortlist or the persisted probe relation
     val delta = e.where(ops.IndexStore.VecDeltaPred)
     val deltaOwn = ops.Similarity.mapByBounds(
-      ops.Similarity.ivfAssignBuild(delta, cent), bounds)
+      ops.Similarity.ivfAssignBuild(delta, cents), bounds)
     val allSec = ops.Similarity.mapByBounds(
-      ops.Similarity.probeCells(e, cent), bounds)
+      ops.Similarity.probeCells(e, cents), bounds)
     val mem = routing.select(col("vec_id"), col("cell"), col("bucket"))
       .unionByName(deltaOwn)
     val refShort = ops.Similarity.dotPairs(e,
@@ -93,13 +93,13 @@ class Round12Spec extends SparkSpec {
       // either side); assert the update recomputed at most half of the
       // from-scratch dot work
       val e = Tables.embeddings(spark, sf)
-      val cent = spark.read.parquet(s"$baseDir/ivf_centroids")
+      val cents = ops.Similarity.centCollect(spark.read.parquet(s"$baseDir/ivf_centroids"))
       val routing = spark.read.parquet(s"$baseDir/knn_routing")
       val bounds = ops.Similarity.knnBounds(routing)
       val deltaOwn = ops.Similarity.mapByBounds(
-        ops.Similarity.ivfAssignBuild(e.where(ops.IndexStore.VecDeltaPred), cent), bounds)
+        ops.Similarity.ivfAssignBuild(e.where(ops.IndexStore.VecDeltaPred), cents), bounds)
       val allSec = ops.Similarity.mapByBounds(
-        ops.Similarity.probeCells(e, cent), bounds)
+        ops.Similarity.probeCells(e, cents), bounds)
       val mem = routing.select(col("vec_id"), col("cell"), col("bucket"))
         .unionByName(deltaOwn)
       val fullPairs = ops.Similarity.knnPairIds(mem.unionByName(allSec), mem).count()

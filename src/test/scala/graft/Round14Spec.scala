@@ -23,7 +23,8 @@ class Round14Spec extends SparkSpec {
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= k)
       .drop("rn")
-    val fast = ops.Similarity.knnShortlistFull(e, assigned, cent, k).cache()
+    val fast = ops.Similarity.knnShortlistFull(e, assigned, ops.Similarity.centCollect(cent),
+      ops.Similarity.subBuckets(assigned.count()), k).cache()
     try {
       assert(fast.count() === reference.count())
       // exact MULTISET equality, dots included — the pre-cut is a pure
@@ -38,7 +39,7 @@ class Round14Spec extends SparkSpec {
   test("the corpus-relative window clip drops no candidate: every probed bucket is inside the routing domain") {
     val e = Tables.embeddings(spark, sf)
     val assigned = store("ivf_assigned")
-    val m = ops.Similarity.subBuckets(assigned)
+    val m = ops.Similarity.subBuckets(assigned.count())
     // the routing's bucket domain is exactly 0..m-1, so a clipped row
     // could never have joined — the membership side has no bucket outside
     val routed = ops.Similarity.knnRouting(assigned, m)
